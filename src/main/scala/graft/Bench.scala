@@ -28,8 +28,11 @@ object Bench {
     // bench vs 2.0 s steady). Round 1 measured same-SF warming as WORSE,
     // but that was an artifact of the default 100-entry codegen cache
     // being thrashed by ~100 queries — fixed by maxEntries=5000 above.
-    SparkEntry.queries.foreach { case (_, fn) =>
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
+    // A warm-up failure does not stop the run (the timed loop records
+    // and gates it), but it is logged, so a cold query is never silent.
+    SparkEntry.queries.foreach { case (name, fn) =>
+      try { fn(spark, sfDir).count() } catch { case e: Throwable =>
+        System.err.println(s"[bench] warm-up $name failed: ${graft.tools.CauseChain(e)}") }
     }
     // Fixed cheap-first timed order: trivial parquet scans absorb the
     // residual sf-specific JIT/GC tax, then everything else alphabetically.
@@ -79,7 +82,7 @@ object Bench {
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true } catch {
           case e: Throwable =>
-            System.err.println(s"[bench] $name failed (run $run): ${e.getMessage}")
+            System.err.println(s"[bench] $name failed (run $run): ${graft.tools.CauseChain(e)}")
             false
         }
         // attribution comes from run 1 (identical build set every run);

@@ -30,7 +30,7 @@ object Verify {
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         nFailed += 1
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] $name failed: ${graft.tools.CauseChain(e)}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -101,9 +101,9 @@ object Round7Queries {
     // GlobalRank.withRunningSums over the DISTINCT-VALUE table, never
     // the rows), the doubled midrank is lo+hi = 2·hi − cnt + 1 — so
     // the rank stage shuffles |distinct values| rows, not the fact
-    // (the r7 MicroBench found the row-level double-rank form ~2×
-    // slower at sf0.1). Midranks rejoin the fact by value: the ~50-row
-    // quantity table broadcast, the price table value-equi-keyed.
+    // (a round-7 micro-benchmark found the row-level double-rank form
+    // ~2× slower at sf0.1). Midranks rejoin the fact by value: the
+    // ~50-row quantity table broadcast, the price table value-equi-keyed.
     // Doubled midranks keep every moment an exact integer/decimal sum
     // (the ×2 cancels from ρ); the closed form is one fixed-order
     // double expression, rounded to 6dp.

@@ -6,11 +6,12 @@ import org.apache.spark.sql.types.{DataType, DateType, FloatType, LongType, Time
 
 /** Canonical loaders for the test star schema (see FIXTURES.md).
   *
-  * All tables are single parquet files per scale-factor directory. The
-  * loaders are thin `spark.read.parquet` wrappers so that Catalyst's
-  * column pruning and predicate pushdown reach the scan untouched — at
-  * cluster scale these become multi-file scans with partition pruning
-  * for free, since nothing here forces materialization.
+  * All tables are single parquet files per scale-factor directory. Each
+  * loader is a plain parquet scan whose schema is read from one footer
+  * on the driver ([[ParquetSchema]]), so building a loader starts no
+  * Spark job. Catalyst's column pruning and predicate pushdown reach the
+  * scan untouched — at cluster scale these become multi-file scans,
+  * since nothing here forces materialization.
   *
   * `events.ts` has drifted across driver fixture generations:
   * originally TIMESTAMP(NANOS, isAdjustedToUTC=false) — which Spark's
@@ -35,7 +36,7 @@ import org.apache.spark.sql.types.{DataType, DateType, FloatType, LongType, Time
 object Tables {
 
   private def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    ParquetSchema.read(spark, s"$dir/$name.parquet")
 
   /** Fail fast if driver-regenerated data drifts from FIXTURES.md. */
   private def assertCols(df: DataFrame, table: String, cols: Seq[String]): DataFrame = {

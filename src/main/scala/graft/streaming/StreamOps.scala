@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.sources.ParquetSchema
+
 /** Structured Streaming surface over the events log.
   *
   * The batch queries in StreamQueries pin the semantics; these helpers
@@ -20,16 +22,17 @@ object StreamOps {
     * the session is pinned UTC so wall-clock values match the batch
     * loader's TIMESTAMP_NTZ).
     *
-    * Streaming sources require a user schema; it is taken from a one-off
-    * batch footer read of the same path so whichever physical `ts`
-    * encoding the fixture generation used (int64 nanos vs timestamp[us])
-    * gets the same dispatch as `Tables.events`. The footer read is
-    * driver-side and O(files), not a data scan.
+    * Streaming sources require a user schema; it is taken from the
+    * parquet footer of the same path ([[graft.sources.ParquetSchema]])
+    * so whichever physical `ts` encoding the fixture generation used
+    * (int64 nanos vs timestamp[us]) gets the same dispatch as
+    * `Tables.events`. The footer read is driver-side (one file, no
+    * Spark job), not a data scan.
     */
   def eventsStream(spark: SparkSession, path: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.readStream
-      .schema(spark.read.parquet(path).schema)
+      .schema(ParquetSchema.of(spark, path))
       .parquet(path)
     raw.schema("ts").dataType match {
       case LongType         => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))

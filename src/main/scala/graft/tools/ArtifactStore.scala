@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.ParquetSchema
+
 /** Durable, versioned parquet store for build-once artifacts — the
   * cross-SESSION completion of the amortization story [[IndexCache]]
   * (per-JVM memo) and [[Materialize]] (per-session checkpoint) start
@@ -19,7 +21,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * [[durable]]: present → read parquet, absent → build once, write,
   * and hand consumers the re-read persisted frame (so even the
   * building session consumes exactly what later sessions will read —
-  * the round trip is proven on first use, not deferred).
+  * the round trip is proven on first use, not deferred). Both reads
+  * take the stored table's schema from one parquet footer on the
+  * driver ([[graft.sources.ParquetSchema]]) rather than Spark's
+  * schema-inference job, so loading an artifact starts no Spark job.
   *
   * Layout: `<root>/<sanitized data dir>/<artifact name>/<version>/`.
   * The corpus directory is part of the key — one root can hold
@@ -100,7 +105,7 @@ object ArtifactStore {
         val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
         if (fs.exists(hp)) {
           record(s"$name:$dir", "loaded")
-          s.read.parquet(p)
+          ParquetSchema.read(s, p)
         } else {
           // Atomic publish (r13 ADVICE, medium): build into a private
           // temp directory and RENAME into place, so two sessions
@@ -139,7 +144,7 @@ object ArtifactStore {
                 s"rename race but no committed table exists at $p")
             record(s"$name:$dir", "loaded")
           }
-          s.read.parquet(p)
+          ParquetSchema.read(s, p)
         }
     }
 }

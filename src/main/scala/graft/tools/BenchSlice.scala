@@ -75,7 +75,7 @@ object BenchSlice {
     names.foreach { n =>
       try { graft.SparkEntry.queries(n)(spark, sfDir).count(); () }
       catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[slice] warm-up $n failed: ${e.getMessage}") }
+        System.err.println(s"[slice] warm-up $n failed: ${CauseChain(e)}") }
     }
 
     IndexCache.clear()
@@ -89,7 +89,7 @@ object BenchSlice {
       val t0 = System.nanoTime()
       val ok = try { graft.SparkEntry.queries(n)(spark, sfDir).count(); true }
         catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[slice] $n failed: ${e.getMessage}"); false }
+          System.err.println(s"[slice] $n failed: ${CauseChain(e)}"); false }
       for ((key, sec) <- IndexCache.buildTimes if !builtBefore.contains(key))
         artifacts(key) = (sec, n)
       n -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
