@@ -4,7 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
-/** Cross-engine determinism helpers (SURVEY.md §7.2).
+import graft.sources.Tables
+
+/** Cross-engine determinism helpers (SURVEY.md §7.2), and the one
+  * definition of every idiom that more than one query family shares.
   *
   * The driver hash-compares our parquet output against DuckDB running the
   * oracle SQL, so every declared query must be bit-deterministic across
@@ -14,6 +17,13 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   *  - averages are exact-decimal-sum / count in double (one IEEE division);
   *  - inherently inexact stats (stddev, corr, cosine) are round(x, 4);
   *  - every query ends in a total ORDER BY with a unique tiebreak.
+  *
+  * A Spark idiom and its DuckDB twin sit side by side (`toks` /
+  * `duckToks`, `dailyCenti` / `dailyCentiSql`, ...): a query and its
+  * oracle must use the pair together, and no other source file spells
+  * the SQL half out (QueriesSpec enforces it), so a drifted copy cannot
+  * silently desynchronize two families that each still match their own
+  * oracle.
   */
 object QueryUtils {
   /** The harness query signature: (session, sfDir) => result. */
@@ -22,12 +32,23 @@ object QueryUtils {
   /** Order-independent exact sum of a double money column, as double. */
   def decSum(c: Column): Column = sum(c.cast(DecimalType(18, 2))).cast(DoubleType)
 
+  /** [[decSum]] for a 4-decimal money product (price·(1−disc)). */
+  def decSum4(c: Column): Column = sum(c.cast(DecimalType(18, 4))).cast(DoubleType)
+
   /** Exact-sum average: decimal sum / count, one double division. */
   def decAvg(c: Column): Column =
     (sum(c.cast(DecimalType(18, 2))).cast(DoubleType) / count(lit(1)))
 
   /** round to 4 for inherently order-dependent float aggregates. */
   def r4(c: Column): Column = round(c, 4)
+
+  /** Plain double cast (the exact-integer → double step of ratio and
+    * moment formulas). */
+  def d(c: Column): Column = c.cast(DoubleType)
+
+  /** Midnight of ISO date `d` as a timestamp literal (TPC-H date
+    * bounds). */
+  def ts(d: String): Column = lit(d + " 00:00:00").cast("timestamp")
 
   /** md5-derived 60-bit non-negative int of a key column — THE shared
     * deterministic-hash idiom (sampling, sharding, splits). Engine-
@@ -41,10 +62,98 @@ object QueryUtils {
     conv(substring(md5(c), 1, 15), 16, 10).cast("bigint")
 
   /** Whitespace token count of the `text` column, empty tokens dropped
-    * (matches the DuckDB `len(list_filter(string_split(text,' '),
-    * x -> x <> ''))` oracle idiom). */
+    * (matches the DuckDB `len($duckToks)` oracle idiom). */
   def nTok: Column =
     graft.functions.TextNGrams.mkTokenCount(col("text")).cast("long")
+
+  /** Whitespace tokens of the `text` column, empty tokens dropped —
+    * the `TokenList` kernel; DuckDB twin [[duckToks]]. */
+  def toks: Column = graft.functions.TextNGrams.mkTokenList(col("text"))
+
+  /** DuckDB token array of `text`, identical filtering to [[toks]]. */
+  val duckToks = "list_filter(string_split(text, ' '), x -> x <> '')"
+
+  /** Sentence-ender count of `text`, min 1 per doc (the FK idiom). */
+  def nSent: Column =
+    greatest(lit(1L), (length(col("text"))
+      - length(regexp_replace(col("text"), "[.!?]", ""))).cast("long"))
+
+  /** DuckDB twin of [[nSent]]. */
+  val nSentSql =
+    """greatest(1, CAST(length(text)
+      |      - length(regexp_replace(text, '[.!?]', '', 'g')) AS BIGINT))"""
+      .stripMargin
+
+  // ---- daily per-event-type aggregates over `events` -------------------
+  // (event_type, day = day-of-month as long, aggregates); each fixed
+  // daily sum below has a DuckDB CTE twin named `daily` (no leading
+  // WITH) with the identical columns and values.
+
+  /** `events` grouped by (event_type, day-of-month as long `day`),
+    * aggregated by `aggs` — the shape every daily helper below shares. */
+  def dailyAgg(s: SparkSession, dir: String, aggs: Column*): DataFrame =
+    Tables.events(s, dir)
+      .groupBy(col("event_type"), dayofmonth(col("ts")).cast("long").as("day"))
+      .agg(aggs.head, aggs.tail: _*)
+
+  /** Exact decimal(18,6)-summed daily value `x`. */
+  def dailyDec(s: SparkSession, dir: String): DataFrame =
+    dailyAgg(s, dir, sum(col("value").cast(DecimalType(18, 6))).as("x"))
+
+  /** DuckDB twin of [[dailyDec]]. */
+  val dailyDecSql =
+    """daily AS (SELECT event_type, CAST(day(ts) AS BIGINT) AS day,
+      |    sum(CAST(value AS DECIMAL(18,6))) AS x
+      |  FROM events GROUP BY 1, 2)""".stripMargin
+
+  /** Daily value sum `xc` in exact centi-units (long; squares of a
+    * day's sum still fit int64). */
+  def dailyCenti(s: SparkSession, dir: String): DataFrame =
+    dailyAgg(s, dir, (sum(col("value").cast(DecimalType(18, 6))) * 100)
+      .cast(DecimalType(18, 0)).cast("long").as("xc"))
+
+  /** DuckDB twin of [[dailyCenti]]. */
+  val dailyCentiSql =
+    """daily AS (SELECT event_type, CAST(day(ts) AS BIGINT) AS day,
+      |    CAST(CAST(sum(CAST(value AS DECIMAL(18,6))) * 100
+      |      AS DECIMAL(18,0)) AS BIGINT) AS xc
+      |  FROM events GROUP BY 1, 2)""".stripMargin
+
+  /** Daily value sum `xu` in exact micro-units (long). */
+  def dailyMicro(s: SparkSession, dir: String): DataFrame =
+    dailyAgg(s, dir, (sum(col("value").cast(DecimalType(18, 6))) * 1000000)
+      .cast("long").as("xu"))
+
+  /** DuckDB twin of [[dailyMicro]]. */
+  val dailyMicroSql =
+    """daily AS (SELECT event_type, CAST(day(ts) AS BIGINT) AS day,
+      |    CAST(sum(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS xu
+      |  FROM events GROUP BY 1, 2)""".stripMargin
+
+  /** Per-event-type centi values `xc` with a per-type total-order rank
+    * `rn` (by xc, event_id) and the type's size `n`. Events are
+    * corpus-scaled and event_type has ~5 values, so a plain partitioned
+    * window would funnel the corpus through 5 single-task groups —
+    * ranked via GlobalRank instead, every stage distributed. */
+  def rankedCenti(s: SparkSession, dir: String): DataFrame =
+    graft.operators.GlobalRank.withSeqAndCount(
+      Tables.events(s, dir)
+        .select(col("event_type"), col("event_id"),
+          (col("value").cast(DecimalType(18, 6)) * 100)
+            .cast(DecimalType(18, 0)).cast("long").as("xc")),
+      "rn", "n", Seq("event_type"),
+      Seq(col("xc").asc, col("event_id").asc), groupsHint = 5)
+
+  /** DuckDB twin of [[rankedCenti]]: CTE `r` (no leading WITH). */
+  val rankedCentiSql =
+    """r AS (SELECT event_type, event_id, xc,
+      |    CAST(row_number() OVER (PARTITION BY event_type
+      |      ORDER BY xc, event_id) AS BIGINT) AS rn,
+      |    CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS n
+      |  FROM (SELECT event_type, event_id,
+      |      CAST(CAST(value AS DECIMAL(18,6)) * 100
+      |        AS DECIMAL(18,0))::BIGINT AS xc
+      |    FROM events) x)""".stripMargin
 
   /** Runtime guard for the bounded-broadcast-ledger idiom (r11 ADVICE):
     * passes `value` through while the enclosing frame stays within

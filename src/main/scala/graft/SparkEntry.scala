@@ -2,121 +2,63 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.QueryUtils.QFn
 import graft.functions.{FnQueries, UdfQueries}
 import graft.operators._
 import graft.streaming.StreamQueries
 
-/** Driver contract — see /root/repo/SURVEY.md §2 (inventory) and §3.1
-  * (lifecycle). Each category object contributes a `queries` map of
+/** Harness contract (SURVEY.md §2 inventory, §3.1 lifecycle): the
+  * surface Verify, Bench and BenchSlice read. Each [[QueryFamily]]
+  * object contributes a `queries` map of
   * `(SparkSession, sfDir) => DataFrame` and a matching DuckDB `oracles`
-  * map; this object is the aggregation point the harness reads.
+  * map. [[families]] is the one list of them; both maps below are
+  * merged from it once, at initialization, which fails on a name
+  * registered twice or an oracle without a query (see
+  * [[QueryFamily.registry]]).
+  *
+  * Adding a query is one entry in a family's `queries` and one in its
+  * `oracles`; adding a family is one more element of [[families]].
   */
 object SparkEntry {
 
-  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
+  /** Flagship query on sf0.001; the smoke check expects rows > 0. */
   def entry(spark: SparkSession): DataFrame =
     queries("agg_groupby_pricing")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    ScanFilterQueries.queries ++ JoinQueries.queries ++ AggQueries.queries ++
-      WindowQueries.queries ++ SetQueries.queries ++ FnQueries.queries ++
-      GenQueries.queries ++ StreamQueries.queries ++ LlmQueries.queries ++
-      UdfQueries.queries ++ ScaleQueries.queries ++ ExtraQueries.queries ++
-      Round2Queries.queries ++ PipelineQueries.queries ++ SurfaceQueries.queries ++
-      CurationQueries.queries ++ CorpusStatsQueries.queries ++
-      TrainPrepQueries.queries ++ TpchQueries.queries ++
-      StatSurfaceQueries.queries ++ DepthQueries.queries ++
-      CorpusHealthQueries.queries ++ BehaviorQueries.queries ++
-      Round3Queries.queries ++ TpchDeepQueries.queries ++
-      PipelineDepthQueries.queries ++ AnalyticsDepthQueries.queries ++
-      EvalDepthQueries.queries ++ ModernSurfaceQueries.queries ++
-      GraphEvalQueries.queries ++ GraphStatsQueries.queries ++
-      FinalDepthQueries.queries ++ TpchSupplyQueries.queries ++
-      TuningQueries.queries ++ AnalyticsClassicsQueries.queries ++
-      CorpusModelQueries.queries ++ WideSurfaceQueries.queries ++
-      CohortSignalQueries.queries ++ QualitySignalQueries.queries ++
-      RobustStatsQueries.queries ++ SessionSurfaceQueries.queries ++
-      VectorAuditQueries.queries ++ CurationRulesQueries.queries ++
-      Round6Queries.queries ++ Round6bQueries.queries ++
-      Round6cQueries.queries ++ Round6dQueries.queries ++
-      Round6eQueries.queries ++ Round6fQueries.queries ++
-      Round7Queries.queries ++ Round7bQueries.queries ++
-      Round7cQueries.queries ++ Round7dQueries.queries ++
-      Round7eQueries.queries ++ Round7fQueries.queries ++
-      Round7gQueries.queries ++ Round7hQueries.queries ++
-      Round7iQueries.queries ++ Round7jQueries.queries ++
-      Round8Queries.queries ++ Round8bQueries.queries ++
-      Round8cQueries.queries ++ Round8dQueries.queries ++
-      Round8eQueries.queries ++ Round8fQueries.queries ++
-      Round8gQueries.queries ++ Round8hQueries.queries ++
-      Round8iQueries.queries ++ Round8jQueries.queries ++
-      Round8kQueries.queries ++ Round8lQueries.queries ++
-      Round8mQueries.queries ++ Round8nQueries.queries ++
-      Round8oQueries.queries ++ Round8pQueries.queries ++
-      Round8qQueries.queries ++ Round8rQueries.queries ++
-      Round8sQueries.queries ++ Round8tQueries.queries ++
-      Round8uQueries.queries ++ Round8vQueries.queries ++
-      Round8wQueries.queries ++ Round8xQueries.queries ++
-      Round8yQueries.queries ++ Round8zQueries.queries ++
-      Round9aQueries.queries ++ Round9bQueries.queries ++
-      Round9cQueries.queries ++ Round9dQueries.queries ++
-      Round9eQueries.queries ++ Round9fQueries.queries ++
-      Round9gQueries.queries ++ Round9hQueries.queries ++
-      Round9iQueries.queries ++ Round9jQueries.queries ++
-      Round9kQueries.queries ++ Round9lQueries.queries ++
-      Round9mQueries.queries ++ Round9nQueries.queries ++
-      Round9oQueries.queries
+  /** Every query family, each exactly once. */
+  val families: Seq[QueryFamily] = Seq(
+    ScanFilterQueries, JoinQueries, AggQueries, WindowQueries, SetQueries,
+    FnQueries, GenQueries, StreamQueries, LlmQueries, UdfQueries,
+    ScaleQueries, ExtraQueries, Round2Queries, PipelineQueries,
+    SurfaceQueries, CurationQueries, CorpusStatsQueries, TrainPrepQueries,
+    TpchQueries, StatSurfaceQueries, DepthQueries, CorpusHealthQueries,
+    BehaviorQueries, Round3Queries, TpchDeepQueries, PipelineDepthQueries,
+    AnalyticsDepthQueries, EvalDepthQueries, ModernSurfaceQueries,
+    GraphEvalQueries, GraphStatsQueries, FinalDepthQueries,
+    TpchSupplyQueries, TuningQueries, AnalyticsClassicsQueries,
+    CorpusModelQueries, WideSurfaceQueries, CohortSignalQueries,
+    QualitySignalQueries, RobustStatsQueries, SessionSurfaceQueries,
+    VectorAuditQueries, CurationRulesQueries, Round6Queries, Round6bQueries,
+    Round6cQueries, Round6dQueries, Round6eQueries, Round6fQueries,
+    Round7Queries, Round7bQueries, Round7cQueries, Round7dQueries,
+    Round7eQueries, Round7fQueries, Round7gQueries, Round7hQueries,
+    Round7iQueries, Round7jQueries, Round8Queries, Round8bQueries,
+    Round8cQueries, Round8dQueries, Round8eQueries, Round8fQueries,
+    Round8gQueries, Round8hQueries, Round8iQueries, Round8jQueries,
+    Round8kQueries, Round8lQueries, Round8mQueries, Round8nQueries,
+    Round8oQueries, Round8pQueries, Round8qQueries, Round8rQueries,
+    Round8sQueries, Round8tQueries, Round8uQueries, Round8vQueries,
+    Round8wQueries, Round8xQueries, Round8yQueries, Round8zQueries,
+    Round9aQueries, Round9bQueries, Round9cQueries, Round9dQueries,
+    Round9eQueries, Round9fQueries, Round9gQueries, Round9hQueries,
+    Round9iQueries, Round9jQueries, Round9kQueries, Round9lQueries,
+    Round9mQueries, Round9nQueries, Round9oQueries)
+  private val registry = QueryFamily.registry(families)
+
+  /** Every declared query by name. */
+  val queries: Map[String, QFn] = registry.queries
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    ScanFilterQueries.oracles ++ JoinQueries.oracles ++ AggQueries.oracles ++
-      WindowQueries.oracles ++ SetQueries.oracles ++ FnQueries.oracles ++
-      GenQueries.oracles ++ StreamQueries.oracles ++ LlmQueries.oracles ++
-      UdfQueries.oracles ++ ScaleQueries.oracles ++ ExtraQueries.oracles ++
-      Round2Queries.oracles ++ PipelineQueries.oracles ++ SurfaceQueries.oracles ++
-      CurationQueries.oracles ++ CorpusStatsQueries.oracles ++
-      TrainPrepQueries.oracles ++ TpchQueries.oracles ++
-      StatSurfaceQueries.oracles ++ DepthQueries.oracles ++
-      CorpusHealthQueries.oracles ++ BehaviorQueries.oracles ++
-      Round3Queries.oracles ++ TpchDeepQueries.oracles ++
-      PipelineDepthQueries.oracles ++ AnalyticsDepthQueries.oracles ++
-      EvalDepthQueries.oracles ++ ModernSurfaceQueries.oracles ++
-      GraphEvalQueries.oracles ++ GraphStatsQueries.oracles ++
-      FinalDepthQueries.oracles ++ TpchSupplyQueries.oracles ++
-      TuningQueries.oracles ++ AnalyticsClassicsQueries.oracles ++
-      CorpusModelQueries.oracles ++ WideSurfaceQueries.oracles ++
-      CohortSignalQueries.oracles ++ QualitySignalQueries.oracles ++
-      RobustStatsQueries.oracles ++ SessionSurfaceQueries.oracles ++
-      VectorAuditQueries.oracles ++ CurationRulesQueries.oracles ++
-      Round6Queries.oracles ++ Round6bQueries.oracles ++
-      Round6cQueries.oracles ++ Round6dQueries.oracles ++
-      Round6eQueries.oracles ++ Round6fQueries.oracles ++
-      Round7Queries.oracles ++ Round7bQueries.oracles ++
-      Round7cQueries.oracles ++ Round7dQueries.oracles ++
-      Round7eQueries.oracles ++ Round7fQueries.oracles ++
-      Round7gQueries.oracles ++ Round7hQueries.oracles ++
-      Round7iQueries.oracles ++ Round7jQueries.oracles ++
-      Round8Queries.oracles ++ Round8bQueries.oracles ++
-      Round8cQueries.oracles ++ Round8dQueries.oracles ++
-      Round8eQueries.oracles ++ Round8fQueries.oracles ++
-      Round8gQueries.oracles ++ Round8hQueries.oracles ++
-      Round8iQueries.oracles ++ Round8jQueries.oracles ++
-      Round8kQueries.oracles ++ Round8lQueries.oracles ++
-      Round8mQueries.oracles ++ Round8nQueries.oracles ++
-      Round8oQueries.oracles ++ Round8pQueries.oracles ++
-      Round8qQueries.oracles ++ Round8rQueries.oracles ++
-      Round8sQueries.oracles ++ Round8tQueries.oracles ++
-      Round8uQueries.oracles ++ Round8vQueries.oracles ++
-      Round8wQueries.oracles ++ Round8xQueries.oracles ++
-      Round8yQueries.oracles ++ Round8zQueries.oracles ++
-      Round9aQueries.oracles ++ Round9bQueries.oracles ++
-      Round9cQueries.oracles ++ Round9dQueries.oracles ++
-      Round9eQueries.oracles ++ Round9fQueries.oracles ++
-      Round9gQueries.oracles ++ Round9hQueries.oracles ++
-      Round9iQueries.oracles ++ Round9jQueries.oracles ++
-      Round9kQueries.oracles ++ Round9lQueries.oracles ++
-      Round9mQueries.oracles ++ Round9nQueries.oracles ++
-      Round9oQueries.oracles
+  val oracleSql: Map[String, String] = registry.oracleSql
 }

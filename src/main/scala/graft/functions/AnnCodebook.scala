@@ -280,4 +280,34 @@ object AnnCodebook {
       |    FROM kq v CROSS JOIN $oracleFinalCent c) WHERE rn = 1)""".stripMargin
     sb.toString
   }
+
+  // ------------------------------------------------------------------
+  // Multiprobe: the 3 best cells of each query vector
+  // ------------------------------------------------------------------
+
+  /** (a_id, pcell) for the 3 best-scoring codebook cells of each query
+    * vector in `aS` (columns a_id, a_v), ties on the smaller cell — the
+    * llm_ann_multiprobe regime shared by the probe-quality queries.
+    * `cent` is [[indexed]]'s centroid frame. Oracle twin:
+    * [[oracleProbeCells]]. */
+  def probeCells(aS: DataFrame, cent: DataFrame): DataFrame = {
+    val cn = cent.select(col("cell").as("pcell"), col("csum"))
+    aS.withColumn("qv", quantize(col("a_v")))
+      .crossJoin(broadcast(cn))
+      .withColumn("sc", score(col("qv"), col("csum")))
+      .withColumn("rk", row_number().over(Window.partitionBy("a_id")
+        .orderBy(col("sc").desc, col("pcell").asc)))
+      .where(col("rk") <= 3).select("a_id", "pcell")
+  }
+
+  /** Oracle twin of [[probeCells]]: CTE `kpr(a_id, pcell)` over a
+    * `kqs(a_id, qv)` CTE of quantized query vectors (needs
+    * [[oracleCtes]] in scope; no leading WITH or trailing comma). */
+  val oracleProbeCells: String =
+    s"""kpr AS (SELECT a_id, cell AS pcell FROM (
+      |    SELECT q.a_id, c.cell, row_number() OVER (PARTITION BY q.a_id
+      |      ORDER BY ${oracleScore("q.qv", "c.csum")} DESC,
+      |        c.cell ASC) AS rn
+      |    FROM kqs q CROSS JOIN $oracleFinalCent c)
+      |  WHERE rn <= 3)""".stripMargin
 }

@@ -15,7 +15,7 @@ import graft.sources.Tables
   * Integer-width convention: Spark fns returning int are cast to long
   * where the DuckDB twin returns BIGINT, so output schemas align.
   */
-object FnQueries {
+object FnQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
     "fn_string" -> ((s, dir) => {

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.QueryUtils.duckToks
 import graft.functions.VectorFunctions.sortedIntersectCount
 
 /** Shared shingling + exact-Jaccard verification kernel for the
@@ -273,9 +274,9 @@ object TextShingles {
   /** DuckDB CTE producing the same per-doc shingle sets (oracle side).
     * Empty tokens are filtered to match ShingleArray's tokenization. */
   val duckShingleCte: String =
-    """WITH t AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') tok
+    s"""WITH t AS (SELECT doc_id, $duckToks tok
       |           FROM documents
-      |           WHERE len(list_filter(string_split(text, ' '), x -> x <> '')) >= 3),
+      |           WHERE len($duckToks) >= 3),
       |s AS (SELECT doc_id, list_distinct(list_transform(generate_series(1, len(tok) - 2),
       |        i -> tok[i] || ' ' || tok[i+1] || ' ' || tok[i+2])) sh FROM t)""".stripMargin
 }

@@ -29,7 +29,7 @@ object WeightedAvgAgg extends Aggregator[(Double, Double), WAvgBuf, Double] {
 }
 
 /** §2.L — user-defined scalar / aggregate function surface. */
-object UdfQueries {
+object UdfQueries extends graft.QueryFamily {
 
   /** char-bigram Jaccard similarity of two strings (1.0 if both < 2 chars). */
   private def bigramJaccard(s1: String, s2: String): Double = {

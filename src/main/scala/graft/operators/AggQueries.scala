@@ -9,7 +9,7 @@ import graft.sources.Tables
 /** §2.D — aggregations. Every query ends in a total ORDER BY; money goes
   * through exact decimal sums (see QueryUtils).
   */
-object AggQueries {
+object AggQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
     "agg_global" -> ((s, dir) => {

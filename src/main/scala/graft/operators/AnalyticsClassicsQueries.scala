@@ -27,7 +27,7 @@ import graft.sources.Tables
   *    Spark's `dayofweek` (Sun=1) and DuckDB's `dayofweek` (Sun=0)
   *    disagree, the ISO numbering is the portable one.
   */
-object AnalyticsClassicsQueries {
+object AnalyticsClassicsQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 

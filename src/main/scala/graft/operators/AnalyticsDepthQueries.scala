@@ -27,7 +27,7 @@ import graft.sources.Tables
   * 100 cells is partial-order dependent); percent change divides two
   * stored doubles once.
   */
-object AnalyticsDepthQueries {
+object AnalyticsDepthQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 

@@ -20,7 +20,7 @@ import graft.sources.Tables
   *    output is a single summary row.
   *  - All arithmetic is timestamp/integer comparison — nothing float.
   */
-object BehaviorQueries {
+object BehaviorQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 

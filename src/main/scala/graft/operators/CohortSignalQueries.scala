@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 
 import graft.QueryUtils._
 import graft.functions.AnnCodebook
@@ -30,11 +30,7 @@ import graft.sources.Tables
   *  - DuckDB `list_position` returns 0 for absent (same as Spark's
   *    `array_position`) — probed, no coalesce needed.
   */
-object CohortSignalQueries {
-
-  private val toks: org.apache.spark.sql.Column =
-    graft.functions.TextNGrams.mkTokenList(col("text"))
-  private val duckToks = "list_filter(string_split(text, ' '), x -> x <> '')"
+object CohortSignalQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 

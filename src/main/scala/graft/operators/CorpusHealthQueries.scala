@@ -30,7 +30,7 @@ import graft.sources.Tables
   * on the established r4 convention (inherently order-dependent stats
   * round to 4 on both engines — QueryUtils scaladoc).
   */
-object CorpusHealthQueries {
+object CorpusHealthQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 
@@ -224,8 +224,8 @@ object CorpusHealthQueries {
         |FROM ex LEFT JOIN an USING (a_id)""".stripMargin),
 
     "llm_zipf_slope" ->
-      """WITH tf AS (SELECT lang,
-        |    unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS tok
+      s"""WITH tf AS (SELECT lang,
+        |    unnest($duckToks) AS tok
         |  FROM documents),
         |c AS (SELECT lang, tok, CAST(count(*) AS BIGINT) AS c
         |  FROM tf GROUP BY lang, tok),

@@ -21,11 +21,7 @@ import graft.sources.Tables
   * md5(concat) on both engines); all rates are single divisions of
   * exact integers or exact-decimal sums.
   */
-object CorpusModelQueries {
-
-  private val toks: org.apache.spark.sql.Column =
-    graft.functions.TextNGrams.mkTokenList(col("text"))
-  private val duckToks = "list_filter(string_split(text, ' '), x -> x <> '')"
+object CorpusModelQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 

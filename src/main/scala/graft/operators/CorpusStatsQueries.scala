@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 
-import graft.QueryUtils.QFn
+import graft.QueryUtils.{QFn, duckToks}
 import graft.sources.Tables
 
 /** Corpus-statistics and curation-adjacent operators (round 2, batch 3):
@@ -20,7 +20,7 @@ import graft.sources.Tables
   *    frame. Skewed users would be handled by range-partitioning the
   *    sort — Spark's window exec already sorts within partitions only.
   */
-object CorpusStatsQueries {
+object CorpusStatsQueries extends graft.QueryFamily {
 
   private val EmailRe = """[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"""
   private val PhoneRe = """\b\d{3}-\d{4}\b"""
@@ -169,8 +169,8 @@ object CorpusStatsQueries {
         |FROM dirty ORDER BY doc_id""".stripMargin,
 
     "llm_mix_weights" ->
-      """WITH per_doc AS (SELECT lang, source,
-        |    CAST(len(list_filter(string_split(text, ' '), x -> x <> '')) AS BIGINT) AS n_tok
+      s"""WITH per_doc AS (SELECT lang, source,
+        |    CAST(len($duckToks) AS BIGINT) AS n_tok
         |  FROM documents),
         |strata AS (SELECT lang, source, CAST(count(*) AS BIGINT) AS n_docs,
         |    CAST(sum(n_tok) AS BIGINT) AS n_tokens
@@ -185,8 +185,8 @@ object CorpusStatsQueries {
         |ORDER BY lang, source""".stripMargin,
 
     "llm_length_buckets" ->
-      """WITH per_doc AS (SELECT lang,
-        |    CAST(len(list_filter(string_split(text, ' '), x -> x <> '')) AS BIGINT) AS n_tok
+      s"""WITH per_doc AS (SELECT lang,
+        |    CAST(len($duckToks) AS BIGINT) AS n_tok
         |  FROM documents)
         |SELECT lang, CAST(len(bin(n_tok)) - 1 AS BIGINT) AS bucket,
         |  CAST(count(*) AS BIGINT) AS n_docs,

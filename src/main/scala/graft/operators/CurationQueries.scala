@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QueryUtils._
@@ -25,7 +24,7 @@ import graft.sources.Tables
   *  - canonical selection is exact dedup's hash-groupBy with a max_by
   *    tiebreak — one shuffle keyed by content hash.
   */
-object CurationQueries {
+object CurationQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 
@@ -71,14 +70,14 @@ object CurationQueries {
     // At 100 TB this is the difference between a scan-shaped job and a
     // corpus-sized token shuffle.
     "llm_quality_repetition" -> ((s, dir) => {
-      val toks = Tables.documents(s, dir)
+      val tokRows = Tables.documents(s, dir)
         .select(col("doc_id"),
-          graft.functions.TextNGrams.mkTokenList(col("text")).as("tok"))
+          toks.as("tok"))
         .where(size(col("tok")) >= 2)
         .select(col("doc_id"), col("tok"),
           transform(sequence(lit(0), size(col("tok")) - 2),
             i => concat_ws(" ", slice(col("tok"), i + 1, lit(2)))).as("big"))
-      toks
+      tokRows
         .select(col("doc_id"),
           size(col("tok")).cast("long").as("n_tok"),
           size(array_distinct(col("tok"))).as("d_tok"),
@@ -133,7 +132,7 @@ object CurationQueries {
       val terms = Seq("data", "table", "row")
       val docs = Tables.documents(s, dir)
         .select(col("doc_id"),
-          graft.functions.TextNGrams.mkTokenList(col("text")).as("tk"))
+          toks.as("tk"))
         .select(col("doc_id"), size(col("tk")).cast("double").as("dl"),
           col("tk"))
       val globals = docs.agg(count(lit(1)).as("n_docs"),
@@ -195,7 +194,7 @@ object CurationQueries {
 
   val oracles: Map[String, String] = Map(
     "llm_decontaminate" ->
-      """WITH t AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') tok
+      s"""WITH t AS (SELECT doc_id, $duckToks tok
         |          FROM documents),
         |g AS (SELECT DISTINCT doc_id, unnest(list_transform(
         |        generate_series(1, len(tok) - 12),
@@ -208,7 +207,7 @@ object CurationQueries {
         |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
 
     "llm_quality_repetition" ->
-      """WITH t AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') tok
+      s"""WITH t AS (SELECT doc_id, $duckToks tok
         |          FROM documents),
         |tb AS (SELECT doc_id, tok, list_transform(generate_series(1, len(tok) - 1),
         |         i -> tok[i] || ' ' || tok[i+1]) big
@@ -237,12 +236,12 @@ object CurationQueries {
         |FROM documents ORDER BY doc_id""".stripMargin,
 
     "llm_bm25" ->
-      """WITH d AS (SELECT doc_id,
-        |    CAST(len(list_filter(string_split(text, ' '), x -> x <> '')) AS DOUBLE) AS dl
+      s"""WITH d AS (SELECT doc_id,
+        |    CAST(len($duckToks) AS DOUBLE) AS dl
         |  FROM documents),
         |g AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM d),
         |tf AS (SELECT doc_id, t, CAST(count(*) AS BIGINT) AS tf
-        |  FROM (SELECT doc_id, unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS t
+        |  FROM (SELECT doc_id, unnest($duckToks) AS t
         |        FROM documents)
         |  WHERE t IN ('data', 'table', 'row')
         |  GROUP BY doc_id, t),

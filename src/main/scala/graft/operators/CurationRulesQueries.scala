@@ -38,11 +38,7 @@ import graft.sources.Tables
   * (source, md5) with map-side combine. Nothing here is quadratic and
   * the only windows run over source-cardinality aggregates.
   */
-object CurationRulesQueries {
-
-  private val toks: org.apache.spark.sql.Column =
-    graft.functions.TextNGrams.mkTokenList(col("text"))
-  private val duckToks = "list_filter(string_split(text, ' '), x -> x <> '')"
+object CurationRulesQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 

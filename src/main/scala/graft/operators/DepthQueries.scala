@@ -27,7 +27,7 @@ import graft.sources.Tables
   *  - `fn_datetime_tz` / `agg_argminmax` are map-only / one bounded
   *    aggregation respectively.
   */
-object DepthQueries {
+object DepthQueries extends graft.QueryFamily {
 
   /** Per-sfdir, app-id-salted scratch dir for the partitioned write
     * (shared scheme, see graft.tools.Scratch). */
@@ -179,8 +179,8 @@ object DepthQueries {
   val oracles: Map[String, String] = Map(
 
     "llm_bigram_score" ->
-      """WITH t AS (SELECT doc_id,
-        |    list_filter(string_split(text, ' '), x -> x <> '') AS tok
+      s"""WITH t AS (SELECT doc_id,
+        |    $duckToks AS tok
         |  FROM documents),
         |occ0 AS (SELECT doc_id,
         |    unnest(list_transform(generate_series(1, len(tok) - 1),

@@ -27,9 +27,7 @@ import graft.sources.Tables
   * quantiles are pure integer arithmetic over GlobalRank's
   * distributed running weights.
   */
-object EvalDepthQueries {
-
-  private def toks = graft.functions.TextNGrams.mkTokenList(col("text"))
+object EvalDepthQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 

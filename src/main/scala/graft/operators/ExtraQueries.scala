@@ -10,7 +10,7 @@ import graft.sources.Tables
   * (melt), nth_value / ignore-nulls windows, exists/forall higher-order
   * predicates, and the stack row-generator.
   */
-object ExtraQueries {
+object ExtraQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
     "agg_median_mode" -> ((s, dir) => {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
-import graft.QueryUtils.QFn
+import graft.QueryUtils.{QFn, decSum4, duckToks, toks, ts}
 import graft.sources.Tables
 
 /** §2.N — round-3 closing batch: the last expressible TPC-H query
@@ -37,17 +37,7 @@ import graft.sources.Tables
   *  - `llm_mi_lang_source` reduces to a |langs|×|sources| cell table;
   *    everything after the first keyed count is broadcast-sized.
   */
-object FinalDepthQueries {
-
-  private def ts(d: String) = lit(d + " 00:00:00").cast("timestamp")
-
-  /** Order-free exact sum of a 4-decimal money product, as double
-    * (same contract as TpchQueries.decSum). */
-  private def decSum4(c: org.apache.spark.sql.Column) =
-    sum(c.cast(DecimalType(18, 4))).cast(DoubleType)
-
-  /** Whitespace tokens with empties dropped — the shared idiom. */
-  private def toks = graft.functions.TextNGrams.mkTokenList(col("text"))
+object FinalDepthQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 
@@ -289,14 +279,7 @@ object FinalDepthQueries {
           .crossJoin(broadcast(aS))
           .where(col("a_id") =!= col("b_id"))
           .select(col("a_id"), col("b_id"), cos))
-      val cn = cent.select(col("cell").as("pcell"), col("csum"))
-      val probes = aS
-        .withColumn("qv", AnnCodebook.quantize(col("a_v")))
-        .crossJoin(broadcast(cn))
-        .withColumn("sc", AnnCodebook.score(col("qv"), col("csum")))
-        .withColumn("rk", row_number().over(Window.partitionBy("a_id")
-          .orderBy(col("sc").desc, col("pcell").asc)))
-        .where(col("rk") <= 3).select("a_id", "pcell")
+      val probes = AnnCodebook.probeCells(aS, cent)
       val ann10 = top10(probes.join(aS, "a_id")
         .join(e.select(col("cell").as("pcell"), col("vec_id").as("b_id"),
           col("embedding").as("b_v"), col("nrm").as("b_n")), "pcell")
@@ -385,9 +368,9 @@ object FinalDepthQueries {
         |ORDER BY user_id, event_id""".stripMargin,
 
     "llm_unigram_logprob" ->
-      """WITH tok AS (
+      s"""WITH tok AS (
         |  SELECT doc_id,
-        |    unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS tok
+        |    unnest($duckToks) AS tok
         |  FROM documents),
         |tf AS (SELECT tok, count(*) AS c FROM tok GROUP BY tok),
         |n AS (SELECT sum(c) AS nn FROM tf),
@@ -462,12 +445,7 @@ object FinalDepthQueries {
         |asd AS (SELECT a_id, ev AS a_v, nrm AS a_n
         |  FROM n JOIN ksmp ON n.vec_id = ksmp.a_id),
         |kqs AS (SELECT a_id, qv FROM kq JOIN ksmp ON kq.vec_id = ksmp.a_id),
-        |kpr AS (SELECT a_id, cell AS pcell FROM (
-        |    SELECT q.a_id, c.cell, row_number() OVER (PARTITION BY q.a_id
-        |      ORDER BY ${graft.functions.AnnCodebook.oracleScore("q.qv", "c.csum")} DESC,
-        |        c.cell ASC) AS rn
-        |    FROM kqs q CROSS JOIN ${graft.functions.AnnCodebook.oracleFinalCent} c)
-        |  WHERE rn <= 3),
+        |${graft.functions.AnnCodebook.oracleProbeCells},
         |p AS (SELECT a.a_id, b.vec_id AS b_id, b.cell AS bcell,
         |    list_aggregate(list_transform(list_zip(a.a_v, b.ev), z -> z[1] * z[2]), 'sum')
         |      / (a.a_n * b.nrm) AS cos_sim

@@ -9,7 +9,7 @@ import graft.sources.Tables
   * sequence densification. Spark's `Generator` expressions cover the
   * whole UDTF surface the reference exposes — no custom Generator needed.
   */
-object GenQueries {
+object GenQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
     "gen_explode_tokens" -> ((s, dir) => {

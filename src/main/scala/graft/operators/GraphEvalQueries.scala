@@ -45,7 +45,7 @@ object OnlineVarianceAgg extends Aggregator[Double, VarBuf, Double] {
   * IV-random; length and roundtrip equality are not);
   * `gen_explode_map` completes the generator family over map columns.
   */
-object GraphEvalQueries {
+object GraphEvalQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 

@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.QueryUtils.QFn
+import graft.QueryUtils.{QFn, ts}
 import graft.sources.Tables
 
 /** §2.N — graph analytics over a relational co-occurrence graph, plus
@@ -29,9 +29,7 @@ import graft.sources.Tables
   * flat — the label-propagation skeleton already proven in
   * llm_dedup_cluster.
   */
-object GraphStatsQueries {
-
-  private def ts(d: String) = lit(d + " 00:00:00").cast("timestamp")
+object GraphStatsQueries extends graft.QueryFamily {
 
   /** Undirected supplier co-occurrence edges (sa < sb, distinct) from
     * orders placed in March 1997: two suppliers are linked when one
@@ -58,6 +56,41 @@ object GraphStatsQueries {
       .where(col("sa") < col("sb"))
       .select("sa", "sb").distinct()
   }
+
+  /** Wedge-connected candidate pairs of the supplier graph with common
+    * neighbor count and endpoint degrees, edges removed — the shared
+    * base of the link-prediction index family (Σ deg² bound).
+    * `tag` names the eager edge stage. */
+  private[operators] def candidatePairs(s: SparkSession, dir: String, tag: String) = {
+    val e = graft.tools.Materialize.eager(s"$tag.edges",
+      supplierEdges(s, dir))
+    val nb = e.select(col("sa").as("c"), col("sb").as("x"))
+      .union(e.select(col("sb").as("c"), col("sa").as("x")))
+    val deg = nb.groupBy(col("c").as("v")).agg(count(lit(1)).as("deg"))
+    val pairs = nb.select(col("c"), col("x").as("a"))
+      .join(nb.select(col("c").as("c2"), col("x").as("b")),
+        col("c") === col("c2") && col("a") < col("b"))
+      .groupBy("a", "b").agg(count(lit(1)).as("cn"))
+    pairs
+      .join(e, pairs("a") === e("sa") && pairs("b") === e("sb"), "left_anti")
+      .join(deg.toDF("va", "deg_a"), col("a") === col("va"))
+      .join(deg.toDF("vb", "deg_b"), col("b") === col("vb"))
+      .select(col("a"), col("b"), col("cn"), col("deg_a"), col("deg_b"))
+  }
+
+  /** DuckDB twin of [[candidatePairs]]: CTE `cand` over the [[edgesSql]]
+    * edges `e` (no leading WITH). */
+  private[operators] val candidateSql: String =
+    """nb AS (SELECT sa AS c, sb AS x FROM e
+      |       UNION ALL SELECT sb AS c, sa AS x FROM e),
+      |deg AS (SELECT c AS v, CAST(count(*) AS BIGINT) AS deg
+      |  FROM nb GROUP BY c),
+      |p AS (SELECT a.x AS a, b.x AS b, CAST(count(*) AS BIGINT) AS cn
+      |  FROM nb a JOIN nb b ON a.c = b.c AND a.x < b.x GROUP BY 1, 2),
+      |cand AS (SELECT p.a, p.b, p.cn, da.deg AS deg_a, db.deg AS deg_b
+      |  FROM p LEFT JOIN e ON p.a = e.sa AND p.b = e.sb
+      |  JOIN deg da ON p.a = da.v JOIN deg db ON p.b = db.v
+      |  WHERE e.sa IS NULL)""".stripMargin
 
   val queries: Map[String, QFn] = Map(
 

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
@@ -17,7 +16,7 @@ import graft.sources.Tables
   * expressed as equi-join + one `max_by` aggregation (single shuffle) —
   * not join + window (two shuffles).
   */
-object JoinQueries {
+object JoinQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
     "join_inner_equi" -> ((s, dir) => {

@@ -21,7 +21,7 @@ import graft.sources.Tables
   *  - brute-force kNN here is the correctness oracle; the LSH/IVF scale
   *    path ships alongside in ScaleQueries.
   */
-object LlmQueries {
+object LlmQueries extends graft.QueryFamily {
 
   import graft.functions.TextShingles.{mkShingles, verifyJaccard06}
 
@@ -156,7 +156,7 @@ object LlmQueries {
       val d = Tables.documents(s, dir)
       val tf = d.where(col("doc_id") < 20)
         .select(col("doc_id"),
-          explode(graft.functions.TextNGrams.mkTokenList(col("text"))).as("term"))
+          explode(toks).as("term"))
         .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
       val dft = graft.tools.TokenArtifacts.dfGlobal(s, dir)
         .select(col("tok").as("term"), col("ndoc").as("df"))
@@ -230,8 +230,8 @@ object LlmQueries {
       |SELECT a_id AS vec_id, b_id AS nn_id, cos_sim FROM r WHERE rn = 1 ORDER BY vec_id""".stripMargin
 
   private val tfidfOracle =
-    """WITH tok AS (SELECT doc_id,
-      |  unnest(list_filter(string_split(text, ' '), x -> x <> '')) term
+    s"""WITH tok AS (SELECT doc_id,
+      |  unnest($duckToks) term
       |  FROM documents),
       |tf AS (SELECT doc_id, term, count(*) tf FROM tok GROUP BY 1, 2),
       |dft AS (SELECT term, count(*) df FROM tf GROUP BY 1),

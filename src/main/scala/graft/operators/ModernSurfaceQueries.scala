@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 
-import graft.QueryUtils.QFn
+import graft.QueryUtils.{QFn, duckToks, toks}
 import graft.sources.Tables
 
 /** §2.N — round-3 modern-surface additions.
@@ -17,9 +17,7 @@ import graft.sources.Tables
   * co-occurrence — candidate pairs bounded by a constant top-k, never
   * corpus²).
   */
-object ModernSurfaceQueries {
-
-  private def toks = graft.functions.TextNGrams.mkTokenList(col("text"))
+object ModernSurfaceQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 
@@ -170,8 +168,8 @@ object ModernSurfaceQueries {
         |ORDER BY round""".stripMargin,
 
     "llm_entity_cooccur" ->
-      """WITH dt0 AS (SELECT DISTINCT doc_id,
-        |    unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS t
+      s"""WITH dt0 AS (SELECT DISTINCT doc_id,
+        |    unnest($duckToks) AS t
         |  FROM documents),
         |top50 AS (SELECT t, CAST(count(*) AS BIGINT) AS df FROM dt0
         |  GROUP BY t ORDER BY df DESC, t ASC LIMIT 50),

@@ -1,12 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
-import graft.QueryUtils.{QFn, hash60, nTok}
+import graft.QueryUtils.{QFn, duckToks, hash60, nTok, toks}
 import graft.functions.VectorFunctions.{vecDot, vecNorm}
 import graft.sources.Tables
 
@@ -29,12 +28,7 @@ import graft.sources.Tables
   * cast to BIGINT on both sides (Spark row_number is int32, DuckDB's
   * is int64 — the driver compare is dtype-strict).
   */
-object PipelineDepthQueries {
-
-  private def toks: Column = graft.functions.TextNGrams.mkTokenList(col("text"))
-
-  /** DuckDB token-array idiom, identical filtering. */
-  private val duckToks = "list_filter(string_split(text, ' '), x -> x <> '')"
+object PipelineDepthQueries extends graft.QueryFamily {
 
   private def scratch(s: SparkSession, kind: String, dir: String): String =
     graft.tools.Scratch.dir(s, kind, dir)

@@ -28,7 +28,7 @@ import graft.sources.Tables
   *    letting one hot probe key serialize into a single reducer; the
   *    decimal partials make it provably equal to the unsalted oracle.
   */
-object PipelineQueries {
+object PipelineQueries extends graft.QueryFamily {
 
   import graft.functions.TextShingles.{mkCharGrams, mkShingles, verifyJaccard}
 

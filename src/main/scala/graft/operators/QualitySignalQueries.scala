@@ -26,11 +26,7 @@ import graft.sources.Tables
   *  - hapax rates are single divisions, aggregated with the
   *    rounded-then-decimal-sum mean idiom.
   */
-object QualitySignalQueries {
-
-  private val toks: org.apache.spark.sql.Column =
-    graft.functions.TextNGrams.mkTokenList(col("text"))
-  private val duckToks = "list_filter(string_split(text, ' '), x -> x <> '')"
+object QualitySignalQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 

@@ -19,11 +19,7 @@ import graft.sources.Tables
   * ranks under total orders, so the band edges are corpus elements,
   * not interpolated floats.
   */
-object RobustStatsQueries {
-
-  private val toks: org.apache.spark.sql.Column =
-    graft.functions.TextNGrams.mkTokenList(col("text"))
-  private val duckToks = "list_filter(string_split(text, ' '), x -> x <> '')"
+object RobustStatsQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 

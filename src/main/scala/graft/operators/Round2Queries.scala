@@ -19,7 +19,7 @@ import graft.sources.Tables
   * window functions are exact integer divisions, and the clustering is
   * min-label propagation whose fixpoint is order-independent.
   */
-object Round2Queries {
+object Round2Queries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
     // ---- scalar subquery: exact-decimal global threshold --------------

@@ -30,7 +30,7 @@ import graft.sources.Tables
   * against the exact PPJoin pair set — the "is the cheap index missing
   * real duplicates" gate, sibling of `llm_ann_recall`.
   */
-object Round3Queries {
+object Round3Queries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 

@@ -24,7 +24,7 @@ import graft.sources.Tables
   * fold over `zip_with` matches DuckDB's `list_aggregate(_, 'sum')`
   * element order, so argmin code assignment is bit-identical.
   */
-object Round6Queries {
+object Round6Queries extends graft.QueryFamily {
 
   /** PQ code assignment shared by `llm_ann_pq` (codes + error) and
     * `llm_ann_pq_adc` (asymmetric-distance search): one row per
@@ -570,8 +570,8 @@ object Round6Queries {
         |FROM b GROUP BY vec_id ORDER BY vec_id""".stripMargin,
 
     "llm_rbo_rankings" ->
-      """WITH d AS (SELECT doc_id, n_chars,
-        |    len(list_filter(string_split(text, ' '), x -> x <> '')) AS n_tok
+      s"""WITH d AS (SELECT doc_id, n_chars,
+        |    len($duckToks) AS n_tok
         |  FROM documents),
         |ra AS (SELECT doc_id,
         |    CAST(row_number() OVER (ORDER BY n_chars DESC, doc_id) AS BIGINT) AS ra

@@ -19,9 +19,7 @@ import graft.sources.Tables
   * corpus-wide and per-source rankings ride GlobalRank, never an
   * unpartitioned window; all top-k cuts end in a total order.
   */
-object Round6bQueries {
-
-  private val duckToks = "list_filter(string_split(text, ' '), x -> x <> '')"
+object Round6bQueries extends graft.QueryFamily {
 
   /** Post-period cutover for the experiment analytics: events span
     * 2024-01-01 → 2024-01-30, so Jan 16 splits the log roughly in half. */

@@ -17,9 +17,7 @@ import graft.sources.Tables
   * decimal-summed; closed forms that chain through sqrt round to 6dp;
   * every ranking is total-ordered and every top-k cut is TakeOrdered.
   */
-object Round6cQueries {
-
-  private val duckToks = "list_filter(string_split(text, ' '), x -> x <> '')"
+object Round6cQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 
@@ -88,15 +86,14 @@ object Round6cQueries {
         .join(deg.toDF("vb", "db"), col("sb") === col("vb"))
       val sym = de.select(col("da").as("x"), col("db").as("y"))
         .union(de.select(col("db").as("x"), col("da").as("y")))
-      def d(c: String) = col(c).cast(DoubleType)
       sym.agg(count(lit(1)).as("n"), sum("x").as("sx"), sum("y").as("sy"),
           sum(col("x") * col("y")).as("sxy"),
           sum(col("x") * col("x")).as("sxx"),
           sum(col("y") * col("y")).as("syy"))
         .select(expr("n div 2").as("n_edges"),
-          round((d("n") * d("sxy") - d("sx") * d("sy")) /
-            sqrt((d("n") * d("sxx") - d("sx") * d("sx")) *
-              (d("n") * d("syy") - d("sy") * d("sy"))), 6)
+          round((d(col("n")) * d(col("sxy")) - d(col("sx")) * d(col("sy"))) /
+            sqrt((d(col("n")) * d(col("sxx")) - d(col("sx")) * d(col("sx"))) *
+              (d(col("n")) * d(col("syy")) - d(col("sy")) * d(col("sy")))), 6)
             .as("assortativity"))
     }),
 
@@ -135,7 +132,6 @@ object Round6cQueries {
     // distincts are map-side array ops; the vocab count is one
     // token-keyed distinct per lang.
     "llm_ttr_by_lang" -> ((s, dir) => {
-      val toks = graft.functions.TextNGrams.mkTokenList(col("text"))
       val perDoc = Tables.documents(s, dir)
         .select(col("lang"), nTok.as("nt"),
           size(array_distinct(toks)).cast("long").as("nd"))

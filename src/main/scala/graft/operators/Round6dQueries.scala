@@ -20,9 +20,7 @@ import graft.sources.Tables
   * one sqrt-bearing z closed form rounds to 6dp; chunk hashes are md5
   * of identical strings on both engines.
   */
-object Round6dQueries {
-
-  private val duckToks = "list_filter(string_split(text, ' '), x -> x <> '')"
+object Round6dQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 
@@ -98,7 +96,6 @@ object Round6dQueries {
       val grp = ranked.groupBy("event_type", "v")
         .agg(min("rn").as("lo"), max("rn").as("hi"), count(lit(1)).as("t"),
           count_if(col("treat")).as("t_treat"))
-      def d(c: org.apache.spark.sql.Column) = c.cast(DoubleType)
       val agg = grp.groupBy("event_type")
         .agg(sum("t").as("n"), sum("t_treat").as("n1"),
           sum(col("t_treat") * (col("lo") + col("hi"))).as("rs2"),

@@ -21,7 +21,7 @@ import graft.sources.Tables
   * C_s), all window aggregates over DECIMAL so segment-tree vs
   * sequential evaluation order cannot matter).
   */
-object Round6eQueries {
+object Round6eQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 
@@ -66,12 +66,11 @@ object Round6eQueries {
         sum("ssg").as("ss_raw"),
         sum(round(col("sg").cast(DoubleType) * col("sg").cast(DoubleType) /
             col("ng"), 8).cast(DecimalType(28, 8))).as("between_raw"))
-      def d(c: String) = col(c).cast(DoubleType)
-      val ssb = d("between_raw") - d("s_all") * d("s_all") / d("n")
-      val ssw = d("ss_raw") - d("between_raw")
+      val ssb = d(col("between_raw")) - d(col("s_all")) * d(col("s_all")) / d(col("n"))
+      val ssw = d(col("ss_raw")) - d(col("between_raw"))
       agg.select(col("n"), col("k"),
         round(ssb, 6).as("ss_between"), round(ssw, 6).as("ss_within"),
-        round((ssb / (d("k") - 1.0)) / (ssw / (d("n") - d("k"))), 6)
+        round((ssb / (d(col("k")) - 1.0)) / (ssw / (d(col("n")) - d(col("k")))), 6)
           .as("f_stat"))
     }),
 

@@ -17,7 +17,7 @@ import graft.sources.Tables
   * day-arithmetic week index ((day − 1) div 7 — NOT ISO weeks, whose
   * definitions the two engines can disagree on).
   */
-object Round6fQueries {
+object Round6fQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 
@@ -31,18 +31,18 @@ object Round6fQueries {
     // the sketch at 100 TB: counters fit one cache line per row);
     // building it is one token-keyed shuffle + one 192-key rollup.
     "llm_sketch_cms" -> ((s, dir) => {
-      val toks = Tables.documents(s, dir)
-        .select(explode(graft.functions.TextNGrams.mkTokenList(col("text"))).as("tok"))
+      val tokCounts = Tables.documents(s, dir)
+        .select(explode(toks).as("tok"))
         .groupBy("tok").agg(count(lit(1)).as("cnt"))
         .transform(df => graft.tools.Materialize.eager("cms.toks", df))
         // ^ grid + probes both read it; build once
-      val rows = toks.select(col("tok"), col("cnt"),
+      val rows = tokCounts.select(col("tok"), col("cnt"),
           explode(array((0 until 3).map(lit): _*)).as("j"))
         .select(col("j"), col("cnt"),
           (hash60(concat(lit("cms-"), col("j"), lit("-"), col("tok"))) % 64)
             .as("w"))
       val grid = rows.groupBy("j", "w").agg(sum("cnt").as("c"))
-      val probes = toks.orderBy(col("cnt").desc, col("tok").asc).limit(20)
+      val probes = tokCounts.orderBy(col("cnt").desc, col("tok").asc).limit(20)
         .select(col("tok").as("ptok"), col("cnt").as("true_cnt"))
         .select(col("ptok"), col("true_cnt"),
           explode(array((0 until 3).map(lit): _*)).as("pj"))

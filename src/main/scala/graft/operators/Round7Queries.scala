@@ -22,9 +22,7 @@ import graft.sources.Tables
   * (or exact decimals) with a unique tiebreak so a 1-ulp libm
   * difference can never reorder the cut across engines.
   */
-object Round7Queries {
-
-  private val duckToks = "list_filter(string_split(text, ' '), x -> x <> '')"
+object Round7Queries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 
@@ -67,7 +65,6 @@ object Round7Queries {
       val v19 = col("value").cast(DecimalType(19, 6))
       val ev = Tables.events(s, dir).select(col("event_type"),
         (col("user_id") % 2 === 0).as("treat"), v.as("v"), (v19 * v19).as("v2"))
-      def d(c: org.apache.spark.sql.Column) = c.cast(DoubleType)
       val m = ev.groupBy("event_type").agg(
         count_if(col("treat")).as("n1"),
         count_if(!col("treat")).as("n2"),
@@ -128,7 +125,6 @@ object Round7Queries {
         sum(dec19(col("r2x")) * dec19(col("r2y"))).as("sxy"),
         sum(dec19(col("r2x")) * dec19(col("r2x"))).as("sxx"),
         sum(dec19(col("r2y")) * dec19(col("r2y"))).as("syy"))
-      def d(c: org.apache.spark.sql.Column) = c.cast(DoubleType)
       m.select(col("n"),
         round((d(col("n")) * d(col("sxy")) - d(col("sx")) * d(col("sy"))) /
           (sqrt(d(col("n")) * d(col("sxx")) - d(col("sx")) * d(col("sx"))) *
@@ -155,7 +151,6 @@ object Round7Queries {
         .agg(count_if(col("early")).as("na"), count_if(!col("early")).as("nb"))
       val grid = ev.select("event_type").distinct()
         .select(col("event_type"), explode(sequence(lit(0), lit(9))).as("bin"))
-      def d(c: org.apache.spark.sql.Column) = c.cast(DoubleType)
       val terms = grid
         .join(cnt, Seq("event_type", "bin"), "left")
         .join(broadcast(tot), col("event_type") === col("et"))
@@ -225,7 +220,6 @@ object Round7Queries {
         .groupBy("v").agg(count(lit(1)).as("tri"))
       val deg = e.select(col("sa").as("v")).union(e.select(col("sb").as("v")))
         .groupBy("v").agg(count(lit(1)).as("deg"))
-      def d(c: org.apache.spark.sql.Column) = c.cast(DoubleType)
       val cc = deg.join(triN, Seq("v"), "left")
         .select(col("v"), col("deg"),
           when(col("deg") >= 2,
@@ -349,7 +343,6 @@ object Round7Queries {
         .agg(count(lit(1)).as("n_docs"), sum(nTok).as("n_tokens"))
       val w = Window.rowsBetween(Window.unboundedPreceding,
         Window.unboundedFollowing)
-      def d(c: org.apache.spark.sql.Column) = c.cast(DoubleType)
       cnt
         .withColumn("p", d(col("n_tokens")) / d(sum("n_tokens").over(w)))
         .withColumn("w_raw",
@@ -369,7 +362,6 @@ object Round7Queries {
     // latin scripts before committing to a tokenizer. Map-only + 5-key
     // shuffle.
     "llm_token_bpe" -> ((s, dir) => {
-      def d(c: org.apache.spark.sql.Column) = c.cast(DoubleType)
       Tables.documents(s, dir)
         .select(col("lang"), nTok.as("nw"),
           size(regexp_extract_all(col("text"), lit("[a-z0-9]{1,4}"), lit(0)))
@@ -406,7 +398,6 @@ object Round7Queries {
       val tot = st.agg(
         sum(when(col("focus"), col("cnt")).otherwise(lit(0L))).as("ta"),
         sum(when(!col("focus"), col("cnt")).otherwise(lit(0L))).as("tb"))
-      def d(c: org.apache.spark.sql.Column) = c.cast(DoubleType)
       def xlx(x: org.apache.spark.sql.Column, ex: org.apache.spark.sql.Column) =
         when(x > 0, d(x) * log(d(x) / ex)).otherwise(lit(0.0))
       val scored = cnt.crossJoin(broadcast(tot))
@@ -433,13 +424,10 @@ object Round7Queries {
     // variance guard CASE'd to NULL identically on both engines.
     "win_rolling_corr" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val daily = Tables.events(s, dir)
-        .groupBy(col("event_type"), dayofmonth(col("ts")).cast("long").as("day"))
-        .agg(count(lit(1)).as("x"),
-          sum(col("value").cast(DecimalType(18, 6))).as("y"))
+      val daily = dailyAgg(s, dir, count(lit(1)).as("x"),
+        sum(col("value").cast(DecimalType(18, 6))).as("y"))
       val w = Window.partitionBy("event_type").orderBy("day")
         .rowsBetween(-6, 0)
-      def d(c: org.apache.spark.sql.Column) = c.cast(DoubleType)
       val y19 = col("y").cast(DecimalType(19, 6))
       val x19 = col("x").cast(DecimalType(19, 0))
       val m = daily.select(col("event_type"), col("day"), col("x"), col("y"),

@@ -21,9 +21,7 @@ import graft.sources.Tables
   * shuffles are vocabulary-bounded; rich-club is one degree table +
   * an edge join exploded over four k thresholds.
   */
-object Round7bQueries {
-
-  private val duckToks = "list_filter(string_split(text, ' '), x -> x <> '')"
+object Round7bQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 
@@ -34,9 +32,7 @@ object Round7bQueries {
     // variance, the ±1-continuity z. The pair stage runs on the ≤31-row
     // daily aggregate: C(31,2) pairs per type, calendar-bounded.
     "agg_trend_mann_kendall" -> ((s, dir) => {
-      val daily = Tables.events(s, dir)
-        .groupBy(col("event_type"), dayofmonth(col("ts")).cast("long").as("day"))
-        .agg(sum(col("value").cast(DecimalType(18, 6))).as("x"))
+      val daily = dailyDec(s, dir)
       val p = daily.toDF("event_type", "day_s", "xs")
         .join(daily.toDF("et2", "day_t", "xt"),
           col("event_type") === col("et2") && col("day_s") < col("day_t"))
@@ -49,7 +45,6 @@ object Round7bQueries {
         .agg(count(lit(1)).as("__g"), sum("t").as("n"),
           sum(col("t") * (col("t") - 1) * (col("t") * 2 + 5)).as("tcorr"))
         .drop("__g")
-      def d(c: org.apache.spark.sql.Column) = c.cast(DoubleType)
       sAgg.join(ties, "event_type")
         .select(col("event_type"), col("n"), col("s").as("mk_s"),
           round(
@@ -79,7 +74,6 @@ object Round7bQueries {
       val ct = st.groupBy("tok").agg(sum("cnt").as("c_t"))
       val ns = st.groupBy(col("source").as("src2")).agg(sum("cnt").as("n_s"))
       val nt = st.agg(sum("cnt").as("n_t"))
-      def d(c: org.apache.spark.sql.Column) = c.cast(DoubleType)
       val terms = cs
         .join(ct, "tok")
         .join(broadcast(ns), col("source") === col("src2"))
@@ -126,7 +120,6 @@ object Round7bQueries {
       val c1 = bg.groupBy(col("w1").as("u1")).agg(count(lit(1)).as("c1"))
       val c2 = bg.groupBy(col("w2").as("u2")).agg(count(lit(1)).as("c2"))
       val n = bg.agg(count(lit(1)).as("n"))
-      def d(c: org.apache.spark.sql.Column) = c.cast(DoubleType)
       c12.where(col("c12") >= 5)
         .join(c1, col("w1") === col("u1"))
         .join(c2, col("w2") === col("u2"))
@@ -153,10 +146,7 @@ object Round7bQueries {
     // libm-drift-exposed past day 22 (the win_macd r8 failure mode).
     "win_ewma_daily" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val daily = Tables.events(s, dir)
-        .groupBy(col("event_type"), dayofmonth(col("ts")).cast("long").as("day"))
-        .agg(sum(col("value").cast(DecimalType(18, 6))).as("x"))
-      def d(c: org.apache.spark.sql.Column) = c.cast(DoubleType)
+      val daily = dailyDec(s, dir)
       val w = Window.partitionBy("event_type").orderBy("day")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       daily
@@ -190,7 +180,6 @@ object Round7bQueries {
         .select(explode(ks).as("k"), col("da"), col("db"))
         .where(col("da") > col("k") && col("db") > col("k"))
         .groupBy("k").agg(count(lit(1)).as("e_k"))
-      def d(c: org.apache.spark.sql.Column) = c.cast(DoubleType)
       nk.join(ek, Seq("k"), "left")
         .select(col("k"), col("n_k"), coalesce(col("e_k"), lit(0L)).as("e_k"),
           when(col("n_k") >= 2,
@@ -213,7 +202,6 @@ object Round7bQueries {
       val cnt = ch.groupBy("lang", "c").agg(count(lit(1)).as("n_c"))
       val tot = cnt.groupBy(col("lang").as("l2"))
         .agg(sum("n_c").as("n"), count(lit(1)).as("n_distinct"))
-      def d(c: org.apache.spark.sql.Column) = c.cast(DoubleType)
       cnt.join(broadcast(tot), col("lang") === col("l2"))
         .select(col("lang"), col("n"), col("n_distinct"),
           round(-(d(col("n_c")) / d(col("n"))) * log(d(col("n_c")) / d(col("n"))), 8)
@@ -228,10 +216,8 @@ object Round7bQueries {
 
   val oracles: Map[String, String] = Map(
 
-    "agg_trend_mann_kendall" -> """
-      |WITH daily AS (SELECT event_type, CAST(day(ts) AS BIGINT) AS day,
-      |    sum(CAST(value AS DECIMAL(18,6))) AS x
-      |  FROM events GROUP BY 1, 2),
+    "agg_trend_mann_kendall" -> s"""
+      |WITH $dailyDecSql,
       |p AS (SELECT a.event_type,
       |    CAST(sum(CAST(sign(b.x - a.x) AS BIGINT)) AS BIGINT) AS s
       |  FROM daily a JOIN daily b
@@ -293,9 +279,7 @@ object Round7bQueries {
       |ORDER BY pmi DESC, w1, w2 LIMIT 25""".stripMargin,
 
     "win_ewma_daily" -> s"""
-      |WITH daily AS (SELECT event_type, CAST(day(ts) AS BIGINT) AS day,
-      |    sum(CAST(value AS DECIMAL(18,6))) AS x
-      |  FROM events GROUP BY 1, 2),
+      |WITH $dailyDecSql,
       |pw(day, w) AS (VALUES
       |    ${EwmaWeights.valuesSql}),
       |j AS (SELECT d.event_type, d.day, d.x,

@@ -13,7 +13,7 @@ import graft.sources.Tables
   * recursive-CTE surface (Spark 4.x WITH RECURSIVE), and
   * month-over-month rank movers on the GlobalRank kernel.
   */
-object Round7cQueries {
+object Round7cQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 
@@ -48,21 +48,13 @@ object Round7cQueries {
           .where(col("a_id") =!= col("b_id"))
           .select(col("a_id"), col("b_id"), cos))
         .select("a_id", "b_id")
-      val cn = cent.select(col("cell").as("pcell"), col("csum"))
-      val probes = aS
-        .withColumn("qv", AnnCodebook.quantize(col("a_v")))
-        .crossJoin(broadcast(cn))
-        .withColumn("sc", AnnCodebook.score(col("qv"), col("csum")))
-        .withColumn("rk", row_number().over(Window.partitionBy("a_id")
-          .orderBy(col("sc").desc, col("pcell").asc)))
-        .where(col("rk") <= 3).select("a_id", "pcell")
+      val probes = AnnCodebook.probeCells(aS, cent)
       val ann10 = top10(probes.join(aS, "a_id")
         .join(e.select(col("cell").as("pcell"), col("vec_id").as("b_id"),
           col("embedding").as("b_v"), col("nrm").as("b_n")), "pcell")
         .where(col("a_id") =!= col("b_id"))
         .select(col("a_id"), col("b_id"), cos))
         .select("a_id", "b_id", "rk")
-      def d(c: org.apache.spark.sql.Column) = c.cast(DoubleType)
       def w(i: org.apache.spark.sql.Column) =
         round(log(lit(2.0)) / log(d(i) + 1), 8).cast(DecimalType(18, 8))
       val dcg = ann10.join(ex10, Seq("a_id", "b_id"))
@@ -96,7 +88,6 @@ object Round7cQueries {
       val per = o.groupBy("nk").agg(count(lit(1)).as("ni"), sum("p").as("si"))
       val wAll = Window.rowsBetween(Window.unboundedPreceding,
         Window.unboundedFollowing)
-      def d(c: org.apache.spark.sql.Column) = c.cast(DoubleType)
       // θ_(-i), θ̄ and the squared deviations as EXACT half-up 1e-8
       // integers (BoundaryGuard r9: (s−si)/(n−ni) terminates whenever
       // n−ni is 2-5-smooth, landing exactly on 8dp half boundaries —
@@ -130,7 +121,6 @@ object Round7cQueries {
     // 12dp-quantized decimal reciprocal sums (reciprocals are ~1e-5 —
     // 12dp keeps 7+ significant digits); AM is the exact decimal sum.
     "agg_power_means" -> ((s, dir) => {
-      def d(c: org.apache.spark.sql.Column) = c.cast(DoubleType)
       Tables.lineitem(s, dir)
         .select(col("l_returnflag"), col("l_extendedprice").as("x"))
         .groupBy("l_returnflag")
@@ -238,12 +228,7 @@ object Round7cQueries {
         |asd AS (SELECT a_id, ev AS a_v, nrm AS a_n
         |  FROM n JOIN ksmp ON n.vec_id = ksmp.a_id),
         |kqs AS (SELECT a_id, qv FROM kq JOIN ksmp ON kq.vec_id = ksmp.a_id),
-        |kpr AS (SELECT a_id, cell AS pcell FROM (
-        |    SELECT q.a_id, c.cell, row_number() OVER (PARTITION BY q.a_id
-        |      ORDER BY ${graft.functions.AnnCodebook.oracleScore("q.qv", "c.csum")} DESC,
-        |        c.cell ASC) AS rn
-        |    FROM kqs q CROSS JOIN ${graft.functions.AnnCodebook.oracleFinalCent} c)
-        |  WHERE rn <= 3),
+        |${graft.functions.AnnCodebook.oracleProbeCells},
         |p AS (SELECT a.a_id, b.vec_id AS b_id, b.cell AS bcell,
         |    list_aggregate(list_transform(list_zip(a.a_v, b.ev), z -> z[1] * z[2]), 'sum')
         |      / (a.a_n * b.nrm) AS cos_sim

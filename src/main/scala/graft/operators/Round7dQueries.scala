@@ -25,22 +25,7 @@ import graft.sources.Tables
   * |customers| × |suppliers|, and cell size = radius guarantees the
   * 3×3 neighborhood is lossless for the radius predicate.
   */
-object Round7dQueries {
-
-  private val duckToks = "list_filter(string_split(text, ' '), x -> x <> '')"
-
-  private def d(c: Column): Column = c.cast(DoubleType)
-
-  /** Daily value sums per event type — exact decimal, calendar-bounded. */
-  private def daily(s: org.apache.spark.sql.SparkSession, dir: String) =
-    Tables.events(s, dir)
-      .groupBy(col("event_type"), dayofmonth(col("ts")).cast("long").as("day"))
-      .agg(sum(col("value").cast(DecimalType(18, 6))).as("x"))
-
-  private val dailySql =
-    """daily AS (SELECT event_type, CAST(day(ts) AS BIGINT) AS day,
-      |    sum(CAST(value AS DECIMAL(18,6))) AS x
-      |  FROM events GROUP BY 1, 2)""".stripMargin
+object Round7dQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 
@@ -53,7 +38,7 @@ object Round7dQueries {
     // (row_number over a total order, avg of the ≤2 middle values), not
     // an engine-specific percentile. Pair stage is C(≤31, 2) per type.
     "agg_theil_sen" -> ((s, dir) => {
-      val dy = daily(s, dir)
+      val dy = dailyDec(s, dir)
       val p = dy.toDF("event_type", "day_s", "xs")
         .join(dy.toDF("et2", "day_t", "xt"),
           col("event_type") === col("et2") && col("day_s") < col("day_t"))
@@ -80,7 +65,7 @@ object Round7dQueries {
     // win_rolling_corr discipline) — one calendar-bounded self-join per
     // lag, no window at all.
     "agg_autocorr_daily" -> ((s, dir) => {
-      val dy = daily(s, dir)
+      val dy = dailyDec(s, dir)
       val a = dy.select(col("event_type"), col("day"), col("x"),
         explode(array(lit(1L), lit(2L), lit(7L))).as("lag"))
       val b = dy.toDF("et2", "day_b", "xb")
@@ -122,7 +107,7 @@ object Round7dQueries {
       def halfUp(num: String, den: String): Column = expr(
         s"CASE WHEN $num >= 0 THEN (2 * $num + $den) div (2 * $den) " +
           s"ELSE -((2 * (-$num) + $den) div (2 * $den)) END")
-      val t = daily(s, dir)
+      val t = dailyDec(s, dir)
         .withColumn("x6",
           (col("x") * 1000000).cast(DecimalType(38, 0)).cast("long"))
         .withColumn("n7", count(lit(1)).over(w))
@@ -293,7 +278,7 @@ object Round7dQueries {
   val oracles: Map[String, String] = Map(
 
     "agg_theil_sen" -> s"""
-      |WITH $dailySql,
+      |WITH $dailyDecSql,
       |p AS (SELECT a.event_type, a.day AS day_s, b.day AS day_t,
       |    round(CAST(b.x - a.x AS DOUBLE)
       |      / CAST(b.day - a.day AS DOUBLE), 8) AS slope
@@ -310,7 +295,7 @@ object Round7dQueries {
       |GROUP BY event_type ORDER BY event_type""".stripMargin,
 
     "agg_autocorr_daily" -> s"""
-      |WITH $dailySql,
+      |WITH $dailyDecSql,
       |lags AS (SELECT unnest([1, 2, 7]) AS lag),
       |m AS (SELECT a.event_type, CAST(lag AS BIGINT) AS lag,
       |    CAST(count(*) AS BIGINT) AS n,
@@ -337,7 +322,7 @@ object Round7dQueries {
       |FROM m ORDER BY event_type, lag""".stripMargin,
 
     "win_seasonal_decompose" -> s"""
-      |WITH $dailySql,
+      |WITH $dailyDecSql,
       |t AS (SELECT event_type, day,
       |    CAST(x * 1000000 AS BIGINT) AS x6,
       |    CASE WHEN CAST(count(*) OVER w AS BIGINT) = 7 THEN

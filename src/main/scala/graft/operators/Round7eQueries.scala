@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DecimalType
 
 import graft.QueryUtils._
 import graft.sources.Tables
@@ -25,20 +24,7 @@ import graft.sources.Tables
   * is one shingle-keyed window pass (the dedup family's shuffle key),
   * corpus-linear.
   */
-object Round7eQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
-
-  /** Daily value sums per event type — exact decimal, calendar-bounded. */
-  private def daily(s: org.apache.spark.sql.SparkSession, dir: String) =
-    Tables.events(s, dir)
-      .groupBy(col("event_type"), dayofmonth(col("ts")).cast("long").as("day"))
-      .agg(sum(col("value").cast(DecimalType(18, 6))).as("x"))
-
-  private val dailySql =
-    """daily AS (SELECT event_type, CAST(day(ts) AS BIGINT) AS day,
-      |    sum(CAST(value AS DECIMAL(18,6))) AS x
-      |  FROM events GROUP BY 1, 2)""".stripMargin
+object Round7eQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 
@@ -146,7 +132,7 @@ object Round7eQueries {
     // changepoint is the earliest argmax day, and the approximate
     // significance is 2·exp(−6K²/(n³+n²)).
     "agg_pettitt_changepoint" -> ((s, dir) => {
-      val dy = daily(s, dir)
+      val dy = dailyDec(s, dir)
       val r = dy.toDF("event_type", "day_i", "xi")
         .join(dy.toDF("et2", "day_j", "xj"), col("event_type") === col("et2"))
         .groupBy("event_type", "day_i")
@@ -269,7 +255,7 @@ object Round7eQueries {
       |ORDER BY o_orderpriority""".stripMargin,
 
     "agg_pettitt_changepoint" -> s"""
-      |WITH $dailySql,
+      |WITH $dailyDecSql,
       |r AS (SELECT a.event_type, a.day AS day_i,
       |    CAST(sum(CASE WHEN a.x > b.x THEN 1
       |      WHEN a.x < b.x THEN -1 ELSE 0 END) AS BIGINT) AS r_i

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.QueryUtils._
 import graft.sources.Tables
@@ -21,21 +20,7 @@ import graft.sources.Tables
   * unreachable. Doubles appear only as a final single division of
   * identical exact integers.
   */
-object Round7fQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
-
-  /** Daily value sums per event type in micro-units (exact long). */
-  private def dailyMicro(s: org.apache.spark.sql.SparkSession, dir: String) =
-    Tables.events(s, dir)
-      .groupBy(col("event_type"), dayofmonth(col("ts")).cast("long").as("day"))
-      .agg((sum(col("value").cast(DecimalType(18, 6))) * 1000000)
-        .cast("long").as("xu"))
-
-  private val dailyMicroSql =
-    """daily AS (SELECT event_type, CAST(day(ts) AS BIGINT) AS day,
-      |    CAST(sum(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS xu
-      |  FROM events GROUP BY 1, 2)""".stripMargin
+object Round7fQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 
@@ -140,10 +125,7 @@ object Round7fQueries {
     // RANGE frame on day, so calendar gaps cannot misalign the window;
     // bands only where the full 7-day neighborhood exists.
     "win_bollinger_bands" -> ((s, dir) => {
-      val base = Tables.events(s, dir)
-        .groupBy(col("event_type"), dayofmonth(col("ts")).cast("long").as("day"))
-        .agg((sum(col("value").cast(DecimalType(18, 6))) * 100)
-          .cast(DecimalType(18, 0)).cast("long").as("xc"))
+      val base = dailyCenti(s, dir)
       val w = Window.partitionBy("event_type").orderBy("day").rangeBetween(-3, 3)
       val t = base
         .withColumn("n7", count(lit(1)).over(w))

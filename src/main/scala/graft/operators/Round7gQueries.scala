@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DecimalType
 
 import graft.QueryUtils._
 import graft.sources.Tables
@@ -17,9 +17,7 @@ import graft.sources.Tables
   * walk counts and gain/loss sums are exact longs, and doubles appear
   * only in final fixed-order expressions over identical exact inputs.
   */
-object Round7gQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
+object Round7gQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 
@@ -75,10 +73,7 @@ object Round7gQueries {
     // the flat-series edge (Σlosses = 0) pins RSI to 100 explicitly on
     // both engines rather than riding IEEE ∞ semantics.
     "win_rsi" -> ((s, dir) => {
-      val base = Tables.events(s, dir)
-        .groupBy(col("event_type"), dayofmonth(col("ts")).cast("long").as("day"))
-        .agg((sum(col("value").cast(DecimalType(18, 6))) * 1000000)
-          .cast("long").as("xu"))
+      val base = dailyMicro(s, dir)
       val wo = Window.partitionBy("event_type").orderBy("day")
       val wf = wo.rowsBetween(-13, Window.currentRow)
       base

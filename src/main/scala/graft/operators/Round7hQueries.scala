@@ -3,10 +3,9 @@ package graft.operators
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DecimalType
 
 import graft.QueryUtils._
-import graft.sources.Tables
 
 /** Round-7 eighth wave: tail-risk (historical VaR / CVaR), seasonal
   * Mann-Kendall trend, rescaled-range Hurst exponent, and STL-style
@@ -19,28 +18,7 @@ import graft.sources.Tables
   * multi-term closed forms (OLS slope, MK z) are single fixed-order
   * expressions over per-group pivoted scalars, never row-order sums.
   */
-object Round7hQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
-
-  /** Daily value sums per event type in micro-units (exact long). */
-  private def dailyMicro(s: org.apache.spark.sql.SparkSession, dir: String) =
-    Tables.events(s, dir)
-      .groupBy(col("event_type"), dayofmonth(col("ts")).cast("long").as("day"))
-      .agg((sum(col("value").cast(DecimalType(18, 6))) * 1000000)
-        .cast("long").as("xu"))
-
-  private val dailyMicroSql =
-    """daily AS (SELECT event_type, CAST(day(ts) AS BIGINT) AS day,
-      |    CAST(sum(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS xu
-      |  FROM events GROUP BY 1, 2)""".stripMargin
-
-  /** Daily value sums in centi-units (squares stay inside int64). */
-  private val dailyCentiSql =
-    """daily AS (SELECT event_type, CAST(day(ts) AS BIGINT) AS day,
-      |    CAST(CAST(sum(CAST(value AS DECIMAL(18,6))) * 100
-      |      AS DECIMAL(18,0)) AS BIGINT) AS xc
-      |  FROM events GROUP BY 1, 2)""".stripMargin
+object Round7hQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 
@@ -109,10 +87,7 @@ object Round7hQueries {
     // back to an exact integer sum before the mean; the 3-point slope
     // is a pivoted fixed-order closed form, never a row-order sum.
     "agg_hurst_rs" -> ((s, dir) => {
-      val base = Tables.events(s, dir)
-        .groupBy(col("event_type"), dayofmonth(col("ts")).cast("long").as("day"))
-        .agg((sum(col("value").cast(DecimalType(18, 6))) * 100)
-          .cast(DecimalType(18, 0)).cast("long").as("xc"))
+      val base = dailyCenti(s, dir)
         .select(col("event_type"), col("day"), col("xc"),
           explode(array(lit(5L), lit(10L), lit(15L))).as("sz"))
         .withColumn("blk", expr("(day - 1) div sz"))

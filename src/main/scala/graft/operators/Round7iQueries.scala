@@ -1,9 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.QueryUtils._
 import graft.sources.Tables
@@ -19,21 +17,7 @@ import graft.sources.Tables
   * int64; each output double is one fixed-order expression over
   * identical exact integers.
   */
-object Round7iQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
-
-  /** Daily value sums per event type in micro-units (exact long). */
-  private def dailyMicro(s: org.apache.spark.sql.SparkSession, dir: String) =
-    Tables.events(s, dir)
-      .groupBy(col("event_type"), dayofmonth(col("ts")).cast("long").as("day"))
-      .agg((sum(col("value").cast(DecimalType(18, 6))) * 1000000)
-        .cast("long").as("xu"))
-
-  private val dailyMicroSql =
-    """daily AS (SELECT event_type, CAST(day(ts) AS BIGINT) AS day,
-      |    CAST(sum(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS xu
-      |  FROM events GROUP BY 1, 2)""".stripMargin
+object Round7iQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 
@@ -225,10 +209,10 @@ object Round7iQueries {
       |  CAST(du AS DOUBLE) / 30000.0 AS d_pct
       |FROM s3 WHERE n3 = 3 ORDER BY event_type, day""".stripMargin,
 
-    "agg_cohens_kappa" -> """
+    "agg_cohens_kappa" -> s"""
       |WITH r AS (SELECT lang,
       |    CASE WHEN n_chars >= 300 THEN 1 ELSE 0 END AS a,
-      |    CASE WHEN len(list_filter(string_split(text, ' '), x -> x <> ''))
+      |    CASE WHEN len($duckToks)
       |      >= 55 THEN 1 ELSE 0 END AS b
       |  FROM documents),
       |g AS (SELECT lang, CAST(count(*) AS BIGINT) AS n,

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DecimalType
 
 import graft.QueryUtils._
 import graft.sources.Tables
@@ -18,34 +18,7 @@ import graft.sources.Tables
   * sum (Shannon terms) is 8dp-quantized and extracted back to an
   * integer unit sum; closed forms are single fixed-order expressions.
   */
-object Round7jQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
-
-  /** Daily value sums per event type in centi-units (squares fit i64). */
-  private def dailyCenti(s: org.apache.spark.sql.SparkSession, dir: String) =
-    Tables.events(s, dir)
-      .groupBy(col("event_type"), dayofmonth(col("ts")).cast("long").as("day"))
-      .agg((sum(col("value").cast(DecimalType(18, 6))) * 100)
-        .cast(DecimalType(18, 0)).cast("long").as("xc"))
-
-  private val dailyCentiSql =
-    """daily AS (SELECT event_type, CAST(day(ts) AS BIGINT) AS day,
-      |    CAST(CAST(sum(CAST(value AS DECIMAL(18,6))) * 100
-      |      AS DECIMAL(18,0)) AS BIGINT) AS xc
-      |  FROM events GROUP BY 1, 2)""".stripMargin
-
-  /** Daily micro-unit sums (for the runs test's exact median compare). */
-  private def dailyMicro(s: org.apache.spark.sql.SparkSession, dir: String) =
-    Tables.events(s, dir)
-      .groupBy(col("event_type"), dayofmonth(col("ts")).cast("long").as("day"))
-      .agg((sum(col("value").cast(DecimalType(18, 6))) * 1000000)
-        .cast("long").as("xu"))
-
-  private val dailyMicroSql =
-    """daily AS (SELECT event_type, CAST(day(ts) AS BIGINT) AS day,
-      |    CAST(sum(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS xu
-      |  FROM events GROUP BY 1, 2)""".stripMargin
+object Round7jQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 
@@ -130,7 +103,7 @@ object Round7jQueries {
     "llm_burstiness" -> ((s, dir) => {
       val perDoc = Tables.documents(s, dir)
         .select(col("doc_id"),
-          explode(graft.functions.TextNGrams.mkTokenList(col("text"))).as("tok"))
+          explode(toks).as("tok"))
         .groupBy("tok", "doc_id").agg(count(lit(1)).as("c"))
       val perTok = perDoc.groupBy("tok")
         .agg(count(lit(1)).as("df"), sum("c").as("n_total"),

@@ -31,7 +31,7 @@ import graft.sources.Tables
   *    (sample count + mean doc length), deterministic via the shared
   *    [[graft.QueryUtils.hash60]] idiom and hash-matched.
   */
-object Round8Queries {
+object Round8Queries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
@@ -26,22 +26,7 @@ import graft.sources.Tables
   * `pow` on doubles drifts by 1 ulp across libm builds past day 22,
   * so win_macd now has no float link at all (see its comment).
   */
-object Round8bQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
-
-  /** Daily value sums per event type in centi-units. */
-  private def dailyCenti(s: SparkSession, dir: String): DataFrame =
-    Tables.events(s, dir)
-      .groupBy(col("event_type"), dayofmonth(col("ts")).cast("long").as("day"))
-      .agg((sum(col("value").cast(DecimalType(18, 6))) * 100)
-        .cast(DecimalType(18, 0)).cast("long").as("xc"))
-
-  private val dailyCentiSql =
-    """daily AS (SELECT event_type, CAST(day(ts) AS BIGINT) AS day,
-      |    CAST(CAST(sum(CAST(value AS DECIMAL(18,6))) * 100
-      |      AS DECIMAL(18,0)) AS BIGINT) AS xc
-      |  FROM events GROUP BY 1, 2)""".stripMargin
+object Round8bQueries extends graft.QueryFamily {
 
   /** win_macd truncated-EWMA lookback: weights cover offsets 0..L. */
   private val macdL = 25
@@ -324,7 +309,7 @@ object Round8bQueries {
       // wash-to-worse — the corpus-token-sized checkpoint write costs
       // more than the repeated map stage + windows it saves here.
       val docTok = Tables.documents(s, dir)
-        .select(col("doc_id"), posexplode(graft.functions.TextNGrams.mkTokenList(col("text"))).as(Seq("pos", "tok")))
+        .select(col("doc_id"), posexplode(toks).as(Seq("pos", "tok")))
       val stop = docTok.select("doc_id", "tok").distinct()
         .groupBy("tok").agg(count(lit(1)).as("df"))
         .orderBy(col("df").desc, col("tok").asc).limit(20)
@@ -542,10 +527,10 @@ object Round8bQueries {
         |SELECT a, b, cn, CAST(ra_sum AS DOUBLE) / 1e8 AS ra
         |FROM ne ORDER BY ra_sum DESC, a, b LIMIT 20""".stripMargin),
 
-    "llm_rake_keyphrases" -> """
+    "llm_rake_keyphrases" -> s"""
       |WITH dt AS (SELECT doc_id, sym[i] AS tok, i AS pos
       |  FROM (SELECT doc_id,
-      |          list_filter(string_split(text, ' '), x -> x <> '') AS sym
+      |          $duckToks AS sym
       |        FROM documents) sy,
       |       unnest(generate_series(1, len(sym))) AS u(i)),
       |stop AS (SELECT tok FROM (SELECT DISTINCT doc_id, tok FROM dt)

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
@@ -22,22 +21,7 @@ import graft.sources.Tables
   * sums (per-group squared-term reductions over ≤ k rows) are
   * 4/6dp-rounded decimals, order-free by construction.
   */
-object Round8cQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
-
-  /** Daily value sums per event type in centi-units. */
-  private def dailyCenti(s: SparkSession, dir: String) =
-    Tables.events(s, dir)
-      .groupBy(col("event_type"), dayofmonth(col("ts")).cast("long").as("day"))
-      .agg((sum(col("value").cast(DecimalType(18, 6))) * 100)
-        .cast(DecimalType(18, 0)).cast("long").as("xc"))
-
-  private val dailyCentiSql =
-    """daily AS (SELECT event_type, CAST(day(ts) AS BIGINT) AS day,
-      |    CAST(CAST(sum(CAST(value AS DECIMAL(18,6))) * 100
-      |      AS DECIMAL(18,0)) AS BIGINT) AS xc
-      |  FROM events GROUP BY 1, 2)""".stripMargin
+object Round8cQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 
@@ -164,9 +148,7 @@ object Round8cQueries {
     "llm_readability_fk" -> ((s, dir) => {
       val doc = Tables.documents(s, dir).select(col("lang"),
           nTok.as("w"),
-          greatest(lit(1L), (length(col("text"))
-            - length(regexp_replace(col("text"), "[.!?]", ""))).cast("long"))
-            .as("sent"),
+          nSent.as("sent"),
           (length(regexp_replace(col("text"), "[aeiouyAEIOUY]+", "#"))
             - length(regexp_replace(col("text"), "[aeiouyAEIOUY]+", "")))
             .cast("long").as("syl"))
@@ -279,12 +261,11 @@ object Round8cQueries {
       |    AS chi2_f
       |FROM tot""".stripMargin,
 
-    "llm_readability_fk" -> """
+    "llm_readability_fk" -> s"""
       |WITH doc AS (SELECT lang,
-      |    CAST(len(list_filter(string_split(text, ' '), x -> x <> ''))
+      |    CAST(len($duckToks)
       |      AS BIGINT) AS w,
-      |    greatest(1, CAST(length(text)
-      |      - length(regexp_replace(text, '[.!?]', '', 'g')) AS BIGINT))
+      |    $nSentSql
       |      AS sent,
       |    CAST(length(regexp_replace(text, '[aeiouyAEIOUY]+', '#', 'g'))
       |      - length(regexp_replace(text, '[aeiouyAEIOUY]+', '', 'g'))

@@ -1,12 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DecimalType
 
 import graft.QueryUtils._
-import graft.sources.Tables
 
 /** Round-8 fourth wave: range-based volatility (Parkinson), the
   * Ljung–Box portmanteau autocorrelation test, local-bridge detection
@@ -20,22 +19,7 @@ import graft.sources.Tables
   * double expression over exact decimal covariances (n·x − S products
   * at DECIMAL(38,0), never int64).
   */
-object Round8dQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
-
-  /** Daily value sums per event type in centi-units. */
-  private def dailyCenti(s: SparkSession, dir: String) =
-    Tables.events(s, dir)
-      .groupBy(col("event_type"), dayofmonth(col("ts")).cast("long").as("day"))
-      .agg((sum(col("value").cast(DecimalType(18, 6))) * 100)
-        .cast(DecimalType(18, 0)).cast("long").as("xc"))
-
-  private val dailyCentiSql =
-    """daily AS (SELECT event_type, CAST(day(ts) AS BIGINT) AS day,
-      |    CAST(CAST(sum(CAST(value AS DECIMAL(18,6))) * 100
-      |      AS DECIMAL(18,0)) AS BIGINT) AS xc
-      |  FROM events GROUP BY 1, 2)""".stripMargin
+object Round8dQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 
@@ -45,10 +29,8 @@ object Round8dQueries {
     // mean. Positive-low days only (ln domain); per-day ln² terms are
     // 8dp-quantized decimals so the cross-day sum is order-free.
     "win_parkinson_vol" -> ((s, dir) => {
-      val hl = Tables.events(s, dir)
-        .groupBy(col("event_type"), dayofmonth(col("ts")).cast("long").as("day"))
-        .agg(max(col("value").cast(DecimalType(18, 6))).as("hi"),
-          min(col("value").cast(DecimalType(18, 6))).as("lo"))
+      val hl = dailyAgg(s, dir, max(col("value").cast(DecimalType(18, 6))).as("hi"),
+        min(col("value").cast(DecimalType(18, 6))).as("lo"))
         .where(col("lo") > 0)
       val term = round(
         log(d(col("hi")) / d(col("lo"))) * log(d(col("hi")) / d(col("lo"))), 8)

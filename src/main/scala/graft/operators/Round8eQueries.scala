@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
@@ -22,9 +22,7 @@ import graft.sources.Tables
   * k per-type χ² terms are 6dp-quantized before the order-free k-row
   * decimal sum (the Kruskal–Wallis idiom).
   */
-object Round8eQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
+object Round8eQueries extends graft.QueryFamily {
 
   /** Distinct-value table of `value` with per-arm counts for a 2-arm
     * comparison, plus inclusive running sums of both arms over the

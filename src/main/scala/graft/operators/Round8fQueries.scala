@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
 
 import graft.QueryUtils._
 import graft.sources.Tables
@@ -20,19 +19,7 @@ import graft.sources.Tables
   * order-dependent float sums anywhere. Greedy character-class regexes
   * behave identically in Java regex and DuckDB's RE2.
   */
-object Round8fQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
-
-  /** Sentence-ender count, min 1 per doc (the FK idiom). */
-  private def nSent: Column =
-    greatest(lit(1L), (length(col("text"))
-      - length(regexp_replace(col("text"), "[.!?]", ""))).cast("long"))
-
-  private val nSentSql =
-    """greatest(1, CAST(length(text)
-      |      - length(regexp_replace(text, '[.!?]', '', 'g')) AS BIGINT))"""
-      .stripMargin
+object Round8fQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 
@@ -128,7 +115,7 @@ object Round8fQueries {
 
     "llm_coleman_liau" -> s"""
       |WITH doc AS (SELECT lang,
-      |    CAST(len(list_filter(string_split(text, ' '), x -> x <> ''))
+      |    CAST(len($duckToks)
       |      AS BIGINT) AS w,
       |    $nSentSql AS sent,
       |    CAST(length(text)
@@ -149,7 +136,7 @@ object Round8fQueries {
 
     "llm_lix_rix" -> s"""
       |WITH doc AS (SELECT lang,
-      |    CAST(len(list_filter(string_split(text, ' '), x -> x <> ''))
+      |    CAST(len($duckToks)
       |      AS BIGINT) AS w,
       |    $nSentSql AS sent,
       |    CAST(len(list_filter(string_split(text, ' '), x -> length(x) > 6))
@@ -184,7 +171,7 @@ object Round8fQueries {
 
     "llm_gunning_fog" -> s"""
       |WITH doc AS (SELECT lang,
-      |    CAST(len(list_filter(string_split(text, ' '), x -> x <> ''))
+      |    CAST(len($duckToks)
       |      AS BIGINT) AS w,
       |    $nSentSql AS sent,
       |    CAST(len(list_filter(string_split(text, ' '),

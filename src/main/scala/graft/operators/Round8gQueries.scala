@@ -1,11 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
 
 import graft.QueryUtils._
-import graft.sources.Tables
 
 /** Round-8 seventh wave: the remaining classic link-prediction indices
   * (Jaccard, Salton/cosine) beside Adamic–Adar / resource-allocation /
@@ -20,41 +18,7 @@ import graft.sources.Tables
   * checkpoints; every displayed ratio is one IEEE double op chain from
   * exact longs, round(…, 6).
   */
-object Round8gQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
-
-  /** Wedge-connected candidate pairs of the supplier graph with common
-    * neighbor count and endpoint degrees, edges removed — the shared
-    * base of the link-prediction index family (Σ deg² bound). */
-  private def candidatePairs(s: SparkSession, dir: String, tag: String) = {
-    val e = graft.tools.Materialize.eager(s"$tag.edges",
-      GraphStatsQueries.supplierEdges(s, dir))
-    val nb = e.select(col("sa").as("c"), col("sb").as("x"))
-      .union(e.select(col("sb").as("c"), col("sa").as("x")))
-    val deg = nb.groupBy(col("c").as("v")).agg(count(lit(1)).as("deg"))
-    val pairs = nb.select(col("c"), col("x").as("a"))
-      .join(nb.select(col("c").as("c2"), col("x").as("b")),
-        col("c") === col("c2") && col("a") < col("b"))
-      .groupBy("a", "b").agg(count(lit(1)).as("cn"))
-    pairs
-      .join(e, pairs("a") === e("sa") && pairs("b") === e("sb"), "left_anti")
-      .join(deg.toDF("va", "deg_a"), col("a") === col("va"))
-      .join(deg.toDF("vb", "deg_b"), col("b") === col("vb"))
-      .select(col("a"), col("b"), col("cn"), col("deg_a"), col("deg_b"))
-  }
-
-  private val candidateSql: String =
-    """nb AS (SELECT sa AS c, sb AS x FROM e
-      |       UNION ALL SELECT sb AS c, sa AS x FROM e),
-      |deg AS (SELECT c AS v, CAST(count(*) AS BIGINT) AS deg
-      |  FROM nb GROUP BY c),
-      |p AS (SELECT a.x AS a, b.x AS b, CAST(count(*) AS BIGINT) AS cn
-      |  FROM nb a JOIN nb b ON a.c = b.c AND a.x < b.x GROUP BY 1, 2),
-      |cand AS (SELECT p.a, p.b, p.cn, da.deg AS deg_a, db.deg AS deg_b
-      |  FROM p LEFT JOIN e ON p.a = e.sa AND p.b = e.sb
-      |  JOIN deg da ON p.a = da.v JOIN deg db ON p.b = db.v
-      |  WHERE e.sa IS NULL)""".stripMargin
+object Round8gQueries extends graft.QueryFamily {
 
   /** 4-hop multi-source BFS min-distance table over the simhash dup
     * graph (the harmonic-centrality skeleton, distinct memo names). */
@@ -96,7 +60,7 @@ object Round8gQueries {
     // non-edges; the score sorts by its EXACT half-up 1e-8 integer
     // image (monotone in the rational), top-20.
     "graph_jaccard_coeff" -> ((s, dir) => {
-      val cand = candidatePairs(s, dir, "jacc")
+      val cand = GraphStatsQueries.candidatePairs(s, dir, "jacc")
       cand
         .withColumn("den", col("deg_a") + col("deg_b") - col("cn"))
         .withColumn("ju",
@@ -113,7 +77,7 @@ object Round8gQueries {
     // image of S² = CN²/(deg a·deg b) (squares preserve the order of
     // non-negatives), displays one IEEE sqrt from exact longs.
     "graph_salton_index" -> ((s, dir) => {
-      val cand = candidatePairs(s, dir, "salton")
+      val cand = GraphStatsQueries.candidatePairs(s, dir, "salton")
       cand
         .withColumn("su", expr(
           "(2 * 1000000000000 * cn * cn + deg_a * deg_b) div (2 * deg_a * deg_b)"))
@@ -161,7 +125,7 @@ object Round8gQueries {
   val oracles: Map[String, String] = Map(
 
     "graph_jaccard_coeff" -> ("WITH " + GraphStatsQueries.edgesSql + ",\n" +
-      candidateSql +
+      GraphStatsQueries.candidateSql +
       """,
         |ju AS (SELECT a, b, cn, deg_a, deg_b,
         |    (2 * 100000000 * cn + (deg_a + deg_b - cn))
@@ -171,7 +135,7 @@ object Round8gQueries {
         |FROM ju ORDER BY ju DESC, a, b LIMIT 20""".stripMargin),
 
     "graph_salton_index" -> ("WITH " + GraphStatsQueries.edgesSql + ",\n" +
-      candidateSql +
+      GraphStatsQueries.candidateSql +
       """,
         |su AS (SELECT a, b, cn, deg_a, deg_b,
         |    (2 * 1000000000000 * cn * cn + deg_a * deg_b)

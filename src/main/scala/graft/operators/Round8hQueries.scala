@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DecimalType
 
 import graft.QueryUtils._
 import graft.sources.Tables
@@ -21,9 +21,7 @@ import graft.sources.Tables
   * window); TRIX chains three exact-binary-base (1.25) EWMAs with
   * 6dp-quantized intermediates (the MACD discipline).
   */
-object Round8hQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
+object Round8hQueries extends graft.QueryFamily {
 
   /** Daily (hi, lo, close) bars per event type in exact centi-units. */
   private def dailyBars(s: SparkSession, dir: String) = {
@@ -51,20 +49,6 @@ object Round8hQueries {
       |            ORDER BY ts DESC, event_id DESC) AS rd
       |        FROM events) b
       |  GROUP BY 1, 2)""".stripMargin
-
-  /** Daily close sums per event type in centi-units (the shared daily
-    * series of the r8 indicator family). */
-  private def dailyCenti(s: SparkSession, dir: String) =
-    Tables.events(s, dir)
-      .groupBy(col("event_type"), dayofmonth(col("ts")).cast("long").as("day"))
-      .agg((sum(col("value").cast(DecimalType(18, 6))) * 100)
-        .cast(DecimalType(18, 0)).cast("long").as("xc"))
-
-  private val dailyCentiSql =
-    """daily AS (SELECT event_type, CAST(day(ts) AS BIGINT) AS day,
-      |    CAST(CAST(sum(CAST(value AS DECIMAL(18,6))) * 100
-      |      AS DECIMAL(18,0)) AS BIGINT) AS xc
-      |  FROM events GROUP BY 1, 2)""".stripMargin
 
   val queries: Map[String, QFn] = Map(
 

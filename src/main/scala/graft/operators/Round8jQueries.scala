@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DecimalType
 
 import graft.QueryUtils._
 import graft.sources.Tables
@@ -20,9 +20,7 @@ import graft.sources.Tables
   * division; Hellinger's per-cell √(cnt·cnt) is IEEE-exact sqrt of an
   * exact integer product, 8dp-rounded then decimal-summed.
   */
-object Round8jQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
+object Round8jQueries extends graft.QueryFamily {
 
   /** Complete source × lang grid with per-cell doc counts, per-source
     * and per-lang totals and the corpus total (zero cells kept — the

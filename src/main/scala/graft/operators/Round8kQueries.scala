@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DecimalType
 
 import graft.QueryUtils._
 import graft.sources.Tables
@@ -20,9 +20,7 @@ import graft.sources.Tables
   * int64) to one final division; VWAP divides two exact decimal
   * running sums once per row.
   */
-object Round8kQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
+object Round8kQueries extends graft.QueryFamily {
 
   /** Daily (hi, lo, close, volume) bars per event type in exact
     * centi-units (same construction as Round8h's dailyBars, plus the

@@ -1,9 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
 
 import graft.QueryUtils._
 import graft.sources.Tables
@@ -19,40 +17,7 @@ import graft.sources.Tables
   * triangle participation counts ride the same a<b<c wedge-close
   * enumeration as graph_triangles (Σ deg² bound, no all-pairs).
   */
-object Round8lQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
-
-  /** Wedge-connected non-edge candidate pairs with endpoint degrees
-    * (same construction as Round8g's link-prediction base). */
-  private def candidatePairs(s: SparkSession, dir: String, tag: String) = {
-    val e = graft.tools.Materialize.eager(s"$tag.edges",
-      GraphStatsQueries.supplierEdges(s, dir))
-    val nb = e.select(col("sa").as("c"), col("sb").as("x"))
-      .union(e.select(col("sb").as("c"), col("sa").as("x")))
-    val deg = nb.groupBy(col("c").as("v")).agg(count(lit(1)).as("deg"))
-    val pairs = nb.select(col("c"), col("x").as("a"))
-      .join(nb.select(col("c").as("c2"), col("x").as("b")),
-        col("c") === col("c2") && col("a") < col("b"))
-      .groupBy("a", "b").agg(count(lit(1)).as("cn"))
-    pairs
-      .join(e, pairs("a") === e("sa") && pairs("b") === e("sb"), "left_anti")
-      .join(deg.toDF("va", "deg_a"), col("a") === col("va"))
-      .join(deg.toDF("vb", "deg_b"), col("b") === col("vb"))
-      .select(col("a"), col("b"), col("cn"), col("deg_a"), col("deg_b"))
-  }
-
-  private val candidateSql: String =
-    """nb AS (SELECT sa AS c, sb AS x FROM e
-      |       UNION ALL SELECT sb AS c, sa AS x FROM e),
-      |deg AS (SELECT c AS v, CAST(count(*) AS BIGINT) AS deg
-      |  FROM nb GROUP BY c),
-      |p AS (SELECT a.x AS a, b.x AS b, CAST(count(*) AS BIGINT) AS cn
-      |  FROM nb a JOIN nb b ON a.c = b.c AND a.x < b.x GROUP BY 1, 2),
-      |cand AS (SELECT p.a, p.b, p.cn, da.deg AS deg_a, db.deg AS deg_b
-      |  FROM p LEFT JOIN e ON p.a = e.sa AND p.b = e.sb
-      |  JOIN deg da ON p.a = da.v JOIN deg db ON p.b = db.v
-      |  WHERE e.sa IS NULL)""".stripMargin
+object Round8lQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 
@@ -62,7 +27,7 @@ object Round8lQueries {
     // judged against. Top-20 by the EXACT integer product key
     // (pa desc, a, b); no float enters the ordering.
     "graph_pref_attachment" -> ((s, dir) =>
-      candidatePairs(s, dir, "pa8l")
+      GraphStatsQueries.candidatePairs(s, dir, "pa8l")
         .select(col("a"), col("b"), col("cn"), col("deg_a"), col("deg_b"),
           (col("deg_a") * col("deg_b")).as("pa"))
         .orderBy(col("pa").desc, col("a"), col("b"))
@@ -150,7 +115,7 @@ object Round8lQueries {
   val oracles: Map[String, String] = Map(
 
     "graph_pref_attachment" ->
-      ("WITH " + GraphStatsQueries.edgesSql + ",\n" + candidateSql + """
+      ("WITH " + GraphStatsQueries.edgesSql + ",\n" + GraphStatsQueries.candidateSql + """
       |SELECT a, b, cn, deg_a, deg_b, deg_a * deg_b AS pa
       |FROM cand ORDER BY pa DESC, a, b LIMIT 20""").stripMargin,
 

@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
 
 import graft.QueryUtils._
 import graft.sources.Tables
@@ -18,21 +17,7 @@ import graft.sources.Tables
   * sub-ulp libm variance is absorbed by the 4-6dp display rounding
   * (the llm_zipf_slope / Bartlett precedent, 3-SF sweep-verified).
   */
-object Round8mQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
-
-  /** Sentence-ender count, min 1 per doc (the FK idiom). */
-  private def nSent: Column =
-    greatest(lit(1L), (length(col("text"))
-      - length(regexp_replace(col("text"), "[.!?]", ""))).cast("long"))
-
-  private val nSentSql =
-    """greatest(1, CAST(length(text)
-      |      - length(regexp_replace(text, '[.!?]', '', 'g')) AS BIGINT))"""
-      .stripMargin
-
-  private val duckToks = "list_filter(string_split(text, ' '), x -> x <> '')"
+object Round8mQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 
@@ -86,7 +71,7 @@ object Round8mQueries {
     // table — the shuffle scales with vocabulary, not documents.
     "llm_lexical_richness" -> ((s, dir) => {
       val tok = Tables.documents(s, dir)
-        .select(col("lang"), explode(graft.functions.TextNGrams.mkTokenList(col("text"))).as("token"))
+        .select(col("lang"), explode(toks).as("token"))
       val freq = tok.groupBy("lang", "token").agg(count(lit(1)).as("cnt"))
       freq.groupBy("lang")
         .agg(sum("cnt").as("n_tokens"), count(lit(1)).as("vocab"))

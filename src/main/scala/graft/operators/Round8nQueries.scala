@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DecimalType
 
 import graft.QueryUtils._
 import graft.sources.Tables
@@ -20,9 +20,7 @@ import graft.sources.Tables
   * withRunningSums prefix token counts (zero randomness); DW is a
   * ratio of integer (scaled-residual) sums in decimal(38).
   */
-object Round8nQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
+object Round8nQueries extends graft.QueryFamily {
 
   /** (hits, nVecs): probe-top10 rows that are exact-top10 relevant,
     * as (a_id, rk) — the shared base of MRR/MAP (the llm_ann_ndcg
@@ -48,14 +46,7 @@ object Round8nQueries {
         .where(col("a_id") =!= col("b_id"))
         .select(col("a_id"), col("b_id"), cos))
       .select("a_id", "b_id")
-    val cn = cent.select(col("cell").as("pcell"), col("csum"))
-    val probes = aS
-      .withColumn("qv", AnnCodebook.quantize(col("a_v")))
-      .crossJoin(broadcast(cn))
-      .withColumn("sc", AnnCodebook.score(col("qv"), col("csum")))
-      .withColumn("rk", row_number().over(Window.partitionBy("a_id")
-        .orderBy(col("sc").desc, col("pcell").asc)))
-      .where(col("rk") <= 3).select("a_id", "pcell")
+    val probes = AnnCodebook.probeCells(aS, cent)
     val ann10 = top10(probes.join(aS, "a_id")
       .join(e.select(col("cell").as("pcell"), col("vec_id").as("b_id"),
         col("embedding").as("b_v"), col("nrm").as("b_n")), "pcell")
@@ -83,12 +74,7 @@ object Round8nQueries {
         |asd AS (SELECT a_id, ev AS a_v, nrm AS a_n
         |  FROM n JOIN ksmp ON n.vec_id = ksmp.a_id),
         |kqs AS (SELECT a_id, qv FROM kq JOIN ksmp ON kq.vec_id = ksmp.a_id),
-        |kpr AS (SELECT a_id, cell AS pcell FROM (
-        |    SELECT q.a_id, c.cell, row_number() OVER (PARTITION BY q.a_id
-        |      ORDER BY ${graft.functions.AnnCodebook.oracleScore("q.qv", "c.csum")} DESC,
-        |        c.cell ASC) AS rn
-        |    FROM kqs q CROSS JOIN ${graft.functions.AnnCodebook.oracleFinalCent} c)
-        |  WHERE rn <= 3),
+        |${graft.functions.AnnCodebook.oracleProbeCells},
         |p AS (SELECT a.a_id, b.vec_id AS b_id, b.cell AS bcell,
         |    list_aggregate(list_transform(list_zip(a.a_v, b.ev), z -> z[1] * z[2]), 'sum')
         |      / (a.a_n * b.nrm) AS cos_sim
@@ -167,10 +153,7 @@ object Round8nQueries {
     // cancels in the ratio, so no fractional mean ever materializes).
     // Day-bounded series; decimal(38) squares; one division, 6dp.
     "agg_durbin_watson" -> ((s, dir) => {
-      val daily = Tables.events(s, dir)
-        .groupBy(col("event_type"), dayofmonth(col("ts")).cast("long").as("day"))
-        .agg((sum(col("value").cast(DecimalType(18, 6))) * 100)
-          .cast(DecimalType(18, 0)).cast("long").as("xc"))
+      val daily = dailyCenti(s, dir)
       val tot = daily.groupBy("event_type")
         .agg(count(lit(1)).as("nd"), sum("xc").as("sx"))
       val w = Window.partitionBy("event_type").orderBy("day")
@@ -215,9 +198,9 @@ object Round8nQueries {
         |    / (SELECT CAST(count(*) AS DOUBLE) FROM ksmp), 6) AS mean_map10
         |FROM ap""").stripMargin,
 
-    "llm_weighted_sample" -> """
+    "llm_weighted_sample" -> s"""
       |WITH docs AS (SELECT doc_id, lang,
-      |    CAST(len(list_filter(string_split(text, ' '), x -> x <> ''))
+      |    CAST(len($duckToks)
       |      AS BIGINT) AS w
       |  FROM documents),
       |c AS (SELECT doc_id, lang, w,
@@ -232,11 +215,8 @@ object Round8nQueries {
       |WHERE (cw * 100) // tot - ((cw - w) * 100) // tot >= 1
       |ORDER BY doc_id""".stripMargin,
 
-    "agg_durbin_watson" -> """
-      |WITH daily AS (SELECT event_type, CAST(day(ts) AS BIGINT) AS day,
-      |    CAST(CAST(sum(CAST(value AS DECIMAL(18,6))) * 100
-      |      AS DECIMAL(18,0)) AS BIGINT) AS xc
-      |  FROM events GROUP BY 1, 2),
+    "agg_durbin_watson" -> s"""
+      |WITH $dailyCentiSql,
       |tot AS (SELECT event_type, CAST(count(*) AS BIGINT) AS nd,
       |    CAST(sum(xc) AS BIGINT) AS sx
       |  FROM daily GROUP BY 1),

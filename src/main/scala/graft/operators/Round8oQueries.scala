@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DecimalType
 
 import graft.QueryUtils._
 import graft.sources.Tables
@@ -19,9 +19,7 @@ import graft.sources.Tables
   * cross-compares — never a float percent); Atkinson's per-row √x is
   * the IEEE-exact sqrt of an integer, 8dp-rounded then decimal-summed.
   */
-object Round8oQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
+object Round8oQueries extends graft.QueryFamily {
 
   /** Per-customer total order revenue in exact centi longs, with the
     * customer's nation (zero-order customers excluded — the revenue-

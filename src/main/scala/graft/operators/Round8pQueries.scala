@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DecimalType
 
 import graft.QueryUtils._
 import graft.sources.Tables
@@ -21,9 +21,7 @@ import graft.sources.Tables
   * decimal(38); per-window DX means use the rounded-term decimal-sum
   * idiom.
   */
-object Round8pQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
+object Round8pQueries extends graft.QueryFamily {
 
   /** Daily (hi, lo) bars per event type in exact centi-units (the
     * Round8h/8k bar construction, close/volume omitted). */
@@ -42,20 +40,6 @@ object Round8pQueries {
       |      AS DECIMAL(18,0))::BIGINT) AS BIGINT) AS hi,
       |    CAST(min(CAST(CAST(value AS DECIMAL(18,6)) * 100
       |      AS DECIMAL(18,0))::BIGINT) AS BIGINT) AS lo
-      |  FROM events GROUP BY 1, 2)""".stripMargin
-
-  /** Daily close-sum centi series per event type (the shared r8
-    * daily series). */
-  private def dailyCenti(s: SparkSession, dir: String) =
-    Tables.events(s, dir)
-      .groupBy(col("event_type"), dayofmonth(col("ts")).cast("long").as("day"))
-      .agg((sum(col("value").cast(DecimalType(18, 6))) * 100)
-        .cast(DecimalType(18, 0)).cast("long").as("xc"))
-
-  private val dailyCentiSql =
-    """daily AS (SELECT event_type, CAST(day(ts) AS BIGINT) AS day,
-      |    CAST(CAST(sum(CAST(value AS DECIMAL(18,6))) * 100
-      |      AS DECIMAL(18,0)) AS BIGINT) AS xc
       |  FROM events GROUP BY 1, 2)""".stripMargin
 
   val queries: Map[String, QFn] = Map(

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
@@ -21,9 +21,7 @@ import graft.sources.Tables
   * correctly-rounded IEEE ops (×, ÷, √) over exact-integer-valued
   * doubles.
   */
-object Round8qQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
+object Round8qQueries extends graft.QueryFamily {
 
   /** The agg_fdr_bh p-value family: 35 (event type × day-of-week)
     * mean-shift z-tests with 8dp two-sided normal p-values. */
@@ -111,10 +109,7 @@ object Round8qQueries {
     // and L = Σ_j j·R_j with j the alphabetical treatment index.
     // z = (L − b·k(k+1)²/4) / √(b·k²(k+1)(k²−1)/144), one closed form.
     "agg_page_trend" -> ((s, dir) => {
-      val daily = Tables.events(s, dir)
-        .groupBy(col("event_type"), dayofmonth(col("ts")).cast("long").as("day"))
-        .agg((sum(col("value").cast(DecimalType(18, 6))) * 100)
-          .cast(DecimalType(18, 0)).cast("long").as("xc"))
+      val daily = dailyCenti(s, dir)
       val k = daily.select("event_type").distinct()
         .withColumn("j", row_number().over(
           Window.partitionBy().orderBy("event_type")).cast("long"))
@@ -209,11 +204,8 @@ object Round8qQueries {
       |    AS rejected
       |FROM ok ORDER BY event_type, dow""".stripMargin,
 
-    "agg_page_trend" -> """
-      |WITH daily AS (SELECT event_type, CAST(day(ts) AS BIGINT) AS day,
-      |    CAST(CAST(sum(CAST(value AS DECIMAL(18,6))) * 100
-      |      AS DECIMAL(18,0)) AS BIGINT) AS xc
-      |  FROM events GROUP BY 1, 2),
+    "agg_page_trend" -> s"""
+      |WITH $dailyCentiSql,
       |tr AS (SELECT event_type, CAST(row_number() OVER (ORDER BY event_type)
       |    AS BIGINT) AS j
       |  FROM (SELECT DISTINCT event_type FROM daily) x),

@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DecimalType
 
 import graft.QueryUtils._
 import graft.sources.Tables
@@ -19,11 +18,7 @@ import graft.sources.Tables
   * list is the EXACT top-100 by (count desc, token) — a deterministic
   * self-contained substitute for the external Dale-Chall word list.
   */
-object Round8rQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
-
-  private val duckToks = "list_filter(string_split(text, ' '), x -> x <> '')"
+object Round8rQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 
@@ -37,7 +32,7 @@ object Round8rQueries {
     "llm_msttr" -> ((s, dir) => {
       val tok = Tables.documents(s, dir)
         .select(col("lang"), col("doc_id"),
-          posexplode(graft.functions.TextNGrams.mkTokenList(col("text"))))
+          posexplode(toks))
         .select(col("lang"), col("doc_id"),
           expr("pos div 50").as("seg"), col("col").as("token"),
           col("pos"))
@@ -64,17 +59,15 @@ object Round8rQueries {
     // difficult share exceeds 5% (the published adjustment), decided
     // by the integer cross-compare 20·difficult > W.
     "llm_dale_chall" -> ((s, dir) => {
-      val toks = Tables.documents(s, dir)
+      val tokRows = Tables.documents(s, dir)
         .select(col("lang"),
-          greatest(lit(1L), (length(col("text"))
-            - length(regexp_replace(col("text"), "[.!?]", ""))).cast("long"))
-            .as("sent"),
-          explode(graft.functions.TextNGrams.mkTokenList(col("text"))).as("token"))
-      val easy = toks.groupBy("token").agg(count(lit(1)).as("cnt"))
+          nSent.as("sent"),
+          explode(toks).as("token"))
+      val easy = tokRows.groupBy("token").agg(count(lit(1)).as("cnt"))
       val top = GlobalRank.withSeq(easy, "rn",
           Seq(col("cnt").desc, col("token").asc))
         .where(col("rn") <= 100).select(col("token").as("etok"))
-      val flag = toks.join(broadcast(top),
+      val flag = tokRows.join(broadcast(top),
           col("token") === col("etok"), "left")
         .select(col("lang"), col("sent"),
           when(col("etok").isNull, 1L).otherwise(0L).as("diff"))
@@ -83,9 +76,7 @@ object Round8rQueries {
       // so sentences ride a separate doc-level aggregate
       val sents = Tables.documents(s, dir)
         .select(col("lang"),
-          greatest(lit(1L), (length(col("text"))
-            - length(regexp_replace(col("text"), "[.!?]", ""))).cast("long"))
-            .as("sent"),
+          nSent.as("sent"),
           graft.functions.TextNGrams.mkTokenCount(col("text"))
             .cast("long").as("w"))
         .where(col("w") >= 1)
@@ -109,7 +100,7 @@ object Round8rQueries {
     // (llm_length_buckets buckets DOCS; this buckets TOKENS).
     "llm_word_len_dist" -> ((s, dir) => {
       val tok = Tables.documents(s, dir)
-        .select(col("lang"), explode(graft.functions.TextNGrams.mkTokenList(col("text"))).as("token"))
+        .select(col("lang"), explode(toks).as("token"))
         .select(col("lang"), length(col("token")).cast("long").as("len"))
       val tot = tok.groupBy(col("lang").as("l2"))
         .agg(count(lit(1)).as("nt"))
@@ -129,7 +120,7 @@ object Round8rQueries {
         length(regexp_replace(t, lit("[aeiouyAEIOUY]+"), lit("#"))) -
           length(regexp_replace(t, lit("[aeiouyAEIOUY]+"), lit("")))
       val tok = Tables.documents(s, dir)
-        .select(col("lang"), explode(graft.functions.TextNGrams.mkTokenList(col("text"))).as("token"))
+        .select(col("lang"), explode(toks).as("token"))
         .select(col("lang"), least(vg(col("token")).cast("long"), lit(5L))
           .as("syl"))
       val tot = tok.groupBy(col("lang").as("l2"))
@@ -175,8 +166,7 @@ object Round8rQueries {
       |w AS (SELECT lang, CAST(count(*) AS BIGINT) AS words,
       |    CAST(sum(diff) AS BIGINT) AS difficult
       |  FROM flag GROUP BY 1),
-      |sents AS (SELECT lang, CAST(sum(greatest(1, CAST(length(text)
-      |      - length(regexp_replace(text, '[.!?]', '', 'g')) AS BIGINT)))
+      |sents AS (SELECT lang, CAST(sum($nSentSql)
       |      AS BIGINT) AS sentences
       |  FROM documents
       |  WHERE len($duckToks) >= 1

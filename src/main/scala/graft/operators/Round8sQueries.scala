@@ -1,9 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.QueryUtils._
 import graft.sources.Tables
@@ -19,9 +17,7 @@ import graft.sources.Tables
   * log2 buckets use the length(bin(n)) idiom (no float log); every
   * share/mean is one exact integer division.
   */
-object Round8sQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
+object Round8sQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 

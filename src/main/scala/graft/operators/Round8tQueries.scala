@@ -1,9 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DecimalType
 
 import graft.QueryUtils._
 import graft.sources.Tables
@@ -18,9 +16,7 @@ import graft.sources.Tables
   * integer/centi ratios 8dp-rounded before the per-bucket decimal
   * mean; the pair list sorts by an exact (count desc, keys) key.
   */
-object Round8tQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
+object Round8tQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 

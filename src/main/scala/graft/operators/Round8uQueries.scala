@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DecimalType
 
 import graft.QueryUtils._
 import graft.sources.Tables
@@ -19,9 +19,7 @@ import graft.sources.Tables
   * centroids use 6dp-quantized components decimal-summed (order-free),
   * one IEEE √ per label.
   */
-object Round8uQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
+object Round8uQueries extends graft.QueryFamily {
 
   /** Within-sample (a < b) cosine pairs over the 256-vector hash
     * sample — the shared base of the spectrum/separation queries. */

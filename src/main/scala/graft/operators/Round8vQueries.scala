@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
@@ -21,9 +21,7 @@ import graft.sources.Tables
   * month × nation grid; the symmetric difference is two EXCEPTs with
   * a post-hoc side marker.
   */
-object Round8vQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
+object Round8vQueries extends graft.QueryFamily {
 
   /** App-id-salted scratch (shared scheme, see graft.tools.Scratch). */
   private def scratch(s: SparkSession, kind: String, dir: String): String =

@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DecimalType
 
 import graft.QueryUtils._
 import graft.sources.Tables
@@ -19,23 +18,7 @@ import graft.sources.Tables
   * (n·x − S1 numerator — no fractional mean), decimal(38) squares,
   * correctly-rounded ÷ and √ only.
   */
-object Round8wQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
-
-  /** Daily close-sum centi series per event type (the shared r8 daily
-    * series). */
-  private def dailyCenti(s: SparkSession, dir: String) =
-    Tables.events(s, dir)
-      .groupBy(col("event_type"), dayofmonth(col("ts")).cast("long").as("day"))
-      .agg((sum(col("value").cast(DecimalType(18, 6))) * 100)
-        .cast(DecimalType(18, 0)).cast("long").as("xc"))
-
-  private val dailyCentiSql =
-    """daily AS (SELECT event_type, CAST(day(ts) AS BIGINT) AS day,
-      |    CAST(CAST(sum(CAST(value AS DECIMAL(18,6))) * 100
-      |      AS DECIMAL(18,0)) AS BIGINT) AS xc
-      |  FROM events GROUP BY 1, 2)""".stripMargin
+object Round8wQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 

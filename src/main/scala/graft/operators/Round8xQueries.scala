@@ -1,8 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.QueryUtils._
 import graft.sources.Tables
@@ -19,9 +17,7 @@ import graft.sources.Tables
   * dirty strings; day/month names are locale-stable English in both
   * engines.
   */
-object Round8xQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
+object Round8xQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 

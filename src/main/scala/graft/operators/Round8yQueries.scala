@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DecimalType
 
 import graft.QueryUtils._
 import graft.sources.Tables
@@ -18,32 +17,7 @@ import graft.sources.Tables
   * cross-multiplication, no 1.5 ever materializes; Dixon and MAD pick
   * values at exact integer ranks.
   */
-object Round8yQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
-
-  /** Per-event-type centi values with a per-type total order rank.
-    * Events are corpus-scaled and event_type has ~5 values, so a plain
-    * partitioned window would funnel the corpus through 5 single-task
-    * groups — ranked via GlobalRank instead, every stage distributed. */
-  private def ranked(s: SparkSession, dir: String) =
-    GlobalRank.withSeqAndCount(
-      Tables.events(s, dir)
-        .select(col("event_type"), col("event_id"),
-          (col("value").cast(DecimalType(18, 6)) * 100)
-            .cast(DecimalType(18, 0)).cast("long").as("xc")),
-      "rn", "n", Seq("event_type"),
-      Seq(col("xc").asc, col("event_id").asc), groupsHint = 5)
-
-  private val rankedSql =
-    """r AS (SELECT event_type, event_id, xc,
-      |    CAST(row_number() OVER (PARTITION BY event_type
-      |      ORDER BY xc, event_id) AS BIGINT) AS rn,
-      |    CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS n
-      |  FROM (SELECT event_type, event_id,
-      |      CAST(CAST(value AS DECIMAL(18,6)) * 100
-      |        AS DECIMAL(18,0))::BIGINT AS xc
-      |    FROM events) x)""".stripMargin
+object Round8yQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 
@@ -93,7 +67,7 @@ object Round8yQueries {
     // integer cross-compare 2·x <> 2·Q ∓ 3·IQR, so the 1.5 multiplier
     // never leaves ℤ. Counts and share.
     "agg_iqr_fences" -> ((s, dir) => {
-      val q = ranked(s, dir).groupBy("event_type")
+      val q = rankedCenti(s, dir).groupBy("event_type")
         .agg(max("n").as("n"),
           max(when(col("rn") === expr("(n + 3) DIV 4"), col("xc"))).as("q1"),
           max(when(col("rn") === expr("(3 * n + 3) DIV 4"), col("xc"))).as("q3"))
@@ -121,7 +95,7 @@ object Round8yQueries {
     // type from four exact rank picks — the small-sample is-the-
     // extreme-real screen. One division each, 6dp.
     "agg_dixon_q" -> ((s, dir) =>
-      ranked(s, dir).groupBy("event_type")
+      rankedCenti(s, dir).groupBy("event_type")
         .agg(max("n").as("n"),
           max(when(col("rn") === 1, col("xc"))).as("x1"),
           max(when(col("rn") === 2, col("xc"))).as("x2"),
@@ -140,7 +114,7 @@ object Round8yQueries {
     // second rank pass — win_mad_outliers' rolling machinery, global
     // (the robust complement of agg_stats' mean/σ).
     "agg_median_mad" -> ((s, dir) => {
-      val med = ranked(s, dir).groupBy("event_type")
+      val med = rankedCenti(s, dir).groupBy("event_type")
         .agg(max(when(col("rn") === expr("(n + 1) DIV 2"), col("xc")))
           .as("med"))
       val dev = Tables.events(s, dir)
@@ -205,7 +179,7 @@ object Round8yQueries {
       |FROM m ORDER BY event_type""".stripMargin,
 
     "agg_iqr_fences" -> s"""
-      |WITH $rankedSql,
+      |WITH $rankedCentiSql,
       |q AS (SELECT event_type, max(n) AS n,
       |    max(CASE WHEN rn = (n + 3) // 4 THEN xc END) AS q1,
       |    max(CASE WHEN rn = (3 * n + 3) // 4 THEN xc END) AS q3
@@ -224,7 +198,7 @@ object Round8yQueries {
       |GROUP BY r.event_type ORDER BY r.event_type""".stripMargin,
 
     "agg_dixon_q" -> s"""
-      |WITH $rankedSql
+      |WITH $rankedCentiSql
       |SELECT event_type, max(n) AS n,
       |  round(CAST(max(CASE WHEN rn = 2 THEN xc END)
       |      - max(CASE WHEN rn = 1 THEN xc END) AS DOUBLE)
@@ -237,7 +211,7 @@ object Round8yQueries {
       |FROM r GROUP BY event_type ORDER BY event_type""".stripMargin,
 
     "agg_median_mad" -> s"""
-      |WITH $rankedSql,
+      |WITH $rankedCentiSql,
       |med AS (SELECT event_type,
       |    max(CASE WHEN rn = (n + 1) // 2 THEN xc END) AS med
       |  FROM r GROUP BY 1),

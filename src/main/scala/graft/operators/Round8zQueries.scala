@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DecimalType
 
 import graft.QueryUtils._
 import graft.sources.Tables
@@ -19,9 +18,7 @@ import graft.sources.Tables
   * log10, which is not correctly rounded); every share is one integer
   * division.
   */
-object Round8zQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
+object Round8zQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 
@@ -55,10 +52,7 @@ object Round8zQueries {
     // ones much faster). Pure integer compares against the running
     // max; day one is the first record.
     "win_record_highs" -> ((s, dir) => {
-      val daily = Tables.events(s, dir)
-        .groupBy(col("event_type"), dayofmonth(col("ts")).cast("long").as("day"))
-        .agg((sum(col("value").cast(DecimalType(18, 6))) * 100)
-          .cast(DecimalType(18, 0)).cast("long").as("xc"))
+      val daily = dailyCenti(s, dir)
       val w = Window.partitionBy("event_type").orderBy("day")
       val wPrev = w.rowsBetween(Window.unboundedPreceding, -1)
       val wc = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -130,11 +124,8 @@ object Round8zQueries {
       |FROM o JOIN f ON o.o_custkey = f.o_custkey
       |GROUP BY o.mi ORDER BY month_idx""".stripMargin,
 
-    "win_record_highs" -> """
-      |WITH daily AS (SELECT event_type, CAST(day(ts) AS BIGINT) AS day,
-      |    CAST(CAST(sum(CAST(value AS DECIMAL(18,6))) * 100
-      |      AS DECIMAL(18,0)) AS BIGINT) AS xc
-      |  FROM events GROUP BY 1, 2),
+    "win_record_highs" -> s"""
+      |WITH $dailyCentiSql,
       |f AS (SELECT event_type, day,
       |    (max(xc) OVER (PARTITION BY event_type ORDER BY day
       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) IS NULL

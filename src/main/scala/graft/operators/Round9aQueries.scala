@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DecimalType
 
 import graft.QueryUtils._
 import graft.sources.Tables
@@ -27,9 +27,7 @@ import graft.sources.Tables
   * numerator uses the doubled-residual trick (2·Rᵢ − k·(n+1))² so no
   * half ever materializes.
   */
-object Round9aQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
+object Round9aQueries extends graft.QueryFamily {
 
   /** Per-returnflag ordinal pair ledger from the (quantity, discount-
     * centi) contingency cells: n rows, distinct level counts, and the
@@ -153,10 +151,7 @@ object Round9aQueries {
     // 3·Σ(2Rᵢ − k(n+1))² / (k²(n³−n)) — the doubled-residual image of
     // 12S/(k²(n³−n)), all-integer until one final division.
     "agg_kendall_w" -> ((s, dir) => {
-      val daily = Tables.events(s, dir)
-        .groupBy(col("event_type"), dayofmonth(col("ts")).cast("long").as("day"))
-        .agg((sum(col("value").cast(DecimalType(18, 6))) * 100)
-          .cast(DecimalType(18, 0)).cast("long").as("xc"))
+      val daily = dailyCenti(s, dir)
       val nt = daily.agg(countDistinct("event_type").as("n_obj"))
       val fullDays = daily.groupBy("day")
         .agg(count(lit(1)).as("tod"))
@@ -214,11 +209,8 @@ object Round9aQueries {
       |      * (CAST(least(mx, my) AS DOUBLE) - 1.0)), 6) AS tau_c
       |FROM p ORDER BY flag""".stripMargin,
 
-    "agg_kendall_w" -> """
-      |WITH daily AS (SELECT event_type, CAST(day(ts) AS BIGINT) AS day,
-      |    CAST(CAST(sum(CAST(value AS DECIMAL(18,6))) * 100
-      |      AS DECIMAL(18,0)) AS BIGINT) AS xc
-      |  FROM events GROUP BY 1, 2),
+    "agg_kendall_w" -> s"""
+      |WITH $dailyCentiSql,
       |nt AS (SELECT CAST(count(DISTINCT event_type) AS BIGINT) AS n_obj
       |  FROM daily),
       |full_days AS (SELECT day FROM daily, nt

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DecimalType
 
 import graft.QueryUtils._
 import graft.sources.Tables
@@ -21,44 +21,18 @@ import graft.sources.Tables
   * integer division to nano-units (the 2-5-smooth denominator n·h³
   * would otherwise be a systematic rounding-boundary hazard).
   */
-object Round9bQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
-
-  /** Per-event-type centi values with a per-type total order rank.
-    * The events table is corpus-scaled and event_type has ~5 values,
-    * so a plain partitioned window would funnel the whole corpus
-    * through 5 single-task groups — ranked via GlobalRank instead
-    * (the llm_token_gini shape), every stage distributed. */
-  private def ranked(s: SparkSession, dir: String) =
-    GlobalRank.withSeqAndCount(
-      Tables.events(s, dir)
-        .select(col("event_type"), col("event_id"),
-          (col("value").cast(DecimalType(18, 6)) * 100)
-            .cast(DecimalType(18, 0)).cast("long").as("xc")),
-      "rn", "n", Seq("event_type"),
-      Seq(col("xc").asc, col("event_id").asc), groupsHint = 5)
-
-  private val rankedSql =
-    """r AS (SELECT event_type, event_id, xc,
-      |    CAST(row_number() OVER (PARTITION BY event_type
-      |      ORDER BY xc, event_id) AS BIGINT) AS rn,
-      |    CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS n
-      |  FROM (SELECT event_type, event_id,
-      |      CAST(CAST(value AS DECIMAL(18,6)) * 100
-      |        AS DECIMAL(18,0))::BIGINT AS xc
-      |    FROM events) x)""".stripMargin
+object Round9bQueries extends graft.QueryFamily {
 
   /** Discrete-rank quartiles per event type (exact centi longs). */
   private def quartiles(s: SparkSession, dir: String) =
-    ranked(s, dir).groupBy("event_type")
+    rankedCenti(s, dir).groupBy("event_type")
       .agg(max("n").as("n"),
         max(when(col("rn") === expr("(n + 3) DIV 4"), col("xc"))).as("q1"),
         max(when(col("rn") === expr("(n + 1) DIV 2"), col("xc"))).as("q2"),
         max(when(col("rn") === expr("(3 * n + 3) DIV 4"), col("xc"))).as("q3"))
 
   private val quartilesSql =
-    s"""$rankedSql,
+    s"""$rankedCentiSql,
        |q AS (SELECT event_type, max(n) AS n,
        |    max(CASE WHEN rn = (n + 3) // 4 THEN xc END) AS q1,
        |    max(CASE WHEN rn = (n + 1) // 2 THEN xc END) AS q2,

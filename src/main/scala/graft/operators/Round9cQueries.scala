@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DecimalType
 
 import graft.QueryUtils._
 import graft.sources.Tables
@@ -22,9 +22,7 @@ import graft.sources.Tables
   * weighted sum exact; displays are single correctly-rounded /100.0
   * (or /1e6) divisions.
   */
-object Round9cQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
+object Round9cQueries extends graft.QueryFamily {
 
   private def signedHalfUp(num: String, den: String): Column = expr(
     s"CASE WHEN $num >= 0 THEN (2 * ($num) + ($den)) div (2 * ($den)) " +

@@ -1,11 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DecimalType
 
 import graft.QueryUtils._
-import graft.sources.Tables
 
 /** Round-9 fourth wave: lexical-inequality profiling — the legomena
   * (once/twice/3+) vocabulary class profile, the token-frequency Gini,
@@ -21,9 +20,7 @@ import graft.sources.Tables
   * integers (products through DECIMAL(38,0)); each emitted statistic
   * is one double division mirrored op-for-op in the oracle.
   */
-object Round9dQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
+object Round9dQueries extends graft.QueryFamily {
 
   /** (lang, tok, cnt) token frequency table — a rollup of the shared
     * unigram ledger (exact integer counts, so identical to tokenizing

@@ -27,9 +27,7 @@ import graft.sources.Tables
   * (floor, not engine-divergent double→int casts); recalls are emitted
   * as exact half-up 1e-4 integers (2-5-smooth denominators).
   */
-object Round9eQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
+object Round9eQueries extends graft.QueryFamily {
 
   /** Corpus with norms + the 256-query sample side (frame-parametric
     * so ScaleDryRun measures the shipped pipeline). */

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DecimalType
 
 import graft.QueryUtils._
 import graft.sources.Tables
@@ -19,9 +19,7 @@ import graft.sources.Tables
   * 5·cum ≥ 4·total, so 0.8 never materializes as a double; prefix
   * sums ride GlobalRank.withRunningSums (no single-partition window).
   */
-object Round9fQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
+object Round9fQueries extends graft.QueryFamily {
 
   /** lineitem ⋈ orders(year) ⋈ part(brand) with exact centi revenue
     * and integer quantity. */

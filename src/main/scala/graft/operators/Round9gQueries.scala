@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.QueryUtils._
 import graft.sources.Tables
@@ -22,11 +21,7 @@ import graft.sources.Tables
   * is one exact-integer division; the tuple-IN subquery is planned by
   * both engines' real subquery machinery over identical SQL semantics.
   */
-object Round9gQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
-
-  private def ts(dt: String) = lit(dt + " 00:00:00").cast("timestamp")
+object Round9gQueries extends graft.QueryFamily {
 
   /** Bipartite customer→supplier edges from March-1997 orders. */
   private def buyEdges(s: SparkSession, dir: String): DataFrame = {

@@ -1,12 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DecimalType
 
 import graft.QueryUtils._
-import graft.sources.Tables
 
 /** Round-9 eighth wave: forecast-accuracy statistics — sMAPE of the
   * naive forecast, seasonal MASE, Theil's U2 for an SMA3 forecast —
@@ -19,18 +18,12 @@ import graft.sources.Tables
   * SMA denominator by comparing 3·aₜ against Σ3 so the error ledger
   * stays integer; pivots divide (H+L+C) by 3 half-up in centi.
   */
-object Round9hQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
+object Round9hQueries extends graft.QueryFamily {
 
   /** Per-event-type daily revenue centi series with a row index. */
   private def daily(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("event_type").orderBy("day")
-    Tables.events(s, dir)
-      .groupBy(col("event_type"), dayofmonth(col("ts")).cast("long").as("day"))
-      .agg((sum(col("value").cast(DecimalType(18, 6))) * 100)
-        .cast(DecimalType(18, 0)).cast("long").as("xc"))
-      .withColumn("rn", row_number().over(w))
+    dailyCenti(s, dir).withColumn("rn", row_number().over(w))
   }
 
   private val dailySql =

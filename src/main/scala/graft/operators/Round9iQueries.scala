@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DecimalType
 
 import graft.QueryUtils._
 import graft.sources.Tables
@@ -20,9 +20,7 @@ import graft.sources.Tables
   * micro integers; the z statistic is one division + one √ of exact
   * integers.
   */
-object Round9iQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
+object Round9iQueries extends graft.QueryFamily {
 
   private def shu(num: String, den: String): Column = expr(
     s"CASE WHEN $num >= 0 THEN (2 * ($num) + ($den)) div (2 * ($den)) " +
@@ -44,10 +42,7 @@ object Round9iQueries {
     // and φ22 = (q2·R − q1²)/(R² − q1²) stays a ratio of exact
     // integers (R = 1e8) — no float until the 6dp half-up emit.
     "agg_pacf2" -> ((s, dir) => {
-      val daily = Tables.events(s, dir)
-        .groupBy(col("event_type"), dayofmonth(col("ts")).cast("long").as("day"))
-        .agg((sum(col("value").cast(DecimalType(18, 6))) * 100)
-          .cast(DecimalType(18, 0)).cast("long").as("xc"))
+      val daily = dailyCenti(s, dir)
       val tot = daily.groupBy("event_type")
         .agg(count(lit(1)).as("nd"), sum("xc").as("sx"))
       val w = Window.partitionBy("event_type").orderBy("day")
@@ -150,10 +145,7 @@ object Round9iQueries {
   val oracles: Map[String, String] = Map(
 
     "agg_pacf2" -> s"""
-      |WITH daily AS (SELECT event_type, CAST(day(ts) AS BIGINT) AS day,
-      |    CAST(CAST(sum(CAST(value AS DECIMAL(18,6))) * 100
-      |      AS DECIMAL(18,0)) AS BIGINT) AS xc
-      |  FROM events GROUP BY 1, 2),
+      |WITH $dailyCentiSql,
       |tot AS (SELECT event_type, CAST(count(*) AS BIGINT) AS nd,
       |    CAST(sum(xc) AS BIGINT) AS sx
       |  FROM daily GROUP BY 1),

@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DecimalType
 
 import graft.QueryUtils._
 import graft.sources.Tables
@@ -19,9 +18,7 @@ import graft.sources.Tables
   * decimal); the quadrant correlation is pure sign counts around
   * discrete-rank medians.
   */
-object Round9jQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
+object Round9jQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 
@@ -57,7 +54,7 @@ object Round9jQueries {
     "llm_dedup_cross_source" -> ((s, dir) =>
       Tables.documents(s, dir)
         .select(md5(array_join(slice(
-          graft.functions.TextNGrams.mkTokenList(col("text")), 1, 20), " "))
+          toks, 1, 20), " "))
           .as("h"), col("source"))
         .groupBy("h")
         .agg(count(lit(1)).as("sz"), countDistinct("source").as("ns"))

@@ -19,9 +19,7 @@ import graft.sources.Tables
   * spreads and vocabulary Jaccards are half-up integer divisions and
   * pure set counts.
   */
-object Round9kQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
+object Round9kQueries extends graft.QueryFamily {
 
   /** log10(1 + 1/d) rounded half-even to 8dp, ×1e8 as exact longs. */
   private val benford8: Seq[(Long, Long)] = Seq(
@@ -125,7 +123,7 @@ object Round9kQueries {
     "llm_vocab_stability" -> ((s, dir) =>
       Tables.documents(s, dir)
         .select(col("lang"), (col("doc_id") % 2 === 0).as("even"),
-          explode(graft.functions.TextNGrams.mkTokenList(col("text"))).as("tok"))
+          explode(toks).as("tok"))
         .groupBy("lang", "tok")
         .agg(max(when(col("even"), 1L).otherwise(0L)).as("he"),
           max(when(!col("even"), 1L).otherwise(0L)).as("ho"))
@@ -205,9 +203,9 @@ object Round9kQueries {
       |    / 1e6 AS median_spread
       |FROM r GROUP BY p_brand ORDER BY brand""".stripMargin,
 
-    "llm_vocab_stability" -> """
+    "llm_vocab_stability" -> s"""
       |WITH t AS (SELECT lang, doc_id % 2 = 0 AS even,
-      |    unnest(list_filter(string_split(text, ' '), x -> x <> ''))
+      |    unnest($duckToks)
       |      AS tok
       |  FROM documents),
       |v AS (SELECT lang, tok,

@@ -18,9 +18,7 @@ import graft.sources.Tables
   * key), and the chandelier stops are rolling integer extremes minus a
   * half-up integer ATR multiple.
   */
-object Round9lQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
+object Round9lQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 

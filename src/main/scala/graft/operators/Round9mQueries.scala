@@ -18,9 +18,7 @@ import graft.sources.Tables
   * midpoints of rolling integer extremes; the SRM χ² clears the 90/5/5
   * rational expectations into ONE exact integer numerator over 9000·n.
   */
-object Round9mQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
+object Round9mQueries extends graft.QueryFamily {
 
   /** Deliberately hostile CSV content: comma, quote, newline. */
   private def tricky: Column =

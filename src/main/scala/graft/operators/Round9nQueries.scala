@@ -20,9 +20,7 @@ import graft.sources.Tables
   * the mean never materializes as a double; Elder-ray rides the
   * EwmaWeights exact integer table.
   */
-object Round9nQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
+object Round9nQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 

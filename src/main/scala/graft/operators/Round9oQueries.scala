@@ -39,9 +39,7 @@ object GeoMeanAgg extends Aggregator[Double, GeoBuf, Double] {
   * UDAF buffer is a quantized-ln long, so partial merges are integer
   * and order-free, and the emitted value is the exact mean-log.
   */
-object Round9oQueries {
-
-  private def d(c: Column): Column = c.cast(DoubleType)
+object Round9oQueries extends graft.QueryFamily {
 
   /** Per-type quantized daily log-return ledger. */
   private def lr8(s: SparkSession, dir: String) = {

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.QueryUtils._
-import graft.functions.VectorFunctions.{sortedIntersectCount, vecDot, vecNorm}
+import graft.functions.VectorFunctions.{vecDot, vecNorm}
 import graft.sources.Tables
 
 /** Scale-path training-data-pipeline operators, beyond the reference's
@@ -22,7 +22,7 @@ import graft.sources.Tables
   * keyed aggs; IVF cells turn ANN from O(n²) into per-cell O(n·k) and
   * map directly onto partition pruning when cells are storage keys.
   */
-object ScaleQueries {
+object ScaleQueries extends graft.QueryFamily {
 
   private val P = 2147483647L // 2^31 - 1
 

@@ -12,7 +12,7 @@ import graft.sources.Tables
   * chains so Catalyst pushes predicates and column pruning into the
   * parquet scan (verified via explain: PushedFilters / ReadSchema).
   */
-object ScanFilterQueries {
+object ScanFilterQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
     // ---- A. scans -------------------------------------------------------

@@ -26,7 +26,7 @@ import graft.sources.Tables
   *  - try_cast failures are NULL by contract on both engines (Spark
   *    `try_cast` ≡ DuckDB `TRY_CAST`).
   */
-object SessionSurfaceQueries {
+object SessionSurfaceQueries extends graft.QueryFamily {
 
   /** Per-sfdir, app-id-salted scratch dir for the pipe-CSV round trip
     * (shared scheme, see graft.tools.Scratch). */

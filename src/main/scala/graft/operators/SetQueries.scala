@@ -6,7 +6,7 @@ import graft.QueryUtils._
 import graft.sources.Tables
 
 /** §2.G — set operations (bag and set semantics). */
-object SetQueries {
+object SetQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
     // bag union: the two branches overlap (urgent AND >100k), so ALL

@@ -22,7 +22,7 @@ import graft.sources.Tables
   *    unique so there is no skew); filters run before it, the
   *    split/report aggregation after it is stratum-bounded.
   */
-object StatSurfaceQueries {
+object StatSurfaceQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 
@@ -120,8 +120,8 @@ object StatSurfaceQueries {
         |FROM documents ORDER BY doc_id""".stripMargin,
 
     "llm_curate_e2e" ->
-      """WITH gated AS (SELECT doc_id, lang, text,
-        |    CAST(len(list_filter(string_split(text, ' '), x -> x <> '')) AS BIGINT) AS n_tok
+      s"""WITH gated AS (SELECT doc_id, lang, text,
+        |    CAST(len($duckToks) AS BIGINT) AS n_tok
         |  FROM documents),
         |g2 AS (SELECT * FROM gated WHERE n_tok >= 5 AND n_tok <= 100000),
         |dedup AS (SELECT doc_id, lang, n_tok,

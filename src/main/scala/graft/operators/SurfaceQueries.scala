@@ -21,7 +21,7 @@ import graft.sources.Tables
   * sources are splittable per-file and schema-explicit here, so no
   * inference scan).
   */
-object SurfaceQueries {
+object SurfaceQueries extends graft.QueryFamily {
 
   /** Per-sfdir, app-id-salted scratch dir for format round trips
     * (shared scheme, see graft.tools.Scratch). */

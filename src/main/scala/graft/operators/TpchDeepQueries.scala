@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
-import graft.QueryUtils.QFn
+import graft.QueryUtils.{QFn, decSum4, ts}
 import graft.sources.Tables
 
 /** §2.N — the remaining TPC-H decision-support shapes expressible on
@@ -30,17 +30,11 @@ import graft.sources.Tables
   * the join condition so zero-order customers survive; Q17/Q22's
   * scalar thresholds are one-row broadcasts.
   */
-object TpchDeepQueries {
+object TpchDeepQueries extends graft.QueryFamily {
 
-  /** Order-free exact sum of a 4-decimal money product, as double. */
-  private def decSum(c: Column): Column =
-    sum(c.cast(DecimalType(18, 4))).cast(DoubleType)
-
-  /** Same for the 6-decimal Q1 charge product price·(1−disc)·(1+tax). */
+  /** decSum4 for the 6-decimal Q1 charge product price·(1−disc)·(1+tax). */
   private def decSum6(c: Column): Column =
     sum(c.cast(DecimalType(24, 6))).cast(DoubleType)
-
-  private def ts(d: String) = lit(d + " 00:00:00").cast("timestamp")
 
   /** "Late" on this schema (no commit/receipt dates): shipped more
     * than 730 days after the order date — 25.7% of lines at sf0.01,
@@ -61,14 +55,14 @@ object TpchDeepQueries {
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
           sum(col("l_quantity")).as("sum_qty"),
-          decSum(col("l_extendedprice")).as("sum_base_price"),
-          decSum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
+          decSum4(col("l_extendedprice")).as("sum_base_price"),
+          decSum4(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
             .as("sum_disc_price"),
           decSum6(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
             * (lit(1.0) + col("l_tax"))).as("sum_charge"),
           (sum(col("l_quantity")) / count(lit(1))).as("avg_qty"),
-          (decSum(col("l_extendedprice")) / count(lit(1))).as("avg_price"),
-          (decSum(col("l_discount")) / count(lit(1))).as("avg_disc"),
+          (decSum4(col("l_extendedprice")) / count(lit(1))).as("avg_price"),
+          (decSum4(col("l_discount")) / count(lit(1))).as("avg_disc"),
           count(lit(1)).as("count_order"))
         .orderBy("l_returnflag", "l_linestatus")
     }),
@@ -119,7 +113,7 @@ object TpchDeepQueries {
           (col("supp_nation") === "NATION_2" && col("cust_nation") === "NATION_1"))
         .groupBy(col("supp_nation"), col("cust_nation"),
           year(col("l_shipdate")).as("l_year"))
-        .agg(decSum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
+        .agg(decSum4(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
           .as("revenue"))
         .orderBy("supp_nation", "cust_nation", "l_year")
     }),
@@ -155,9 +149,9 @@ object TpchDeepQueries {
         .join(suppNat, col("l_suppkey") === col("s_suppkey"))
         .groupBy(year(col("o_orderdate")).as("o_year"))
         .agg(
-          decSum(when(col("supp_nation") === "NATION_3", vol)
+          decSum4(when(col("supp_nation") === "NATION_3", vol)
             .otherwise(lit(0.0))).as("nation_volume"),
-          decSum(vol).as("total_volume"))
+          decSum4(vol).as("total_volume"))
         .select(col("o_year"),
           round(col("nation_volume") / col("total_volume"), 6).as("mkt_share"),
           col("nation_volume"), col("total_volume"))
@@ -218,7 +212,7 @@ object TpchDeepQueries {
         .agg((lit(0.2) * (sum(col("l_quantity")) / count(lit(1)))).as("lim"))
       li.join(lim, col("l_partkey") === col("lim_pk"))
         .where(col("l_quantity") < col("lim"))
-        .agg((decSum(col("l_extendedprice")) / lit(7.0)).as("avg_yearly"),
+        .agg((decSum4(col("l_extendedprice")) / lit(7.0)).as("avg_yearly"),
           count(lit(1)).as("n_lines"))
     }),
 
@@ -267,7 +261,7 @@ object TpchDeepQueries {
     "tpch_q22" -> ((s, dir) => {
       val cust = Tables.customer(s, dir)
       val avgRow = cust.where(col("c_acctbal") > 0)
-        .agg((decSum(col("c_acctbal")) / count(lit(1))).as("avg_bal"))
+        .agg((decSum4(col("c_acctbal")) / count(lit(1))).as("avg_bal"))
       val recent = Tables.orders(s, dir)
         .where(col("o_orderdate") >= ts("2000-01-01"))
         .select("o_custkey")
@@ -277,7 +271,7 @@ object TpchDeepQueries {
         .join(recent, col("c_custkey") === col("o_custkey"), "left_anti")
         .groupBy("c_nationkey")
         .agg(count(lit(1)).as("numcust"),
-          decSum(col("c_acctbal")).as("totacctbal"))
+          decSum4(col("c_acctbal")).as("totacctbal"))
         .orderBy("c_nationkey")
     })
   )

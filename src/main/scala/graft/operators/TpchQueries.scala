@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
-import graft.QueryUtils.QFn
+import graft.QueryUtils.{QFn, decSum4, ts}
 import graft.sources.Tables
 
 /** Headline composed-analytics queries — the classic TPC-H decision-
@@ -31,13 +31,7 @@ import graft.sources.Tables
   *    vs half-even (DuckDB) divergence a (18,2) cast hits on exact
   *    halves (measured: tpch_q6 off by 0.02 with (18,2)).
   */
-object TpchQueries {
-
-  /** Order-free exact sum of a 4-decimal money product, as double. */
-  private def decSum(c: Column): Column =
-    sum(c.cast(DecimalType(18, 4))).cast(DoubleType)
-
-  private def ts(d: String) = lit(d + " 00:00:00").cast("timestamp")
+object TpchQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 
@@ -57,7 +51,7 @@ object TpchQueries {
       li.join(ord, li("l_orderkey") === ord("o_orderkey"))
         .join(cust, ord("o_custkey") === cust("c_custkey"))
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(decSum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
+        .agg(decSum4(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
           .as("revenue"))
         .orderBy(col("revenue").desc, col("o_orderdate").asc,
           col("l_orderkey").asc)
@@ -86,7 +80,7 @@ object TpchQueries {
           sup("s_nationkey") === cust("c_nationkey"))
         .join(nat, sup("s_nationkey") === nat("n_nationkey"))
         .groupBy("n_name")
-        .agg(decSum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
+        .agg(decSum4(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
           .as("revenue"))
         .orderBy(col("revenue").desc, col("n_name").asc)
     }),
@@ -109,7 +103,7 @@ object TpchQueries {
         .join(cust, ord("o_custkey") === cust("c_custkey"))
         .join(nat, cust("c_nationkey") === nat("n_nationkey"))
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(decSum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
+        .agg(decSum4(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
           .as("revenue"))
         .orderBy(col("revenue").desc, col("c_custkey").asc)
         .limit(20)
@@ -126,7 +120,7 @@ object TpchQueries {
           col("l_shipdate") < ts("1997-01-01") &&
           col("l_discount") >= 0.05 && col("l_discount") <= 0.07 &&
           col("l_quantity") < 24)
-        .agg(decSum(col("l_extendedprice") * col("l_discount")).as("revenue"),
+        .agg(decSum4(col("l_extendedprice") * col("l_discount")).as("revenue"),
           count(lit(1)).as("n_lines"))
     }),
 
@@ -142,10 +136,10 @@ object TpchQueries {
       val part = Tables.part(s, dir).select("p_partkey", "p_type")
       li.join(part, li("l_partkey") === part("p_partkey"))
         .agg(
-          decSum(when(col("p_type") === "PROMO",
+          decSum4(when(col("p_type") === "PROMO",
             col("l_extendedprice") * (lit(1.0) - col("l_discount")))
             .otherwise(lit(0.0))).as("promo_revenue"),
-          decSum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
+          decSum4(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
             .as("total_revenue"))
         .select(
           round(col("promo_revenue") * 100.0 / col("total_revenue"), 4)
@@ -172,7 +166,7 @@ object TpchQueries {
           col("l_quantity").between(20, 30))
       li.join(part, li("l_partkey") === part("p_partkey"))
         .where(bands)
-        .agg(decSum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
+        .agg(decSum4(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
           .as("revenue"),
           count(lit(1)).as("n_lines"))
     }),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.QueryUtils.QFn
+import graft.QueryUtils.{QFn, ts}
 import graft.sources.Tables
 
 /** §2.N — the five TPC-H shapes that need the partsupp table
@@ -26,7 +26,7 @@ import graft.sources.Tables
   * (one lineitem shuffle), broadcast the filtered part/nation dims,
   * keep the correlated subqueries as keyed window/agg joins.
   */
-object TpchSupplyQueries {
+object TpchSupplyQueries extends graft.QueryFamily {
 
   /** The derived partsupp analog (see object doc). */
   private def partsupp(s: SparkSession, dir: String): DataFrame =
@@ -38,8 +38,6 @@ object TpchSupplyQueries {
         col("l_quantity").cast("long").as("lq"))
       .groupBy("ps_partkey", "ps_suppkey")
       .agg(min("unit_c").as("ps_supplycost_c"), sum("lq").as("ps_availqty"))
-
-  private def ts(d: String) = lit(d + " 00:00:00").cast("timestamp")
 
   /** Shared DuckDB CTE mirroring [[partsupp]] (`//` = floor division,
     * same as Spark's `div` for the all-positive operands here). */

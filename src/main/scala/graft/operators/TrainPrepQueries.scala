@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.QueryUtils.{QFn, hash60, nTok}
+import graft.QueryUtils.{QFn, duckToks, hash60, nTok, toks}
 import graft.sources.Tables
 
 /** Training-run preparation operators (round 2, batch 4): sequence
@@ -32,7 +32,7 @@ import graft.sources.Tables
   *    contributions are rounded then summed as decimals so the result
   *    is independent of partitioning and matches DuckDB bit-for-bit.
   */
-object TrainPrepQueries {
+object TrainPrepQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 
@@ -146,7 +146,7 @@ object TrainPrepQueries {
     "llm_doc_entropy" -> ((s, dir) => {
       val tf = Tables.documents(s, dir)
         .select(col("doc_id"),
-          explode(graft.functions.TextNGrams.mkTokenList(col("text"))).as("tok"))
+          explode(toks).as("tok"))
         .groupBy("doc_id", "tok").agg(count(lit(1)).as("c"))
       tf.groupBy("doc_id")
         .agg(sum("c").as("n_tok"), count(lit(1)).as("n_types"),
@@ -163,8 +163,8 @@ object TrainPrepQueries {
   val oracles: Map[String, String] = Map(
 
     "llm_pack_sequences" ->
-      """WITH per_doc AS (SELECT doc_id, lang,
-        |    CAST(len(list_filter(string_split(text, ' '), x -> x <> '')) AS BIGINT) AS n_tok
+      s"""WITH per_doc AS (SELECT doc_id, lang,
+        |    CAST(len($duckToks) AS BIGINT) AS n_tok
         |  FROM documents),
         |cum AS (SELECT doc_id, lang, n_tok,
         |    sum(n_tok) OVER (PARTITION BY lang ORDER BY doc_id
@@ -176,10 +176,10 @@ object TrainPrepQueries {
         |FROM cum ORDER BY doc_id""".stripMargin,
 
     "llm_shard_assign" ->
-      """WITH per_shard AS (SELECT
+      s"""WITH per_shard AS (SELECT
         |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 16 AS shard,
         |    CAST(count(*) AS BIGINT) AS n_docs,
-        |    CAST(sum(len(list_filter(string_split(text, ' '), x -> x <> ''))) AS BIGINT) AS n_tokens,
+        |    CAST(sum(len($duckToks)) AS BIGINT) AS n_tokens,
         |    CAST(sum(n_chars) AS BIGINT) AS n_chars
         |  FROM documents GROUP BY shard),
         |totals AS (SELECT sum(n_docs) AS tot_docs FROM per_shard)
@@ -188,8 +188,8 @@ object TrainPrepQueries {
         |FROM per_shard CROSS JOIN totals ORDER BY shard""".stripMargin,
 
     "llm_split_train" ->
-      """WITH tagged AS (SELECT lang,
-        |    CAST(len(list_filter(string_split(text, ' '), x -> x <> '')) AS BIGINT) AS n_tok,
+      s"""WITH tagged AS (SELECT lang,
+        |    CAST(len($duckToks) AS BIGINT) AS n_tok,
         |    CASE WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 100 < 90 THEN 'train'
         |         WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 100 < 95 THEN 'valid'
         |         ELSE 'test' END AS split
@@ -212,8 +212,8 @@ object TrainPrepQueries {
         |FROM sc ORDER BY vec_id""".stripMargin,
 
     "llm_doc_entropy" ->
-      """WITH toks AS (SELECT doc_id,
-        |    unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS tok
+      s"""WITH toks AS (SELECT doc_id,
+        |    unnest($duckToks) AS tok
         |  FROM documents),
         |tf AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS c
         |  FROM toks GROUP BY doc_id, tok),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
-import graft.QueryUtils.QFn
+import graft.QueryUtils.{QFn, duckToks, toks}
 import graft.sources.Tables
 
 /** §2.N — pipeline-tuning analytics: the queries an engineer runs to
@@ -21,7 +21,7 @@ import graft.sources.Tables
   *  - the vocabulary cut ranks (count DESC, token ASC) — a total
   *    order, so the top-1000 boundary is unambiguous.
   */
-object TuningQueries {
+object TuningQueries extends graft.QueryFamily {
 
   /** x^n for n a power of two, by explicit squaring. */
   private def sq(c: Column, n: Int): Column =
@@ -32,8 +32,6 @@ object TuningQueries {
     * identical to [[sq]]'s). */
   private def sqSql(e: String, n: Int): String =
     if (n == 1) e else { val h = sqSql(e, n / 2); s"($h*$h)" }
-
-  private val tokens: Column = graft.functions.TextNGrams.mkTokenList(col("text"))
 
   /** 64-hash MinHash band configs under test: bands × rows = 64. */
   private val bandConfigs = Seq((32, 2), (16, 4), (8, 8), (4, 16))
@@ -75,12 +73,12 @@ object TuningQueries {
     // token table) and broadcast into the token stream; per-doc rates
     // aggregate with rounded-decimal sums.
     "llm_oov_rate" -> ((s, dir) => {
-      val toks = Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"), explode(tokens).as("tok"))
-      val vocab = toks.groupBy("tok").agg(count(lit(1)).as("cnt"))
+      val tokRows = Tables.documents(s, dir)
+        .select(col("doc_id"), col("lang"), explode(toks).as("tok"))
+      val vocab = tokRows.groupBy("tok").agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("tok").asc).limit(1000)
         .select(col("tok").as("v_tok"))
-      toks
+      tokRows
         .join(broadcast(vocab), col("tok") === col("v_tok"), "left")
         .groupBy("doc_id", "lang")
         .agg(count(lit(1)).as("n_tok"),
@@ -125,7 +123,7 @@ object TuningQueries {
     // counts; everything stays in integer token arithmetic.
     "llm_seq_len_tradeoff" -> ((s, dir) => {
       Tables.documents(s, dir)
-        .select(col("lang"), size(tokens).cast("long").as("n_tok"))
+        .select(col("lang"), size(toks).cast("long").as("n_tok"))
         .where(col("n_tok") >= 1)
         .selectExpr("lang", "n_tok",
           "stack(4, 128L, 256L, 512L, 1024L) AS max_len")
@@ -166,8 +164,8 @@ object TuningQueries {
     },
 
     "llm_oov_rate" ->
-      """WITH t AS (SELECT doc_id, lang,
-        |    unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS tok
+      s"""WITH t AS (SELECT doc_id, lang,
+        |    unnest($duckToks) AS tok
         |  FROM documents),
         |v AS (SELECT tok AS v_tok FROM (
         |    SELECT tok, count(*) AS cnt FROM t GROUP BY tok
@@ -195,8 +193,8 @@ object TuningQueries {
         |ORDER BY event_id""".stripMargin,
 
     "llm_seq_len_tradeoff" ->
-      """WITH d AS (SELECT lang,
-        |    CAST(len(list_filter(string_split(text, ' '), x -> x <> '')) AS BIGINT) AS n_tok
+      s"""WITH d AS (SELECT lang,
+        |    CAST(len($duckToks) AS BIGINT) AS n_tok
         |  FROM documents),
         |e AS (SELECT lang, n_tok,
         |    unnest(CAST([128, 256, 512, 1024] AS BIGINT[])) AS max_len

@@ -23,11 +23,7 @@ import graft.sources.Tables
   *    the same string from a keyed aggregate — the equivalence proof
   *    that transform_values/map_filter did what the SQL says).
   */
-object VectorAuditQueries {
-
-  private val toks: org.apache.spark.sql.Column =
-    graft.functions.TextNGrams.mkTokenList(col("text"))
-  private val duckToks = "list_filter(string_split(text, ' '), x -> x <> '')"
+object VectorAuditQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
 

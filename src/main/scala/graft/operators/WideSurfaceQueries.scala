@@ -36,11 +36,7 @@ import graft.sources.Tables
   *    the oracle; caught by sf0.001 parity on first run); DuckDB `date_trunc('day', …)` yields
   *    DATE, cast back to TIMESTAMP to match Spark's window struct.
   */
-object WideSurfaceQueries {
-
-  private val toks: org.apache.spark.sql.Column =
-    graft.functions.TextNGrams.mkTokenList(col("text"))
-  private val duckToks = "list_filter(string_split(text, ' '), x -> x <> '')"
+object WideSurfaceQueries extends graft.QueryFamily {
 
   /** Per-sfdir, app-id-salted scratch dir for the XML round trip
     * (shared scheme, see graft.tools.Scratch). */

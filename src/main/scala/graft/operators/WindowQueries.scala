@@ -15,7 +15,7 @@ import graft.sources.Tables
   * across engines. Moving averages are exact decimal-sum / count so the
   * doubles are bit-identical cross-engine.
   */
-object WindowQueries {
+object WindowQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
     "win_row_number" -> ((s, dir) => {

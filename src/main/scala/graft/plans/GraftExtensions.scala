@@ -19,10 +19,7 @@ import graft.functions.{CharGramArray, FloatVecDot, ShingleArray, SortedIntersec
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction(GraftFunctions.vecDotDescriptor)
-    e.injectFunction(GraftFunctions.sortedIntersectDescriptor)
-    e.injectFunction(GraftFunctions.shinglesDescriptor)
-    e.injectFunction(GraftFunctions.charGramsDescriptor)
+    GraftFunctions.descriptors.foreach(e.injectFunction)
     // isnotnull(kernel(x)) → isnotnull(x): keeps inferred constraints
     // from re-evaluating the text kernels inside parquet scan filters
     e.injectOptimizerRule(_ => KernelNullRule)
@@ -30,41 +27,34 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftFunctions {
-  private def info(name: String, usage: String) =
-    new ExpressionInfo("graft", null, name, usage, "", "", "", "", "4.0.0", "", "scala_udf")
+  private type Builder = Seq[Expression] => Expression
 
-  val vecDotDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("vec_dot"),
-      info("vec_dot", "vec_dot(a, b) - dot product of two array<float> vectors as double"),
-      (exprs: Seq[Expression]) => FloatVecDot(exprs(0), exprs(1)))
+  /** Every graft SQL function, once: (name, usage, builder). Both entry
+    * points are derived from this table. */
+  private val functions: Seq[(String, String, Builder)] = Seq(
+    ("vec_dot", "vec_dot(a, b) - dot product of two array<float> vectors as double",
+      exprs => FloatVecDot(exprs(0), exprs(1))),
+    ("sorted_intersect_count",
+      "sorted_intersect_count(a, b) - |a ∩ b| for sorted distinct array<string>",
+      exprs => SortedIntersectCount(exprs(0), exprs(1))),
+    ("shingles",
+      "shingles(text) - sorted distinct 3-token shingles (UTF-8 byte order) as array<string>",
+      exprs => ShingleArray(exprs(0))),
+    ("char_grams",
+      "char_grams(text) - sorted distinct character 20-grams (code-point windows, UTF-8 byte order) as array<string>",
+      exprs => CharGramArray(exprs(0))))
 
-  val sortedIntersectDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("sorted_intersect_count"),
-      info("sorted_intersect_count",
-        "sorted_intersect_count(a, b) - |a ∩ b| for sorted distinct array<string>"),
-      (exprs: Seq[Expression]) => SortedIntersectCount(exprs(0), exprs(1)))
-
-  val shinglesDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("shingles"),
-      info("shingles",
-        "shingles(text) - sorted distinct 3-token shingles (UTF-8 byte order) as array<string>"),
-      (exprs: Seq[Expression]) => ShingleArray(exprs(0)))
-
-  val charGramsDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("char_grams"),
-      info("char_grams",
-        "char_grams(text) - sorted distinct character 20-grams (code-point windows, UTF-8 byte order) as array<string>"),
-      (exprs: Seq[Expression]) => CharGramArray(exprs(0)))
+  /** `SparkSessionExtensions.injectFunction` descriptors (config time). */
+  def descriptors: Seq[(FunctionIdentifier, ExpressionInfo, Builder)] =
+    functions.map { case (name, usage, build) =>
+      (FunctionIdentifier(name),
+        new ExpressionInfo("graft", null, name, usage, "", "", "", "", "4.0.0", "", "scala_udf"),
+        build)
+    }
 
   /** Runtime registration on a live session (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", exprs => FloatVecDot(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_count", exprs => SortedIntersectCount(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingles", exprs => ShingleArray(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "char_grams", exprs => CharGramArray(exprs(0)), "scala_udf")
-  }
+  def register(spark: SparkSession): Unit =
+    functions.foreach { case (name, _, build) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, build, "scala_udf")
+    }
 }

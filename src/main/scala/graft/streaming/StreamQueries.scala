@@ -15,7 +15,7 @@ import graft.sources.Tables
   * suite, which drives MemoryStream epochs through `window`,
   * `session_window` and `dropDuplicatesWithinWatermark`.
   */
-object StreamQueries {
+object StreamQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
     "stream_tumbling" -> ((s, dir) => {

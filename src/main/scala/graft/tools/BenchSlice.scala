@@ -95,16 +95,14 @@ object BenchSlice {
       n -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
     }
 
-    val qs = timed.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val arts = artifacts.map { case (k, (sec, consumer)) =>
-      "\"" + k + "\":{\"build_sec\":" + sec +
-        ",\"first_timed_consumer\":\"" + consumer + "\"}"
-    }.mkString("{", ",", "}")
+    def obj(kvs: Iterable[(String, String)]): String =
+      kvs.map { case (k, v) => s"${JsonStr(k)}:$v" }.mkString("{", ",", "}")
+    val qs = obj(timed.map { case (k, v) => k -> v.toString })
+    val arts = obj(artifacts.map { case (k, (sec, consumer)) =>
+      k -> s"""{"build_sec":$sec,"first_timed_consumer":${JsonStr(consumer)}}""" })
     val total = timed.collect { case (_, v) if v >= 0 => v }.sum
-    val conf = injected.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-      .mkString("{", ",", "}")
-    println(s"""{"slice_total_sec":$total,"queries":$qs,"artifacts":$arts,"injected_conf":$conf,"sf_dir":"$sfDir"}""")
+    val conf = obj(injected.map { case (k, v) => k -> JsonStr(v) })
+    println(s"""{"slice_total_sec":$total,"queries":$qs,"artifacts":$arts,"injected_conf":$conf,"sf_dir":${JsonStr(sfDir)}}""")
     spark.stop()
   }
 }

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryUtils.toks
 import graft.sources.Tables
 
 /** Build-once memo for the corpus UNIGRAM FREQUENCY LEDGER — the
@@ -48,10 +49,6 @@ import graft.sources.Tables
   * build, and DeterminismSpec's double-run rebuilds per run.
   */
 object TokenArtifacts {
-
-  /** Whitespace tokens with empties dropped — the one corpus
-    * tokenization rule (SURVEY §7.2). */
-  private def toks = graft.functions.TextNGrams.mkTokenList(col("text"))
 
   /** The ledger expression over an arbitrary documents frame — the
     * exact shape [[unigram]] materializes, exposed so ScaleDryRun's

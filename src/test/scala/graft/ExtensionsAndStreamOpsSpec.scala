@@ -32,6 +32,17 @@ class ExtensionsAndStreamOpsSpec extends AnyFunSuite {
     assert(shShort.isEmpty) // empty tokens dropped -> under 3 tokens
   }
 
+  test("config-time descriptors and runtime registration list the same functions") {
+    GraftFunctions.register(spark)
+    val names = GraftFunctions.descriptors.map(_._1.funcName)
+    assert(names == Seq("vec_dot", "sorted_intersect_count", "shingles", "char_grams"))
+    for ((id, info, _) <- GraftFunctions.descriptors) {
+      assert(info.getName == id.funcName)
+      assert(info.getUsage.startsWith(id.funcName + "("))
+      assert(spark.catalog.functionExists(id.funcName), s"${id.funcName} not registered")
+    }
+  }
+
   test("KernelNullRule reduces kernel null checks to input null checks") {
     val prev = spark.experimental.extraOptimizations
     spark.experimental.extraOptimizations = prev :+ graft.plans.KernelNullRule

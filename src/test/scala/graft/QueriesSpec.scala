@@ -28,59 +28,61 @@ class QueriesSpec extends AnyFunSuite {
   }
 
   test("category maps have no colliding query names (++ would drop them)") {
-    import graft.operators._
-    import graft.functions.{FnQueries, UdfQueries}
-    import graft.streaming.StreamQueries
-    val cats = Seq(
-      ScanFilterQueries.queries, JoinQueries.queries, AggQueries.queries,
-      WindowQueries.queries, SetQueries.queries, FnQueries.queries,
-      GenQueries.queries, StreamQueries.queries, LlmQueries.queries,
-      UdfQueries.queries, ScaleQueries.queries, ExtraQueries.queries,
-      Round2Queries.queries, PipelineQueries.queries, SurfaceQueries.queries,
-      CurationQueries.queries, CorpusStatsQueries.queries,
-      TrainPrepQueries.queries, TpchQueries.queries,
-      StatSurfaceQueries.queries, DepthQueries.queries,
-      CorpusHealthQueries.queries, BehaviorQueries.queries,
-      Round3Queries.queries, TpchDeepQueries.queries,
-      PipelineDepthQueries.queries, AnalyticsDepthQueries.queries,
-      EvalDepthQueries.queries, ModernSurfaceQueries.queries,
-      GraphEvalQueries.queries, GraphStatsQueries.queries,
-      FinalDepthQueries.queries, TpchSupplyQueries.queries,
-      TuningQueries.queries, AnalyticsClassicsQueries.queries,
-      CorpusModelQueries.queries, WideSurfaceQueries.queries,
-      CohortSignalQueries.queries, QualitySignalQueries.queries,
-      RobustStatsQueries.queries, SessionSurfaceQueries.queries,
-      VectorAuditQueries.queries, CurationRulesQueries.queries,
-      Round6Queries.queries, Round6bQueries.queries, Round6cQueries.queries,
-      Round6dQueries.queries, Round6eQueries.queries, Round6fQueries.queries,
-      Round7Queries.queries, Round7bQueries.queries,
-      Round7cQueries.queries, Round7dQueries.queries,
-      Round7eQueries.queries, Round7fQueries.queries,
-      Round7gQueries.queries, Round7hQueries.queries,
-      Round7iQueries.queries, Round7jQueries.queries,
-      Round8Queries.queries, Round8bQueries.queries,
-      Round8cQueries.queries, Round8dQueries.queries,
-      Round8eQueries.queries, Round8fQueries.queries,
-      Round8gQueries.queries, Round8hQueries.queries,
-      Round8iQueries.queries, Round8jQueries.queries,
-      Round8kQueries.queries, Round8lQueries.queries,
-      Round8mQueries.queries, Round8nQueries.queries,
-      Round8oQueries.queries, Round8pQueries.queries,
-      Round8qQueries.queries, Round8rQueries.queries,
-      Round8sQueries.queries, Round8tQueries.queries,
-      Round8uQueries.queries, Round8vQueries.queries,
-      Round8wQueries.queries, Round8xQueries.queries,
-      Round8yQueries.queries, Round8zQueries.queries,
-      Round9aQueries.queries, Round9bQueries.queries,
-      Round9cQueries.queries, Round9dQueries.queries,
-      Round9eQueries.queries, Round9fQueries.queries,
-      Round9gQueries.queries, Round9hQueries.queries,
-      Round9iQueries.queries, Round9jQueries.queries,
-      Round9kQueries.queries, Round9lQueries.queries,
-      Round9mQueries.queries, Round9nQueries.queries,
-      Round9oQueries.queries)
+    val cats = SparkEntry.families.map(_.queries)
     assert(cats.map(_.size).sum == SparkEntry.queries.size,
       "duplicate query name across category objects")
+  }
+
+  private def stubFamily(name: String, qs: Seq[String], os: Seq[String]): QueryFamily =
+    new QueryFamily {
+      val queries: Map[String, QueryUtils.QFn] =
+        qs.map(q => q -> ((s: org.apache.spark.sql.SparkSession, _: String) => s.range(1).toDF())).toMap
+      val oracles: Map[String, String] = os.map(_ -> "SELECT 1").toMap
+      override def familyName: String = name
+    }
+
+  test("registry merges families and rejects duplicate or orphaned names") {
+    val a = stubFamily("FamA", Seq("q_a", "q_shared"), Seq("q_a"))
+    val ok = QueryFamily.registry(Seq(a, stubFamily("FamB", Seq("q_b"), Seq("q_b"))))
+    assert(ok.queries.keySet == Set("q_a", "q_shared", "q_b"))
+    assert(ok.oracleSql.keySet == Set("q_a", "q_b"))
+
+    val dupQuery = intercept[IllegalArgumentException](QueryFamily.registry(
+      Seq(a, stubFamily("FamB", Seq("q_shared"), Nil))))
+    assert(dupQuery.getMessage.contains("query names registered by more than one family"))
+    assert(dupQuery.getMessage.contains("q_shared (FamA, FamB)"))
+
+    // query names disjoint, oracle names colliding
+    val dupOracle = intercept[IllegalArgumentException](QueryFamily.registry(Seq(
+      stubFamily("FamA", Seq("q_x"), Seq("q_x")),
+      stubFamily("FamB", Seq("q_y"), Seq("q_x")))))
+    assert(dupOracle.getMessage.contains("oracle names registered by more than one family"))
+    assert(dupOracle.getMessage.contains("q_x (FamA, FamB)"))
+
+    // an oracle whose query lives in ANOTHER family is still an orphan
+    val orphan = intercept[IllegalArgumentException](QueryFamily.registry(Seq(
+      stubFamily("FamA", Seq("q_a"), Nil),
+      stubFamily("FamB", Seq("q_b"), Seq("q_b", "q_a")))))
+    assert(orphan.getMessage.contains("oracles with no query in their own family"))
+    assert(orphan.getMessage.contains("q_a (FamB)"))
+  }
+
+  test("shared SQL idioms are spelled only in QueryUtils") {
+    // a drifted copy of a twin idiom would desynchronize families while
+    // each still matches its own oracle (the hazard hash60 names)
+    import scala.jdk.CollectionConverters._
+    val idioms = Seq(QueryUtils.duckToks,
+      "daily AS (SELECT event_type, CAST(day(ts)")
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .filterNot(_.getFileName.toString == "QueryUtils.scala").toSeq
+    assert(files.size > 100, s"source walk found only ${files.size} files")
+    val hits = for {
+      f <- files
+      text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+      idiom <- idioms if text.contains(idiom)
+    } yield s"$f: $idiom"
+    assert(hits.isEmpty, s"copies of a QueryUtils idiom: ${hits.mkString("; ")}")
   }
 
   test("SURVEY §2 and OPERATORS.md inventory counts match the shipped surface") {

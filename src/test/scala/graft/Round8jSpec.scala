@@ -3,15 +3,14 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestRounding.r
+
 /** Round-8 tenth-wave anchors: the Wasserstein-1 statistic against a
   * direct driver-side CDF integral, and the TVD / Hellinger / Canberra
   * profiles against replays from collected counts, at sf0.001.
   */
 class Round8jSpec extends AnyFunSuite {
   import TestSpark._
-
-  private def r(x: Double, dp: Int) =
-    BigDecimal(x).setScale(dp, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   test("agg_emd_wasserstein matches a driver CDF-integral replay at sf0.001") {
     val ev = graft.sources.Tables.events(spark, sf0001)

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestRounding.r
+
 /** Round-8 eleventh-wave anchors: Donchian extremes, the VWAP ratio,
   * the OBV signed ledger and the MFI split replayed driver-side from
   * the collected sf0.001 daily bars.
@@ -28,9 +30,6 @@ class Round8kSpec extends AnyFunSuite {
       et -> bs.sortBy(_._2).map(b => (b._2, b._3, b._4, b._5, b._6))
     }
   }
-
-  private def r(x: Double, dp: Int) =
-    BigDecimal(x).setScale(dp, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   test("win_donchian matches rolling extremes at sf0.001") {
     val got = SparkEntry.queries("win_donchian")(spark, sf0001).collect()

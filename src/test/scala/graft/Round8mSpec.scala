@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestRounding.r
+
 /** Round-8 thirteenth-wave anchors: ARI / SMOG / Guiraud-Herdan /
   * Honoré replayed driver-side from collected documents at sf0.001.
   */
@@ -22,9 +24,6 @@ class Round8mSpec extends AnyFunSuite {
 
   private def sentences(t: String): Long =
     math.max(1L, t.count(c => c == '.' || c == '!' || c == '?').toLong)
-
-  private def r(x: Double, dp: Int) =
-    BigDecimal(x).setScale(dp, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   test("llm_ari replays from char/word/sentence totals at sf0.001") {
     val got = SparkEntry.queries("llm_ari")(spark, sf0001).collect()

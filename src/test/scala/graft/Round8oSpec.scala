@@ -3,14 +3,13 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestRounding.r
+
 /** Round-8 fifteenth-wave anchors: Atkinson / Palma / ABC / quantile
   * ratios replayed from collected revenue and value lists at sf0.001.
   */
 class Round8oSpec extends AnyFunSuite {
   import TestSpark._
-
-  private def r(x: Double, dp: Int) =
-    BigDecimal(x).setScale(dp, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** (nationkey, custkey, revenue-centi) for customers with orders. */
   private lazy val custRev: Seq[(Long, Long, Long)] = {

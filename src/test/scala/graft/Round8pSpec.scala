@@ -3,15 +3,14 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestRounding.r
+
 /** Round-8 sixteenth-wave anchors: ADX directional ledger, SMA cross
   * states, the VR(5) moment replay and the underwater profile, from
   * collected sf0.001 daily series.
   */
 class Round8pSpec extends AnyFunSuite {
   import TestSpark._
-
-  private def r(x: Double, dp: Int) =
-    BigDecimal(x).setScale(dp, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** type -> day-sorted (day, xc) daily close-sum centi series. */
   private lazy val daily: Map[String, Seq[(Long, Long)]] =

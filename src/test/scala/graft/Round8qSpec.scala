@@ -3,15 +3,14 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestRounding.r
+
 /** Round-8 seventeenth-wave anchors: Holm vs BH set relations, a
   * Page's L replay, Cochran-Armitage and Fleiss ledger replays, at
   * sf0.001.
   */
 class Round8qSpec extends AnyFunSuite {
   import TestSpark._
-
-  private def r(x: Double, dp: Int) =
-    BigDecimal(x).setScale(dp, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   test("agg_holm_bonferroni rejects a prefix of the p-ordering and is " +
       "never more liberal than BH at the same alpha at sf0.001") {

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestRounding.r
+
 /** Round-8 eighteenth-wave anchors: MSTTR segments, the Dale-Chall
   * easy-list grade and the token spectra replayed from collected
   * documents at sf0.001.
@@ -17,9 +19,6 @@ class Round8rSpec extends AnyFunSuite {
 
   private def toks(t: String): Seq[String] =
     t.split(" ", -1).filter(_.nonEmpty).toSeq
-
-  private def r(x: Double, dp: Int) =
-    BigDecimal(x).setScale(dp, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   test("llm_msttr replays 50-token segments at sf0.001") {
     val got = SparkEntry.queries("llm_msttr")(spark, sf0001).collect()

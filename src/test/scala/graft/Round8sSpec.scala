@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestRounding.r
+
 /** Round-8 nineteenth-wave anchors: journey paths, gap spectrum,
   * entry/exit pairs and session sizes replayed from collected event
   * sequences at sf0.001.
@@ -20,9 +22,6 @@ class Round8sSpec extends AnyFunSuite {
       .groupBy(_._1).map { case (u, xs) =>
         u -> xs.sortBy(x => (x._2, x._3)).map(x => (x._2, x._3, x._4)).toSeq
       }
-
-  private def r(x: Double, dp: Int) =
-    BigDecimal(x).setScale(dp, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   test("agg_user_paths matches a brute-force triple count at sf0.001") {
     val counts = collection.mutable.Map.empty[(String, String, String), Long]

@@ -3,15 +3,14 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestRounding.r
+
 /** Round-8 twentieth-wave anchors: cycle times, aging bands, vendor
   * concentration and co-supplier pairs replayed from collected order
   * and lineitem rows at sf0.001.
   */
 class Round8tSpec extends AnyFunSuite {
   import TestSpark._
-
-  private def r(x: Double, dp: Int) =
-    BigDecimal(x).setScale(dp, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   test("agg_order_cycle replays cycle stats at sf0.001") {
     val cyc = graft.sources.Tables.lineitem(spark, sf0001)

@@ -3,15 +3,14 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestRounding.r
+
 /** Round-8 twenty-first-wave anchors: histogram mass identities,
   * separation ordering, 1-NN accuracy vs a brute-force replay, and
   * the drift ledger, at sf0.001.
   */
 class Round8uSpec extends AnyFunSuite {
   import TestSpark._
-
-  private def r(x: Double, dp: Int) =
-    BigDecimal(x).setScale(dp, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   test("llm_cosine_hist masses 32640 constant pairs at sf0.001") {
     val got = SparkEntry.queries("llm_cosine_hist")(spark, sf0001).collect()

@@ -3,15 +3,14 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestRounding.r
+
 /** Round-8 twenty-second-wave anchors: the nested-JSON roundtrip
   * against the direct aggregate, a driver Luhn replay, contribution
   * conservation, and the XOR partition identities, at sf0.001.
   */
 class Round8vSpec extends AnyFunSuite {
   import TestSpark._
-
-  private def r(x: Double, dp: Int) =
-    BigDecimal(x).setScale(dp, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   test("source_json_nested roundtrip equals the direct aggregate at sf0.001") {
     val direct = graft.sources.Tables.lineitem(spark, sf0001)

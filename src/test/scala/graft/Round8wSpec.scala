@@ -3,14 +3,13 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestRounding.r
+
 /** Round-8 twenty-third-wave anchors: sign/McNemar count replays,
   * tracking-signal bounds and the rolling z-score ledger, at sf0.001.
   */
 class Round8wSpec extends AnyFunSuite {
   import TestSpark._
-
-  private def r(x: Double, dp: Int) =
-    BigDecimal(x).setScale(dp, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** type -> day-sorted (day, xc) daily centi series. */
   private lazy val daily: Map[String, Seq[(Long, Long)]] =

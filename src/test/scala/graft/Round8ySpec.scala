@@ -3,14 +3,13 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestRounding.r
+
 /** Round-8 twenty-fifth-wave anchors: BigInt moment replays, fence
   * counts, Dixon picks and the median/MAD pair, at sf0.001.
   */
 class Round8ySpec extends AnyFunSuite {
   import TestSpark._
-
-  private def r(x: Double, dp: Int) =
-    BigDecimal(x).setScale(dp, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** type -> (event_id, xc) rows. */
   private lazy val vals: Map[String, Seq[(Long, Long)]] =

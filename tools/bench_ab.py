@@ -20,9 +20,11 @@ Output: <out.json> with per-query paired deltas + a markdown table on
 stdout (paste into SCALING.md's measurement-protocol section).
 
 Worktrees live under .ab/ (git-ignored) and are reused across
-invocations; each gets src/main/scala/graft/tools/BenchSlice.scala
-copied from the CURRENT tree (the probe is part of the protocol, not
-of either rev) and is compiled with the repo's own sbt settings.
+invocations; each gets the probe (BenchSlice.scala and the two helpers
+it calls, CauseChain.scala and JsonStr.scala, all in
+src/main/scala/graft/tools/) copied from the CURRENT tree (the probe is
+part of the protocol, not of either rev, so revs older than a helper
+still compile) and is compiled with the repo's own sbt settings.
 Remove them when the measurement session is over
 (`git worktree remove --force .ab/<sha>`): they hold full src/ copies
 of old revs, which pollutes LoC/duplication diagnostics run over the
@@ -41,6 +43,9 @@ import sys
 # driver from inside a different git repository silently created .ab
 # worktrees in the wrong repo.
 REPO = pathlib.Path(__file__).resolve().parents[1]
+# The probe each rev runs: BenchSlice plus the helpers it calls.
+PROBE_DIR = "src/main/scala/graft/tools"
+PROBE_FILES = ["BenchSlice.scala", "CauseChain.scala", "JsonStr.scala"]
 ADD_OPENS = [
     "java.base/java.lang", "java.base/java.lang.invoke",
     "java.base/java.lang.reflect", "java.base/java.io",
@@ -63,9 +68,10 @@ def prepare(rev: str) -> pathlib.Path:
     if not (wt / "build.sbt").exists():
         wt.parent.mkdir(exist_ok=True)
         sh(["git", "worktree", "add", "--detach", str(wt), sha])
-    probe = wt / "src/main/scala/graft/tools/BenchSlice.scala"
-    probe.parent.mkdir(parents=True, exist_ok=True)
-    shutil.copyfile(REPO / "src/main/scala/graft/tools/BenchSlice.scala", probe)
+    for name in PROBE_FILES:
+        dst = wt / PROBE_DIR / name
+        dst.parent.mkdir(parents=True, exist_ok=True)
+        shutil.copyfile(REPO / PROBE_DIR / name, dst)
     print(f"[ab] compiling {rev} ({sha}) in {wt} ...", file=sys.stderr)
     sh(["sbt", "-batch", "compile"], cwd=wt)
     return wt

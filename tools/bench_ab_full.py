@@ -27,7 +27,7 @@ Usage:
   listed in the output under "failed" — loudly, never silently.
 
 Worktree/housekeeping semantics are bench_ab.py's (worktrees under
-.ab/, the CURRENT tree's BenchSlice copied in as the shared probe);
+.ab/, the CURRENT tree's probe, BenchSlice and its helpers, copied in);
 remove worktrees after the measurement session.
 """
 import json
