@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
@@ -19,7 +20,8 @@ import graft.sources.Tables
   *  - every query ends in a total ORDER BY with a unique tiebreak.
   *
   * A Spark idiom and its DuckDB twin sit side by side (`toks` /
-  * `duckToks`, `dailyCenti` / `dailyCentiSql`, ...): a query and its
+  * `duckToks`, `dailyCenti` / `dailyCentiSql`, `hash60` / `hash60Sql`,
+  * `dailyBars` / `dailyBarsSql`, ...): a query and its
   * oracle must use the pair together, and no other source file spells
   * the SQL half out (QueriesSpec enforces it), so a drifted copy cannot
   * silently desynchronize two families that each still match their own
@@ -52,14 +54,18 @@ object QueryUtils {
 
   /** md5-derived 60-bit non-negative int of a key column — THE shared
     * deterministic-hash idiom (sampling, sharding, splits). Engine-
-    * portable: DuckDB computes the same via
-    * `('0x'||substr(md5(x),1,15))::BIGINT`. One definition on purpose:
+    * portable: DuckDB computes the same via [[hash60Sql]]. One
+    * definition on purpose:
     * llm_sample_hash / llm_shard_assign / llm_split_train /
     * llm_curate_e2e must stay bit-identical to each other — a drifted
     * copy would silently desynchronize split assignment across
     * operators while each still matches its own oracle. */
   def hash60(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("bigint")
+
+  /** DuckDB twin of [[hash60]] over the SQL expression `c`. */
+  def hash60Sql(c: String): String =
+    s"('0x' || substr(md5(CAST($c AS VARCHAR)), 1, 15))::BIGINT"
 
   /** Whitespace token count of the `text` column, empty tokens dropped
     * (matches the DuckDB `len($duckToks)` oracle idiom). */
@@ -130,6 +136,39 @@ object QueryUtils {
       |    CAST(sum(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS xu
       |  FROM events GROUP BY 1, 2)""".stripMargin
 
+  /** Per-event-type daily bars in exact centi-units: high `hc`, low
+    * `lc`, close `cc` (the day's last event by (ts, event_id)) and
+    * volume `vol` (the day's event count). */
+  def dailyBars(s: SparkSession, dir: String): DataFrame = {
+    val e = Tables.events(s, dir)
+      .select(col("event_type"), col("event_id"), col("ts"),
+        (col("value").cast(DecimalType(18, 6)) * 100)
+          .cast(DecimalType(18, 0)).cast("long").as("xc"))
+      .withColumn("day", dayofmonth(col("ts")).cast("long"))
+    val wd = Window.partitionBy("event_type", "day")
+      .orderBy(col("ts").desc, col("event_id").desc)
+    e.withColumn("rd", row_number().over(wd))
+      .groupBy("event_type", "day")
+      .agg(max("xc").as("hc"), min("xc").as("lc"),
+        max(when(col("rd") === 1, col("xc"))).as("cc"),
+        count(lit(1)).as("vol"))
+  }
+
+  /** DuckDB twin of [[dailyBars]]: CTE `bars` (no leading WITH). */
+  val dailyBarsSql =
+    """bars AS (SELECT event_type, day,
+      |    max(xc) AS hc, min(xc) AS lc,
+      |    max(CASE WHEN rd = 1 THEN xc END) AS cc,
+      |    CAST(count(*) AS BIGINT) AS vol
+      |  FROM (SELECT event_type, event_id,
+      |      CAST(day(ts) AS BIGINT) AS day,
+      |      CAST(CAST(value AS DECIMAL(18,6)) * 100
+      |        AS DECIMAL(18,0))::BIGINT AS xc,
+      |      row_number() OVER (PARTITION BY event_type, day(ts)
+      |        ORDER BY ts DESC, event_id DESC) AS rd
+      |    FROM events) x
+      |  GROUP BY 1, 2)""".stripMargin
+
   /** Per-event-type centi values `xc` with a per-type total-order rank
     * `rn` (by xc, event_id) and the type's size `n`. Events are
     * corpus-scaled and event_type has ~5 values, so a plain partitioned
@@ -178,7 +217,6 @@ object QueryUtils {
     * materialization (broadcast build) time instead of silently
     * inflating an O(d²) join. */
   def boundedLedgerGuard(value: Column, bound: Int, what: String): Column = {
-    import org.apache.spark.sql.expressions.Window
     synchronized { guardMarkers += what }
     val ndom = count(lit(1)).over(Window.partitionBy())
     when(ndom <= lit(bound), value)

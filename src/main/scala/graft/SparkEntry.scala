@@ -50,9 +50,9 @@ object SparkEntry {
     Round8sQueries, Round8tQueries, Round8uQueries, Round8vQueries,
     Round8wQueries, Round8xQueries, Round8yQueries, Round8zQueries,
     Round9aQueries, Round9bQueries, Round9cQueries, Round9dQueries,
-    Round9eQueries, Round9fQueries, Round9gQueries, Round9hQueries,
-    Round9iQueries, Round9jQueries, Round9kQueries, Round9lQueries,
-    Round9mQueries, Round9nQueries, Round9oQueries)
+    Round9fQueries, Round9gQueries, Round9hQueries, Round9iQueries,
+    Round9jQueries, Round9kQueries, Round9lQueries, Round9mQueries,
+    Round9nQueries, Round9oQueries, AnnQueries)
   private val registry = QueryFamily.registry(families)
 
   /** Every declared query by name. */

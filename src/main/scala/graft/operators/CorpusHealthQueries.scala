@@ -10,7 +10,8 @@ import graft.sources.Tables
 /** Corpus-health batch (round 2, batch 8): label-outlier detection over
   * embeddings (the mislabeled-sample sweep every labeled dataset needs)
   * and a Zipf-law fit per language (the token-distribution sanity check
-  * for synthetic or corrupted corpora).
+  * for synthetic or corrupted corpora). The batch's ANN recall@1 lives
+  * in [[AnnQueries]].
   *
   * Scale notes (100 TB):
   *  - `llm_label_outliers` is long-form relational algebra: one
@@ -104,42 +105,6 @@ object CorpusHealthQueries extends graft.QueryFamily {
         .orderBy("label", "rk")
     }),
 
-    // ---- ANN recall@1 vs exact ground truth ------------------------------
-    // Recall@1 of the own-cell ANN probe (same k-means codebook as
-    // llm_ann_ivf, 64 cells) against the EXACT 1-NN, measured on a
-    // deterministic 256-vector hash-sampled eval slice — the round-2
-    // "sampled at scale" prose, now in code: the slice is top-256 by
-    // (md5-hash, vec_id), so its size is constant in the corpus and
-    // both sides stay corpus-linear. The exact side reuses
-    // AnnCodebook's triangle-pruned exact 1-NN (no brute-force theta
-    // join anywhere); the ANN side is one cell-equi-join over the
-    // sampled vectors. A sampled vector whose cell holds no partner
-    // counts as a miss (left join).
-    "llm_ann_recall" -> ((s, dir) => {
-      import graft.functions.AnnCodebook
-      import graft.functions.VectorFunctions.vecDot
-      val (e, _) = AnnCodebook.indexed(s, dir)
-      val sample = AnnCodebook.hashSample(e, 256)
-      val exact = AnnCodebook.exactNN1From(s, dir, Some(sample))
-        .select(col("vec_id").as("a_id"), col("nn_id").as("nn_exact"))
-      val aS = e.select(col("vec_id").as("a_id"), col("cell"),
-        col("embedding").as("a_v"), col("nrm").as("a_n"))
-        .join(broadcast(sample), Seq("a_id"))
-      val bS = e.select(col("vec_id").as("b_id"), col("cell"),
-        col("embedding").as("b_v"), col("nrm").as("b_n"))
-      val ann = aS.join(bS, Seq("cell"))
-        .where(col("a_id") =!= col("b_id"))
-        .select(col("a_id"), col("b_id"),
-          (vecDot(col("a_v"), col("b_v")) / (col("a_n") * col("b_n"))).as("cos_sim"))
-        .groupBy("a_id")
-        .agg(max_by(col("b_id"), struct(col("cos_sim"), -col("b_id"))).as("nn_ann"))
-      exact.join(ann, Seq("a_id"), "left")
-        .agg(count(lit(1)).as("n_vecs"),
-          count_if(col("nn_ann") === col("nn_exact")).as("n_match"))
-        .select(col("n_vecs"), col("n_match"),
-          round(col("n_match").cast("double") / col("n_vecs"), 4).as("recall_at_1"))
-    }),
-
     // ---- Zipf-law slope per language ------------------------------------
     // Fit log2(count) ~ log2(rank) over the token frequency table of
     // each language; natural text lands near slope -1, templated or
@@ -192,36 +157,6 @@ object CorpusHealthQueries extends graft.QueryFamily {
         |  FROM scored)
         |SELECT label, CAST(rk AS BIGINT) AS rk, vec_id, cos_cent
         |FROM ranked WHERE rk <= 3 ORDER BY label, rk""".stripMargin,
-
-    "llm_ann_recall" -> (
-      s"WITH ${graft.functions.AnnCodebook.oracleCtes}," +
-      """
-        |ke AS (SELECT e.vec_id, list_transform(e.embedding, x -> CAST(x AS DOUBLE)) AS ev,
-        |    kcells.cell AS cell
-        |  FROM embeddings e JOIN kcells ON e.vec_id = kcells.vec_id),
-        |n AS (SELECT vec_id, ev, cell,
-        |    sqrt(list_aggregate(list_transform(ev, x -> x * x), 'sum')) AS nrm
-        |  FROM ke),
-        |ksmp AS (SELECT vec_id AS a_id FROM (
-        |    SELECT vec_id, row_number() OVER (ORDER BY
-        |      ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT, vec_id) AS rk
-        |    FROM embeddings) WHERE rk <= 256),
-        |p AS (SELECT a.vec_id a_id, b.vec_id b_id, a.cell acell, b.cell bcell,
-        |    list_aggregate(list_transform(list_zip(a.ev, b.ev), z -> z[1] * z[2]), 'sum')
-        |      / (a.nrm * b.nrm) AS cos_sim
-        |  FROM n a JOIN ksmp ON a.vec_id = ksmp.a_id
-        |  JOIN n b ON a.vec_id <> b.vec_id),
-        |ex AS (SELECT a_id, b_id AS nn_exact FROM (
-        |    SELECT a_id, b_id, row_number() OVER (PARTITION BY a_id
-        |      ORDER BY cos_sim DESC, b_id ASC) rn FROM p) WHERE rn = 1),
-        |an AS (SELECT a_id, b_id AS nn_ann FROM (
-        |    SELECT a_id, b_id, row_number() OVER (PARTITION BY a_id
-        |      ORDER BY cos_sim DESC, b_id ASC) rn FROM p WHERE acell = bcell)
-        |  WHERE rn = 1)
-        |SELECT CAST(count(*) AS BIGINT) AS n_vecs,
-        |  CAST(count_if(an.nn_ann = ex.nn_exact) AS BIGINT) AS n_match,
-        |  round(count_if(an.nn_ann = ex.nn_exact) * 1.0 / count(*), 4) AS recall_at_1
-        |FROM ex LEFT JOIN an USING (a_id)""".stripMargin),
 
     "llm_zipf_slope" ->
       s"""WITH tf AS (SELECT lang,

@@ -5,14 +5,12 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.QueryUtils._
-import graft.functions.AnnCodebook
 import graft.sources.Tables
 
 /** §2.N — corpus-modelling analytics: train/test n-gram novelty (the
   * memorization-risk complement of `llm_contamination_rate`),
-  * vocabulary growth over corpus deciles (Heaps'-law curve), and the
-  * ANN codebook cell-occupancy audit (index skew — the number that
-  * decides whether the IVF partitioning survives a skewed corpus).
+  * and vocabulary growth over corpus deciles (Heaps'-law curve); the
+  * batch's ANN codebook cell-occupancy audit lives in [[AnnQueries]].
   *
   * Determinism notes: splits use the shared [[hash60]] bucket (the SAME
   * assignment as `llm_split_train` — a drifted copy would silently
@@ -95,25 +93,6 @@ object CorpusModelQueries extends graft.QueryFamily {
             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
             .as("cum_vocab"))
         .orderBy("decile")
-    }),
-
-    // ---- ANN codebook cell-occupancy audit ------------------------------
-    // Vectors per k-means cell, share of the corpus, and size rank —
-    // the skew report for the IVF index (a cell holding 30% of the
-    // corpus means probe cost is NOT the promised n/K; at 100 TB it
-    // means one storage partition is 300× its siblings). Reads the
-    // memoized build-once index (cells are its partition key); every
-    // window here runs over the ≤64-row cell aggregate.
-    "llm_ann_cell_balance" -> ((s, dir) => {
-      val (e, _) = AnnCodebook.indexed(s, dir)
-      val cb = e.groupBy("cell").agg(count(lit(1)).as("n_vecs"))
-      cb.select(col("cell"), col("n_vecs"),
-          (col("n_vecs").cast(DoubleType) /
-            sum(col("n_vecs")).over(Window.partitionBy())).as("share"),
-          row_number().over(
-            Window.orderBy(col("n_vecs").desc, col("cell").asc))
-            .cast("long").as("size_rank"))
-        .orderBy("cell")
     })
   )
 
@@ -121,7 +100,7 @@ object CorpusModelQueries extends graft.QueryFamily {
 
     "llm_ngram_novelty" -> s"""
       |WITH d AS (SELECT doc_id, lang, $duckToks AS tk,
-      |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 100 AS bucket
+      |    ${hash60Sql("doc_id")} % 100 AS bucket
       |  FROM documents WHERE len($duckToks) >= 5),
       |g AS (SELECT DISTINCT doc_id, lang, bucket,
       |    md5(array_to_string(list_slice(tk, i, i + 4), ' ')) AS g
@@ -151,16 +130,6 @@ object CorpusModelQueries extends graft.QueryFamily {
       |SELECT decile, new_tokens,
       |  CAST(sum(new_tokens) OVER (ORDER BY decile
       |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_vocab
-      |FROM pd ORDER BY decile""".stripMargin,
-
-    "llm_ann_cell_balance" -> s"""
-      |WITH ${AnnCodebook.oracleCtes},
-      |cb AS (SELECT cell, CAST(count(*) AS BIGINT) AS n_vecs
-      |  FROM kcells GROUP BY cell),
-      |t AS (SELECT CAST(sum(n_vecs) AS BIGINT) AS total FROM cb)
-      |SELECT cell, n_vecs,
-      |  CAST(n_vecs AS DOUBLE) / (SELECT total FROM t) AS share,
-      |  CAST(row_number() OVER (ORDER BY n_vecs DESC, cell ASC) AS BIGINT) AS size_rank
-      |FROM cb ORDER BY cell""".stripMargin
+      |FROM pd ORDER BY decile""".stripMargin
   )
 }

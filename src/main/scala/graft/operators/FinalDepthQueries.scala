@@ -1,11 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
-import graft.QueryUtils.{QFn, decSum4, duckToks, toks, ts}
+import graft.QueryUtils.{QFn, decSum4, duckToks, hash60Sql, toks, ts}
 import graft.sources.Tables
 
 /** §2.N — round-3 closing batch: the last expressible TPC-H query
@@ -251,49 +250,6 @@ object FinalDepthQueries extends graft.QueryFamily {
           sum(when(!col("late"), col("value")).cast(DecimalType(18, 2)))
             .cast(DoubleType).as("kept_sum"))
         .orderBy("ws", "event_type")
-    }),
-
-    // ---- ANN recall@10: 3-probe IVF vs exact slice ----------------------
-    // The standard ANN eval beside recall@1: for the deterministic
-    // 256-vector slice, exact cosine top-10 (corpus × broadcast slice —
-    // pair volume bounded by 256·n, the broadcast side constant) vs the
-    // index's top-10 probing each query's 3 best codebook cells (the
-    // llm_ann_multiprobe regime). recall@10 = |exact∩probed| / |exact|.
-    "llm_ann_recall10" -> ((s, dir) => {
-      import graft.functions.AnnCodebook
-      import graft.functions.VectorFunctions.vecDot
-      val (e, cent) = AnnCodebook.indexed(s, dir)
-      val sample = AnnCodebook.hashSample(e, 256)
-      val aS = e.select(col("vec_id").as("a_id"),
-        col("embedding").as("a_v"), col("nrm").as("a_n"))
-        .join(broadcast(sample), Seq("a_id"))
-      def top10(pairs: DataFrame): DataFrame = pairs
-        .withColumn("rk", row_number().over(Window.partitionBy("a_id")
-          .orderBy(col("cos_sim").desc, col("b_id").asc)))
-        .where(col("rk") <= 10).select("a_id", "b_id")
-      val cos = (vecDot(col("a_v"), col("b_v")) /
-        (col("a_n") * col("b_n"))).as("cos_sim")
-      val ex10 = top10(
-        e.select(col("vec_id").as("b_id"), col("embedding").as("b_v"),
-          col("nrm").as("b_n"))
-          .crossJoin(broadcast(aS))
-          .where(col("a_id") =!= col("b_id"))
-          .select(col("a_id"), col("b_id"), cos))
-      val probes = AnnCodebook.probeCells(aS, cent)
-      val ann10 = top10(probes.join(aS, "a_id")
-        .join(e.select(col("cell").as("pcell"), col("vec_id").as("b_id"),
-          col("embedding").as("b_v"), col("nrm").as("b_n")), "pcell")
-        .where(col("a_id") =!= col("b_id"))
-        .select(col("a_id"), col("b_id"), cos))
-      ex10.join(ann10.withColumn("hit", lit(1L)), Seq("a_id", "b_id"), "left")
-        .agg(countDistinct(col("a_id")).as("n_vecs"),
-          count(lit(1)).as("n_pairs"), count(col("hit")).as("n_hits"))
-        // recall as an EXACT half-up 1e-4 integer (BoundaryGuard r9:
-        // hits/(10·n_vecs) with a 2-5-smooth denominator terminates
-        // and lands exactly on 4dp half boundaries)
-        .select(col("n_vecs"), col("n_hits"),
-          (expr("(2 * 10000 * n_hits + n_pairs) div (2 * n_pairs)")
-            .cast(DoubleType) / 10000.0).as("recall_at_10"))
     })
   )
 
@@ -410,8 +366,8 @@ object FinalDepthQueries extends graft.QueryFamily {
         |ORDER BY a_id, b_id""".stripMargin,
 
     "stream_late_drop" ->
-      """WITH b AS (SELECT *,
-        |    epoch_us(ts + (('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 15))::BIGINT % 1800)
+      s"""WITH b AS (SELECT *,
+        |    epoch_us(ts + (${hash60Sql("event_id")} % 1800)
         |             * INTERVAL 1 SECOND) // 300000000 AS batch
         |  FROM events),
         |bm AS (SELECT batch, max(ts) AS mt FROM b GROUP BY batch),
@@ -427,41 +383,6 @@ object FinalDepthQueries extends graft.QueryFamily {
         |  count(*) FILTER (late) AS n_late,
         |  CAST(sum(CAST(value AS DECIMAL(18,2))) FILTER (NOT late) AS DOUBLE)
         |    AS kept_sum
-        |FROM e GROUP BY 1, 2 ORDER BY ws, event_type""".stripMargin,
-
-    "llm_ann_recall10" -> (
-      s"WITH ${graft.functions.AnnCodebook.oracleCtes}," +
-      s"""
-        |ke AS (SELECT e.vec_id, list_transform(e.embedding, x -> CAST(x AS DOUBLE)) AS ev,
-        |    kcells.cell AS cell
-        |  FROM embeddings e JOIN kcells ON e.vec_id = kcells.vec_id),
-        |n AS (SELECT vec_id, ev, cell,
-        |    sqrt(list_aggregate(list_transform(ev, x -> x * x), 'sum')) AS nrm
-        |  FROM ke),
-        |ksmp AS (SELECT vec_id AS a_id FROM (
-        |    SELECT vec_id, row_number() OVER (ORDER BY
-        |      ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT, vec_id) AS rk
-        |    FROM embeddings) WHERE rk <= 256),
-        |asd AS (SELECT a_id, ev AS a_v, nrm AS a_n
-        |  FROM n JOIN ksmp ON n.vec_id = ksmp.a_id),
-        |kqs AS (SELECT a_id, qv FROM kq JOIN ksmp ON kq.vec_id = ksmp.a_id),
-        |${graft.functions.AnnCodebook.oracleProbeCells},
-        |p AS (SELECT a.a_id, b.vec_id AS b_id, b.cell AS bcell,
-        |    list_aggregate(list_transform(list_zip(a.a_v, b.ev), z -> z[1] * z[2]), 'sum')
-        |      / (a.a_n * b.nrm) AS cos_sim
-        |  FROM asd a JOIN n b ON b.vec_id <> a.a_id),
-        |ex10 AS (SELECT a_id, b_id FROM (
-        |    SELECT a_id, b_id, row_number() OVER (PARTITION BY a_id
-        |      ORDER BY cos_sim DESC, b_id ASC) AS rk FROM p) WHERE rk <= 10),
-        |an10 AS (SELECT a_id, b_id, 1 AS hit FROM (
-        |    SELECT p.a_id, p.b_id, row_number() OVER (PARTITION BY p.a_id
-        |      ORDER BY cos_sim DESC, b_id ASC) AS rk
-        |    FROM p JOIN kpr ON p.a_id = kpr.a_id AND p.bcell = kpr.pcell)
-        |  WHERE rk <= 10)
-        |SELECT CAST(count(DISTINCT a_id) AS BIGINT) AS n_vecs,
-        |  CAST(count(hit) AS BIGINT) AS n_hits,
-        |  CAST((2 * 10000 * count(hit) + count(*)) // (2 * count(*))
-        |    AS DOUBLE) / 10000.0 AS recall_at_10
-        |FROM ex10 LEFT JOIN an10 USING (a_id, b_id)""".stripMargin)
+        |FROM e GROUP BY 1, 2 ORDER BY ws, event_type""".stripMargin
   )
 }

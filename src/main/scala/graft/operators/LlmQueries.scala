@@ -4,10 +4,11 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QueryUtils._
-import graft.functions.VectorFunctions.{vecDot, vecNorm}
+import graft.functions.VectorFunctions.vecNorm
 import graft.sources.Tables
 
-/** §2.K — LLM-data-pipeline operators over `documents` / `embeddings`.
+/** §2.K — LLM-data-pipeline operators over `documents` / `embeddings`
+  * (the vector-search ones live in [[AnnQueries]]).
   *
   * Scale design (100 TB):
   *  - `llm_dedup_near` is a prefix-filtered (PPJoin-style) exact shingle
@@ -16,10 +17,6 @@ import graft.sources.Tables
   *    generation, so candidate volume tracks true near-dup density
   *    instead of O(n²). The DuckDB oracle brute-forces the same
   *    semantics — prefix filtering at threshold t is lossless.
-  *  - vector similarity uses the codegen'd FloatVecDot expression, not
-  *    interpreted lambdas (see VectorFunctions).
-  *  - brute-force kNN here is the correctness oracle; the LSH/IVF scale
-  *    path ships alongside in ScaleQueries.
   */
 object LlmQueries extends graft.QueryFamily {
 
@@ -111,28 +108,6 @@ object LlmQueries extends graft.QueryFamily {
 
     "llm_dedup_near" -> ((s, dir) => nearDupPairs(Tables.documents(s, dir))),
 
-    "llm_simsearch_topk" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val q = emb.where(col("vec_id") === 0)
-        .select(col("embedding").as("qv"))
-      emb.where(col("vec_id") =!= 0)
-        .crossJoin(broadcast(q))
-        .select(col("vec_id"),
-          (vecDot(col("embedding"), col("qv"))
-            / (vecNorm(col("embedding")) * vecNorm(col("qv")))).as("cos_sim"))
-        .orderBy(col("cos_sim").desc, col("vec_id").asc)
-        .limit(10)
-    }),
-
-    // EXACT all-corpus 1-NN — no longer the whitelisted brute-force
-    // theta join: AnnCodebook.exactNN1 routes the same semantics
-    // through k-means cells with triangle-inequality cell pruning
-    // (lossless — see its scaladoc for the bound), so the plan is
-    // cell-equi-joins plus K-row broadcasts. The DuckDB oracle stays
-    // brute force: pruning must not move a single output bit.
-    "llm_knn_join" -> ((s, dir) =>
-      graft.functions.AnnCodebook.exactNN1(s, dir).orderBy("vec_id")),
-
     "llm_text_stats" -> ((s, dir) => {
       Tables.documents(s, dir)
         .groupBy("lang")
@@ -207,28 +182,6 @@ object LlmQueries extends graft.QueryFamily {
       |SELECT a_id AS doc_a, b_id AS doc_b, CAST(inter AS DOUBLE) / uni AS jaccard
       |FROM p WHERE inter * 10 >= uni * 6 ORDER BY doc_a, doc_b""".stripMargin
 
-  private val simsearchOracle =
-    """WITH q AS (SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
-      |           FROM embeddings WHERE vec_id = 0),
-      |e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ev
-      |      FROM embeddings WHERE vec_id <> 0)
-      |SELECT e.vec_id,
-      |  list_aggregate(list_transform(list_zip(e.ev, q.qv), p -> p[1] * p[2]), 'sum') /
-      |  (sqrt(list_aggregate(list_transform(e.ev, x -> x * x), 'sum')) *
-      |   sqrt(list_aggregate(list_transform(q.qv, x -> x * x), 'sum'))) AS cos_sim
-      |FROM e, q ORDER BY cos_sim DESC, vec_id ASC LIMIT 10""".stripMargin
-
-  private val knnOracle =
-    """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ev
-      |           FROM embeddings),
-      |n AS (SELECT vec_id, ev, sqrt(list_aggregate(list_transform(ev, x -> x * x), 'sum')) AS nrm FROM e),
-      |p AS (SELECT a.vec_id a_id, b.vec_id b_id,
-      |        list_aggregate(list_transform(list_zip(a.ev, b.ev), z -> z[1] * z[2]), 'sum')
-      |          / (a.nrm * b.nrm) AS cos_sim
-      |      FROM n a JOIN n b ON a.vec_id <> b.vec_id),
-      |r AS (SELECT *, row_number() OVER (PARTITION BY a_id ORDER BY cos_sim DESC, b_id ASC) rn FROM p)
-      |SELECT a_id AS vec_id, b_id AS nn_id, cos_sim FROM r WHERE rn = 1 ORDER BY vec_id""".stripMargin
-
   private val tfidfOracle =
     s"""WITH tok AS (SELECT doc_id,
       |  unnest($duckToks) term
@@ -249,8 +202,6 @@ object LlmQueries extends graft.QueryFamily {
         |FROM documents GROUP BY 1 ORDER BY text_md5""".stripMargin,
 
     "llm_dedup_near" -> dupNearOracle,
-    "llm_simsearch_topk" -> simsearchOracle,
-    "llm_knn_join" -> knnOracle,
 
     "llm_text_stats" ->
       """SELECT lang, count(*) AS n_docs,

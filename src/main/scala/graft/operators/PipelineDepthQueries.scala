@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
-import graft.QueryUtils.{QFn, duckToks, hash60, nTok, toks}
+import graft.QueryUtils.{QFn, duckToks, hash60, hash60Sql, nTok, toks}
 import graft.functions.VectorFunctions.{vecDot, vecNorm}
 import graft.sources.Tables
 
@@ -341,7 +341,7 @@ object PipelineDepthQueries extends graft.QueryFamily {
       |    CAST(floor(1152921504606846976.0 * tok_min / tok_lang) AS BIGINT) AS thr
       |  FROM lm),
       |kept AS (SELECT pd.lang, tok, tok_lang FROM pd JOIN th ON pd.lang = th.lang
-      |  WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT < thr)
+      |  WHERE ${hash60Sql("doc_id")} < thr)
       |SELECT lang, CAST(count(*) AS BIGINT) AS n_kept,
       |  CAST(sum(tok) AS BIGINT) AS tok_kept,
       |  round(CAST(sum(tok) AS DOUBLE) / any_value(tok_lang), 6) AS kept_frac

@@ -196,15 +196,15 @@ object PipelineQueries extends graft.QueryFamily {
 
   val oracles: Map[String, String] = Map(
     "llm_sample_hash" ->
-      """SELECT doc_id, lang, source,
-        |  ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 100 AS bucket
+      s"""SELECT doc_id, lang, source,
+        |  ${hash60Sql("doc_id")} % 100 AS bucket
         |FROM documents
-        |WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 100 < 10
+        |WHERE ${hash60Sql("doc_id")} % 100 < 10
         |ORDER BY doc_id""".stripMargin,
 
     "llm_sample_stratified" ->
-      """WITH h AS (SELECT doc_id, lang,
-        |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT AS hv
+      s"""WITH h AS (SELECT doc_id, lang,
+        |    ${hash60Sql("doc_id")} AS hv
         |  FROM documents),
         |r AS (SELECT doc_id, lang,
         |    row_number() OVER (PARTITION BY lang ORDER BY hv, doc_id) AS rk

@@ -4,13 +4,12 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QueryUtils._
-import graft.functions.VectorFunctions.vecDot
 import graft.sources.Tables
 
 /** §2.N — round-2 surface additions: SQL subqueries (scalar / IN /
   * EXISTS / LATERAL, planned through Spark's real subquery machinery via
   * `spark.sql`), cumulative window stats, interval arithmetic, an
-  * explicitly salted skew-safe aggregation, multi-probe LSH ANN, and
+  * explicitly salted skew-safe aggregation, and
   * connected-component dedup clustering (the step after pair
   * generation in a production dedup pipeline).
   *
@@ -129,35 +128,6 @@ object Round2Queries extends graft.QueryFamily {
           sum(col("psum")).cast("double").as("total_price"),
           sum(col("pcnt")).as("n_rows"))
         .orderBy("l_returnflag")
-    }),
-
-    // ---- multi-probe IVF ANN --------------------------------------------
-    // probes the query's 3 NEAREST codebook cells (by centroid score) —
-    // the standard recall lever over a single k-means index; at 100 TB
-    // the probe set is still a constant fan-out of partition-key
-    // lookups, not a scan. Round 2 multi-probed the hyperplane-LSH
-    // buckets via Hamming-1 flips; with the AnnCodebook k-means
-    // quantizer (64 cells) the analogous move is nearest-centroid
-    // probing. llm_ann_lsh keeps the hyperplane index alive.
-    "llm_ann_multiprobe" -> ((s, dir) => {
-      import graft.functions.AnnCodebook
-      val (e, cent) = AnnCodebook.indexed(s, dir)
-      val cn = cent.select(col("cell").as("pcell"), col("csum"))
-      val probes = e.where(col("vec_id") === 0)
-        .select(AnnCodebook.quantize(col("embedding")).as("qv"),
-          col("embedding").as("qe"), col("nrm").as("qn"))
-        .crossJoin(broadcast(cn))
-        .select(col("qe"), col("qn"), col("pcell"),
-          AnnCodebook.score(col("qv"), col("csum")).as("sc"))
-        .orderBy(col("sc").desc, col("pcell").asc).limit(3)
-        .select("qe", "qn", "pcell")
-      e.where(col("vec_id") =!= 0)
-        .join(broadcast(probes), col("cell") === col("pcell"))
-        .select(col("vec_id"), col("cell"),
-          (vecDot(col("embedding"), col("qe"))
-            / (col("nrm") * col("qn"))).as("cos_sim"))
-        .orderBy(col("cos_sim").desc, col("vec_id").asc)
-        .limit(10)
     }),
 
     // ---- null-safe equality join (<=>) ----------------------------------
@@ -449,28 +419,6 @@ object Round2Queries extends graft.QueryFamily {
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price,
         |  count(*) AS n_rows
         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "llm_ann_multiprobe" -> (
-      s"WITH ${graft.functions.AnnCodebook.oracleCtes}," +
-      s"""
-        |ke AS (SELECT e.vec_id, list_transform(e.embedding, x -> CAST(x AS DOUBLE)) AS ev,
-        |    kcells.cell AS cell
-        |  FROM embeddings e JOIN kcells ON e.vec_id = kcells.vec_id),
-        |kqq AS (SELECT qv FROM kq WHERE vec_id = 0),
-        |kprobe AS (SELECT cell AS pcell FROM (
-        |    SELECT c.cell, row_number() OVER (
-        |      ORDER BY ${graft.functions.AnnCodebook.oracleScore("q.qv", "c.csum")} DESC,
-        |        c.cell ASC) AS rn
-        |    FROM kqq q CROSS JOIN ${graft.functions.AnnCodebook.oracleFinalCent} c)
-        |  WHERE rn <= 3),
-        |q AS (SELECT ev AS qv FROM ke WHERE vec_id = 0)
-        |SELECT ke.vec_id, ke.cell,
-        |  list_aggregate(list_transform(list_zip(ke.ev, q.qv), z -> z[1] * z[2]), 'sum') /
-        |  (sqrt(list_aggregate(list_transform(ke.ev, x -> x * x), 'sum')) *
-        |   sqrt(list_aggregate(list_transform(q.qv, x -> x * x), 'sum'))) AS cos_sim
-        |FROM ke JOIN kprobe ON ke.cell = kprobe.pcell, q
-        |WHERE ke.vec_id <> 0
-        |ORDER BY cos_sim DESC, vec_id ASC LIMIT 10""".stripMargin),
 
     "llm_dedup_cluster" -> clusterOracle,
 

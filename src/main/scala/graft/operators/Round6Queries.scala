@@ -9,50 +9,18 @@ import graft.sources.Tables
 
 /** §2.N (r6) — round-6 surface batch: market-concentration and
   * inequality analytics (HHI, Theil T, Hill tail index), a rolling
-  * OLS trend window, product-quantization ANN codes + ADC search,
-  * rank-biased overlap between document rankings, a 2-D skyline via
-  * the distributed prefix scan, a windowed streaming top-k, and a
-  * right-censored Kaplan–Meier survival estimator.
+  * OLS trend window, rank-biased overlap between document rankings,
+  * a 2-D skyline via the distributed prefix scan, a windowed streaming
+  * top-k, and a right-censored Kaplan–Meier survival estimator.
   *
   * Determinism notes (§7.2 conventions): every float-risky reduction
-  * is rounded-then-decimal-summed (Theil/Hill log terms, PQ squared
-  * distances, RBO geometric terms); shares and slopes are exact
-  * decimal/integer numerators with ONE final double division; the two
-  * corpus-wide rankings ride GlobalRank (total orders), never an
-  * unpartitioned window. PQ subspace distances reuse the fold-order
-  * convention the ANN family established: Spark's `aggregate` left
-  * fold over `zip_with` matches DuckDB's `list_aggregate(_, 'sum')`
-  * element order, so argmin code assignment is bit-identical.
+  * is rounded-then-decimal-summed (Theil/Hill log terms, RBO
+  * geometric terms); shares and slopes are exact decimal/integer
+  * numerators with ONE final double division; the two corpus-wide
+  * rankings ride GlobalRank (total orders), never an unpartitioned
+  * window. (The batch's PQ codes + ADC search live in [[AnnQueries]].)
   */
 object Round6Queries extends graft.QueryFamily {
-
-  /** PQ code assignment shared by `llm_ann_pq` (codes + error) and
-    * `llm_ann_pq_adc` (asymmetric-distance search): one row per
-    * (vec_id, subspace) with the argmin codeword and its squared
-    * distance. Codebook = the subvectors of vec_id 1..16 (128 rows by
-    * construction — always broadcast); distances are left-fold sums
-    * matching DuckDB's `list_aggregate 'sum'` element order, so the
-    * argmin (ties → lowest code id) is bit-identical cross-engine.
-    */
-  private def pqAssign(s: org.apache.spark.sql.SparkSession, dir: String) = {
-    val e = Tables.embeddings(s, dir)
-      .select(col("vec_id"),
-        transform(col("embedding"), x => x.cast(DoubleType)).as("ev"))
-    val subs = (0 until 8).map(j =>
-      struct(lit(j).as("j"), slice(col("ev"), j * 8 + 1, 8).as("sv")))
-    val vecSub = e.select(col("vec_id"), explode(array(subs: _*)).as("s"))
-      .select(col("vec_id"), col("s.j").as("j"), col("s.sv").as("sv"))
-    val code = vecSub.where(col("vec_id").between(1, 16))
-      .select(col("vec_id").cast("int").as("c"), col("j").as("cj"),
-        col("sv").as("cw"))
-    val dist = vecSub.join(broadcast(code), col("j") === col("cj"))
-      .select(col("vec_id"), col("j"), col("c"),
-        aggregate(zip_with(col("sv"), col("cw"), (a, b) => (a - b) * (a - b)),
-          lit(0.0), (acc, x) => acc + x).as("d2"))
-    dist.groupBy("vec_id", "j")
-      .agg(min(struct(col("d2"), col("c"))).as("b"))
-      .select(col("vec_id"), col("j"), col("b.c").as("c"), col("b.d2").as("d2"))
-  }
 
   val queries: Map[String, QFn] = Map(
 
@@ -175,26 +143,6 @@ object Round6Queries extends graft.QueryFamily {
         .orderBy("user_id", "event_id")
     }),
 
-    // ---- product-quantization ANN codes --------------------------------
-    // The memory-compressed ANN path: split each 64-dim embedding into
-    // 8 contiguous 8-dim subspaces, quantize each subvector to its
-    // nearest codeword (L2, ties → lowest code id) from a 16-entry
-    // codebook per subspace (deterministically the subvectors of
-    // vec_id 1..16), and emit the 8-byte PQ code plus the total
-    // quantization error. At 100 TB this is how embeddings fit in
-    // executor memory for ANN re-ranking: 8 code bytes instead of 256
-    // vector bytes, codebook broadcast (128 rows by construction),
-    // assignment map-side — the only corpus shuffle is the final sort.
-    "llm_ann_pq" -> ((s, dir) => {
-      pqAssign(s, dir).groupBy("vec_id")
-        .agg(concat_ws(":",
-            transform(array_sort(collect_list(struct(col("j"), col("c")))),
-              p => p.getField("c").cast("string"))).as("pq_code"),
-          sum(round(col("d2"), 8).cast(DecimalType(18, 8))).cast(DoubleType)
-            .as("qerr"))
-        .orderBy("vec_id")
-    }),
-
     // ---- rank-biased overlap of two document rankings ------------------
     // RBO@100 (p = 0.9) between ranking A (docs by n_chars desc) and
     // ranking B (docs by whitespace token count desc): the IR-standard
@@ -260,41 +208,6 @@ object Round6Queries extends graft.QueryFamily {
           col("price").cast(DoubleType).as("price"),
           col("qty").cast(DoubleType).as("qty"))
         .orderBy("l_orderkey", "l_linenumber")
-    }),
-
-    // ---- PQ asymmetric-distance top-k search ---------------------------
-    // The search half of the PQ pipeline: precompute the query vector's
-    // 16×8 lookup table of subspace distances to every codeword, then
-    // score each vector as the SUM OF TABLE LOOKUPS over its 8 codes —
-    // never touching the original vectors. This is how PQ serves ANN at
-    // 100 TB: codes are 8 bytes/vector in executor memory, the LUT is
-    // 128 broadcast rows, scoring is one equi-join + grouped sum, and
-    // the top-k plans as TakeOrderedAndProject.
-    "llm_ann_pq_adc" -> ((s, dir) => {
-      val best = pqAssign(s, dir)
-      val e = Tables.embeddings(s, dir)
-        .select(col("vec_id"),
-          transform(col("embedding"), x => x.cast(DoubleType)).as("ev"))
-      val qsubs = (0 until 8).map(j =>
-        struct(lit(j).as("j"), slice(col("ev"), j * 8 + 1, 8).as("sv")))
-      val qsub = e.where(col("vec_id") === 0)
-        .select(explode(array(qsubs: _*)).as("s"))
-        .select(col("s.j").as("lj"), col("s.sv").as("qv"))
-      val cb = e.where(col("vec_id").between(1, 16))
-        .select(col("vec_id").cast("int").as("lc"),
-          explode(array(qsubs: _*)).as("s"))
-        .select(col("lc"), col("s.j").as("cj"), col("s.sv").as("cw"))
-      val lut = cb.join(broadcast(qsub), col("cj") === col("lj"))
-        .select(col("lc"), col("cj"),
-          aggregate(zip_with(col("qv"), col("cw"), (a, b) => (a - b) * (a - b)),
-            lit(0.0), (acc, x) => acc + x).as("qd2"))
-      best.where(col("vec_id") =!= 0)
-        .join(broadcast(lut), col("j") === col("cj") && col("c") === col("lc"))
-        .groupBy("vec_id")
-        .agg(sum(round(col("qd2"), 8).cast(DecimalType(18, 8)))
-          .cast(DoubleType).as("adc_dist"))
-        .orderBy(col("adc_dist").asc, col("vec_id").asc)
-        .limit(10)
     }),
 
     // ---- windowed streaming top-k --------------------------------------
@@ -551,24 +464,6 @@ object Round6Queries extends graft.QueryFamily {
         |    / CAST(10 * sxx - sx * sx AS DOUBLE) AS slope10
         |FROM s WHERE rn >= 10 ORDER BY user_id, event_id""".stripMargin,
 
-    "llm_ann_pq" ->
-      """WITH e AS (SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ev
-        |  FROM embeddings),
-        |js AS (SELECT unnest(generate_series(0, 7)) AS j),
-        |vs AS (SELECT vec_id, j, ev[j*8+1 : j*8+8] AS sv FROM e CROSS JOIN js),
-        |cb AS (SELECT CAST(vec_id AS INT) AS c, j AS cj, sv AS cw
-        |  FROM vs WHERE vec_id BETWEEN 1 AND 16),
-        |d AS (SELECT v.vec_id, v.j, cb.c,
-        |    list_aggregate(list_transform(list_zip(v.sv, cb.cw),
-        |      p -> (p[1] - p[2]) * (p[1] - p[2])), 'sum') AS d2
-        |  FROM vs v JOIN cb ON v.j = cb.cj),
-        |b AS (SELECT vec_id, j, c, d2 FROM d
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id, j ORDER BY d2, c) = 1)
-        |SELECT vec_id, string_agg(c::VARCHAR, ':' ORDER BY j) AS pq_code,
-        |  CAST(sum(CAST(round(d2, 8) AS DECIMAL(18,8))) AS DOUBLE) AS qerr
-        |FROM b GROUP BY vec_id ORDER BY vec_id""".stripMargin,
-
     "llm_rbo_rankings" ->
       s"""WITH d AS (SELECT doc_id, n_chars,
         |    len($duckToks) AS n_tok
@@ -603,31 +498,6 @@ object Round6Queries extends graft.QueryFamily {
         |  CAST(li.qty AS DOUBLE) AS qty
         |FROM li JOIN f ON li.price = f.price AND li.qty = f.gq
         |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "llm_ann_pq_adc" ->
-      """WITH e AS (SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ev
-        |  FROM embeddings),
-        |js AS (SELECT unnest(generate_series(0, 7)) AS j),
-        |vs AS (SELECT vec_id, j, ev[j*8+1 : j*8+8] AS sv FROM e CROSS JOIN js),
-        |cb AS (SELECT CAST(vec_id AS INT) AS c, j AS cj, sv AS cw
-        |  FROM vs WHERE vec_id BETWEEN 1 AND 16),
-        |d AS (SELECT v.vec_id, v.j, cb.c,
-        |    list_aggregate(list_transform(list_zip(v.sv, cb.cw),
-        |      p -> (p[1] - p[2]) * (p[1] - p[2])), 'sum') AS d2
-        |  FROM vs v JOIN cb ON v.j = cb.cj),
-        |b AS (SELECT vec_id, j, c FROM d
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id, j ORDER BY d2, c) = 1),
-        |lut AS (SELECT cb.c AS lc, cb.cj,
-        |    list_aggregate(list_transform(list_zip(q.sv, cb.cw),
-        |      p -> (p[1] - p[2]) * (p[1] - p[2])), 'sum') AS qd2
-        |  FROM cb JOIN (SELECT j, sv FROM vs WHERE vec_id = 0) q ON cb.cj = q.j)
-        |SELECT b.vec_id,
-        |  CAST(sum(CAST(round(lut.qd2, 8) AS DECIMAL(18,8))) AS DOUBLE)
-        |    AS adc_dist
-        |FROM b JOIN lut ON b.j = lut.cj AND b.c = lut.lc
-        |WHERE b.vec_id <> 0
-        |GROUP BY b.vec_id ORDER BY adc_dist ASC, vec_id ASC LIMIT 10""".stripMargin,
 
     "stream_topk_window" ->
       """WITH e AS (SELECT

@@ -9,8 +9,9 @@ import graft.sources.Tables
 
 /** §2.N (r6, fifth wave) — deterministic differential-privacy count
   * release, one-way ANOVA, a CUSUM control chart via the prefix-sum
-  * identity, an embedding per-dimension variance audit, and the
-  * stream-stream interval join shape (batch-checked).
+  * identity, and the stream-stream interval join shape
+  * (batch-checked); the batch's embedding per-dimension variance audit
+  * lives in [[AnnQueries]].
   *
   * Determinism (§7.2): the DP noise is an md5-seeded inverse-CDF
   * Laplace draw (identical integer→double chain on both engines);
@@ -113,45 +114,6 @@ object Round6eQueries extends graft.QueryFamily {
         .orderBy("user_id")
     }),
 
-    // ---- embedding per-dimension variance audit --------------------------
-    // ANN-health check: mean and variance of every embedding
-    // coordinate, plus each dimension's share of total variance —
-    // collapsed (near-zero-variance) dims poison recall and signal a
-    // degenerate encoder. Coordinates ride the codebook's exact
-    // integer grid (floor 1e6 — the AnnCodebook.quantize idiom), so
-    // every moment is an integer sum; shares use 8dp-rounded
-    // decimal-summed variance terms. Map-side explode, one 64-key
-    // shuffle, 1-row total broadcast.
-    "llm_emb_dim_variance" -> ((s, dir) => {
-      val q = Tables.embeddings(s, dir)
-        .select(posexplode(graft.functions.AnnCodebook.quantize(col("embedding"))))
-        .select(col("pos").as("dim"), col("col").cast("long").as("qx"))
-      // mean and variance as EXACT half-up 1e-6 integers (BoundaryGuard
-      // r9: sq/n and (n·sqq−sq²)/(n²·1e6) with 2-5-smooth vector counts
-      // terminate and land exactly on 6dp half boundaries); decimal
-      // operands keep the moment products exact past sf100
-      val byDim = q.groupBy("dim")
-        .agg(count(lit(1)).as("n_vecs"), sum("qx").as("sq"),
-          sum(col("qx") * col("qx")).as("sqq"))
-        .withColumn("m6", expr(
-          "CASE WHEN sq >= 0 THEN (2 * sq + n_vecs) div (2 * n_vecs) " +
-            "ELSE -((2 * (-sq) + n_vecs) div (2 * n_vecs)) END"))
-        .withColumn("num",
-          col("n_vecs").cast(DecimalType(38, 0)) * col("sqq")
-            - col("sq").cast(DecimalType(38, 0)) * col("sq"))
-        .withColumn("den",
-          col("n_vecs").cast(DecimalType(38, 0)) * col("n_vecs") * 1000000)
-        .withColumn("v6", expr("(2 * num + den) div (2 * den)"))
-      val tot = byDim.agg(sum("v6").as("vt6"))
-      byDim.crossJoin(broadcast(tot))
-        .select(col("dim"), col("n_vecs"),
-          (col("m6").cast(DoubleType) / 1000000.0).as("mean"),
-          (col("v6").cast(DoubleType) / 1000000.0).as("variance"),
-          (col("v6").cast(DoubleType) / col("vt6").cast(DoubleType))
-            .as("var_share"))
-        .orderBy("dim")
-    }),
-
     // ---- stream-stream interval join (batch-checked) ---------------------
     // The conversion join both Structured Streaming sides would
     // watermark: purchases within ONE HOUR after a click by the same
@@ -233,27 +195,6 @@ object Round6eQueries extends graft.QueryFamily {
       |  round(CAST(max(s) AS DOUBLE), 4) AS max_cusum,
       |  CAST(count(*) FILTER (s > k * 5) AS BIGINT) AS n_alarms
       |FROM s GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "llm_emb_dim_variance" -> """
-      |WITH q AS (SELECT CAST(i - 1 AS INTEGER) AS dim,
-      |    CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000000) AS BIGINT) AS qx
-      |  FROM embeddings, unnest(generate_series(1, len(embedding))) u(i)),
-      |bd AS (SELECT dim, CAST(count(*) AS BIGINT) AS n_vecs,
-      |    CAST(sum(qx) AS BIGINT) AS sq, CAST(sum(qx * qx) AS BIGINT) AS sqq
-      |  FROM q GROUP BY dim),
-      |bv AS (SELECT dim, n_vecs,
-      |    CASE WHEN sq >= 0 THEN (2 * sq + n_vecs) // (2 * n_vecs)
-      |         ELSE -((2 * (-sq) + n_vecs) // (2 * n_vecs)) END AS m6,
-      |    (2 * (CAST(n_vecs AS HUGEINT) * sqq - CAST(sq AS HUGEINT) * sq)
-      |      + CAST(n_vecs AS HUGEINT) * n_vecs * 1000000)
-      |     // (2 * CAST(n_vecs AS HUGEINT) * n_vecs * 1000000) AS v6
-      |  FROM bd),
-      |tot AS (SELECT sum(v6) AS vt6 FROM bv)
-      |SELECT dim, n_vecs,
-      |  CAST(m6 AS DOUBLE) / 1000000.0 AS mean,
-      |  CAST(v6 AS DOUBLE) / 1000000.0 AS variance,
-      |  CAST(v6 AS DOUBLE) / CAST(vt6 AS DOUBLE) AS var_share
-      |FROM bv CROSS JOIN tot ORDER BY dim""".stripMargin,
 
     "stream_interval_join" -> """
       |WITH c AS (SELECT user_id AS cu, ts AS tc FROM events

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
@@ -8,69 +7,14 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
 import graft.QueryUtils._
 import graft.sources.Tables
 
-/** Round-7 third wave: ranking-quality eval (NDCG@10 of the IVF probe),
-  * resampling inference (grouped jackknife), generalized means, the
-  * recursive-CTE surface (Spark 4.x WITH RECURSIVE), and
-  * month-over-month rank movers on the GlobalRank kernel.
+/** Round-7 third wave: resampling inference (grouped jackknife),
+  * generalized means, the recursive-CTE surface (Spark 4.x WITH
+  * RECURSIVE), and month-over-month rank movers on the GlobalRank
+  * kernel (the wave's NDCG@10 lives in [[AnnQueries]]).
   */
 object Round7cQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
-
-    // ---- NDCG@10 of the IVF probe vs exact -------------------------------
-    // The graded complement of llm_ann_recall10: binary-relevance
-    // NDCG@10 of the 3-cell codebook probe against the exact top-10
-    // (a hit's VALUE depends on the rank it lands at — recall treats
-    // rank 1 and rank 10 alike, NDCG does not). Rank weights
-    // 1/log2(i+1) = ln2/ln(i+1) are round(·, 8)-quantized BEFORE the
-    // decimal DCG sums; IDCG is the same quantized sum over ranks
-    // 1..10, built in-query so both engines normalize by the identical
-    // constant. Mean over the 256-vector hash sample (queries with no
-    // in-probe hits contribute 0 through the sample-count denominator).
-    "llm_ann_ndcg" -> ((s, dir) => {
-      import graft.functions.AnnCodebook
-      import graft.functions.VectorFunctions.vecDot
-      val (e, cent) = AnnCodebook.indexed(s, dir)
-      val sample = AnnCodebook.hashSample(e, 256)
-      val aS = e.select(col("vec_id").as("a_id"),
-        col("embedding").as("a_v"), col("nrm").as("a_n"))
-        .join(broadcast(sample), Seq("a_id"))
-      val cos = (vecDot(col("a_v"), col("b_v")) /
-        (col("a_n") * col("b_n"))).as("cos_sim")
-      def top10(pairs: DataFrame): DataFrame = pairs
-        .withColumn("rk", row_number().over(Window.partitionBy("a_id")
-          .orderBy(col("cos_sim").desc, col("b_id").asc)))
-        .where(col("rk") <= 10)
-      val ex10 = top10(
-        e.select(col("vec_id").as("b_id"), col("embedding").as("b_v"),
-          col("nrm").as("b_n"))
-          .crossJoin(broadcast(aS))
-          .where(col("a_id") =!= col("b_id"))
-          .select(col("a_id"), col("b_id"), cos))
-        .select("a_id", "b_id")
-      val probes = AnnCodebook.probeCells(aS, cent)
-      val ann10 = top10(probes.join(aS, "a_id")
-        .join(e.select(col("cell").as("pcell"), col("vec_id").as("b_id"),
-          col("embedding").as("b_v"), col("nrm").as("b_n")), "pcell")
-        .where(col("a_id") =!= col("b_id"))
-        .select(col("a_id"), col("b_id"), cos))
-        .select("a_id", "b_id", "rk")
-      def w(i: org.apache.spark.sql.Column) =
-        round(log(lit(2.0)) / log(d(i) + 1), 8).cast(DecimalType(18, 8))
-      val dcg = ann10.join(ex10, Seq("a_id", "b_id"))
-        .groupBy("a_id").agg(sum(w(col("rk"))).as("dcg"))
-      val norm = sample.agg(count(lit(1)).as("n_vecs"))
-        .select(col("n_vecs"), explode(sequence(lit(1), lit(10))).as("i"))
-        .groupBy("n_vecs").agg(sum(w(col("i"))).as("idcg"))
-      dcg.crossJoin(broadcast(norm))
-        .agg(max("n_vecs").as("n_vecs"), max("idcg").as("__idcg"),
-          sum(round(col("dcg").cast(DoubleType) /
-            col("idcg").cast(DoubleType), 8).cast(DecimalType(18, 8)))
-            .as("__snd"))
-        .select(col("n_vecs"),
-          round(col("__snd").cast(DoubleType) / col("n_vecs").cast(DoubleType), 6)
-            .as("mean_ndcg10"))
-    }),
 
     // ---- grouped jackknife standard error --------------------------------
     // Leave-one-NATION-out jackknife SE of the mean order price (the
@@ -211,49 +155,6 @@ object Round7cQueries extends graft.QueryFamily {
   // ---- DuckDB oracles ----------------------------------------------------
 
   val oracles: Map[String, String] = Map(
-
-    "llm_ann_ndcg" -> (
-      s"WITH ${graft.functions.AnnCodebook.oracleCtes}," +
-      s"""
-        |ke AS (SELECT e.vec_id, list_transform(e.embedding, x -> CAST(x AS DOUBLE)) AS ev,
-        |    kcells.cell AS cell
-        |  FROM embeddings e JOIN kcells ON e.vec_id = kcells.vec_id),
-        |n AS (SELECT vec_id, ev, cell,
-        |    sqrt(list_aggregate(list_transform(ev, x -> x * x), 'sum')) AS nrm
-        |  FROM ke),
-        |ksmp AS (SELECT vec_id AS a_id FROM (
-        |    SELECT vec_id, row_number() OVER (ORDER BY
-        |      ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT, vec_id) AS rk
-        |    FROM embeddings) WHERE rk <= 256),
-        |asd AS (SELECT a_id, ev AS a_v, nrm AS a_n
-        |  FROM n JOIN ksmp ON n.vec_id = ksmp.a_id),
-        |kqs AS (SELECT a_id, qv FROM kq JOIN ksmp ON kq.vec_id = ksmp.a_id),
-        |${graft.functions.AnnCodebook.oracleProbeCells},
-        |p AS (SELECT a.a_id, b.vec_id AS b_id, b.cell AS bcell,
-        |    list_aggregate(list_transform(list_zip(a.a_v, b.ev), z -> z[1] * z[2]), 'sum')
-        |      / (a.a_n * b.nrm) AS cos_sim
-        |  FROM asd a JOIN n b ON b.vec_id <> a.a_id),
-        |ex10 AS (SELECT a_id, b_id FROM (
-        |    SELECT a_id, b_id, row_number() OVER (PARTITION BY a_id
-        |      ORDER BY cos_sim DESC, b_id ASC) AS rk FROM p) WHERE rk <= 10),
-        |an10 AS (SELECT a_id, b_id, rk FROM (
-        |    SELECT p.a_id, p.b_id, row_number() OVER (PARTITION BY p.a_id
-        |      ORDER BY cos_sim DESC, b_id ASC) AS rk
-        |    FROM p JOIN kpr ON p.a_id = kpr.a_id AND p.bcell = kpr.pcell)
-        |  WHERE rk <= 10),
-        |dcg AS (SELECT a_id,
-        |    sum(CAST(round(ln(2.0) / ln(CAST(rk AS DOUBLE) + 1), 8)
-        |      AS DECIMAL(18,8))) AS dcg
-        |  FROM an10 JOIN ex10 USING (a_id, b_id) GROUP BY a_id),
-        |norm AS (SELECT (SELECT CAST(count(*) AS BIGINT) FROM ksmp) AS n_vecs,
-        |    sum(CAST(round(ln(2.0) / ln(CAST(i AS DOUBLE) + 1), 8)
-        |      AS DECIMAL(18,8))) AS idcg
-        |  FROM unnest(generate_series(1, 10)) u(i))
-        |SELECT max(n_vecs) AS n_vecs,
-        |  round(CAST(sum(CAST(round(CAST(dcg AS DOUBLE) / CAST(idcg AS DOUBLE), 8)
-        |      AS DECIMAL(18,8))) AS DOUBLE) / CAST(max(n_vecs) AS DOUBLE), 6)
-        |    AS mean_ndcg10
-        |FROM dcg CROSS JOIN norm""".stripMargin),
 
     "agg_jackknife_nation" -> """
       |WITH o AS (SELECT c_nationkey AS nk,

@@ -140,9 +140,9 @@ object Round8Queries extends graft.QueryFamily {
       |  CAST(lo + (b99 * (hi - lo + 1)) // 1024 AS DOUBLE) / 100.0 AS p99
       |FROM q ORDER BY l_returnflag""".stripMargin,
 
-    "llm_sample_bottomk" -> """
+    "llm_sample_bottomk" -> s"""
       |WITH h AS (SELECT doc_id, lang, n_chars,
-      |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT AS hv
+      |    ${hash60Sql("doc_id")} AS hv
       |  FROM documents),
       |s AS (SELECT * FROM h ORDER BY hv, doc_id LIMIT 1000)
       |SELECT lang, CAST(count(*) AS BIGINT) AS n_sample,

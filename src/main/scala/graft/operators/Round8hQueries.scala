@@ -1,12 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import graft.QueryUtils._
-import graft.sources.Tables
 
 /** Round-8 eighth wave: the remaining classic technical indicators
   * beside OHLC / RSI / MACD / Bollinger / stochastic — average true
@@ -23,33 +21,6 @@ import graft.sources.Tables
   */
 object Round8hQueries extends graft.QueryFamily {
 
-  /** Daily (hi, lo, close) bars per event type in exact centi-units. */
-  private def dailyBars(s: SparkSession, dir: String) = {
-    val e = Tables.events(s, dir)
-      .select(col("event_type"), col("event_id"), col("ts"),
-        (col("value").cast(DecimalType(18, 6)) * 100)
-          .cast(DecimalType(18, 0)).cast("long").as("vc"))
-      .withColumn("day", dayofmonth(col("ts")).cast("long"))
-    val wd = Window.partitionBy("event_type", "day")
-      .orderBy(col("ts").desc, col("event_id").desc)
-    e.withColumn("rd", row_number().over(wd))
-      .groupBy("event_type", "day")
-      .agg(max("vc").as("hi"), min("vc").as("lo"),
-        max(when(col("rd") === 1, col("vc"))).as("cl"))
-  }
-
-  private val dailyBarsSql =
-    """bars AS (SELECT event_type, day,
-      |    CAST(max(vc) AS BIGINT) AS hi, CAST(min(vc) AS BIGINT) AS lo,
-      |    CAST(max(CASE WHEN rd = 1 THEN vc END) AS BIGINT) AS cl
-      |  FROM (SELECT event_type, CAST(day(ts) AS BIGINT) AS day,
-      |          CAST(CAST(value AS DECIMAL(18,6)) * 100 AS DECIMAL(18,0))
-      |            ::BIGINT AS vc,
-      |          row_number() OVER (PARTITION BY event_type, day(ts)
-      |            ORDER BY ts DESC, event_id DESC) AS rd
-      |        FROM events) b
-      |  GROUP BY 1, 2)""".stripMargin
-
   val queries: Map[String, QFn] = Map(
 
     // ---- average true range (14-day) ------------------------------------
@@ -60,10 +31,10 @@ object Round8hQueries extends graft.QueryFamily {
       val w = Window.partitionBy("event_type").orderBy("day")
       val wa = w.rowsBetween(-13, Window.currentRow)
       dailyBars(s, dir)
-        .withColumn("pc", lag("cl", 1).over(w))
-        .withColumn("tr", when(col("pc").isNull, col("hi") - col("lo"))
-          .otherwise(greatest(col("hi") - col("lo"),
-            abs(col("hi") - col("pc")), abs(col("lo") - col("pc")))))
+        .withColumn("pc", lag("cc", 1).over(w))
+        .withColumn("tr", when(col("pc").isNull, col("hc") - col("lc"))
+          .otherwise(greatest(col("hc") - col("lc"),
+            abs(col("hc") - col("pc")), abs(col("lc") - col("pc")))))
         .select(col("event_type"), col("day"),
           (d(col("tr")) / 100.0).as("tr"),
           round(d(sum("tr").over(wa)) / d(count(lit(1)).over(wa)) / 100.0, 6)
@@ -104,7 +75,7 @@ object Round8hQueries extends graft.QueryFamily {
     "win_cci" -> ((s, dir) => {
       val bars = graft.tools.Materialize.eager("cci.bars",
         dailyBars(s, dir)
-          .withColumn("tp3", col("hi") + col("lo") + col("cl"))
+          .withColumn("tp3", col("hc") + col("lc") + col("cc"))
           .select("event_type", "day", "tp3"))
       val exp = bars.toDF("event_type", "aday", "atp3")
         .join(bars.toDF("et2", "bday", "btp3"),
@@ -168,8 +139,8 @@ object Round8hQueries extends graft.QueryFamily {
 
     "win_atr" -> s"""
       |WITH $dailyBarsSql,
-      |tr AS (SELECT event_type, day, hi, lo, cl,
-      |    lag(cl, 1) OVER (PARTITION BY event_type ORDER BY day) AS pc
+      |tr AS (SELECT event_type, day, hc AS hi, lc AS lo,
+      |    lag(cc, 1) OVER (PARTITION BY event_type ORDER BY day) AS pc
       |  FROM bars),
       |t AS (SELECT event_type, day,
       |    CASE WHEN pc IS NULL THEN hi - lo
@@ -202,7 +173,7 @@ object Round8hQueries extends graft.QueryFamily {
 
     "win_cci" -> s"""
       |WITH $dailyBarsSql,
-      |tp AS (SELECT event_type, day, hi + lo + cl AS tp3 FROM bars),
+      |tp AS (SELECT event_type, day, hc + lc + cc AS tp3 FROM bars),
       |exp AS (SELECT a.event_type, a.day AS aday, a.tp3 AS atp3,
       |    b.tp3 AS btp3
       |  FROM tp a JOIN tp b ON a.event_type = b.event_type

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -22,37 +21,6 @@ import graft.sources.Tables
   */
 object Round8kQueries extends graft.QueryFamily {
 
-  /** Daily (hi, lo, close, volume) bars per event type in exact
-    * centi-units (same construction as Round8h's dailyBars, plus the
-    * event count as the bar volume). */
-  private def dailyBars(s: SparkSession, dir: String) = {
-    val e = Tables.events(s, dir)
-      .select(col("event_type"), col("event_id"), col("ts"),
-        (col("value").cast(DecimalType(18, 6)) * 100)
-          .cast(DecimalType(18, 0)).cast("long").as("vc"))
-      .withColumn("day", dayofmonth(col("ts")).cast("long"))
-    val wd = Window.partitionBy("event_type", "day")
-      .orderBy(col("ts").desc, col("event_id").desc)
-    e.withColumn("rd", row_number().over(wd))
-      .groupBy("event_type", "day")
-      .agg(max("vc").as("hi"), min("vc").as("lo"),
-        max(when(col("rd") === 1, col("vc"))).as("cl"),
-        count(lit(1)).as("vol"))
-  }
-
-  private val dailyBarsSql =
-    """bars AS (SELECT event_type, day,
-      |    CAST(max(vc) AS BIGINT) AS hi, CAST(min(vc) AS BIGINT) AS lo,
-      |    CAST(max(CASE WHEN rd = 1 THEN vc END) AS BIGINT) AS cl,
-      |    CAST(count(*) AS BIGINT) AS vol
-      |  FROM (SELECT event_type, CAST(day(ts) AS BIGINT) AS day,
-      |          CAST(CAST(value AS DECIMAL(18,6)) * 100 AS DECIMAL(18,0))
-      |            ::BIGINT AS vc,
-      |          row_number() OVER (PARTITION BY event_type, day(ts)
-      |            ORDER BY ts DESC, event_id DESC) AS rd
-      |        FROM events) b
-      |  GROUP BY 1, 2)""".stripMargin
-
   val queries: Map[String, QFn] = Map(
 
     // ---- Donchian channels (20-day) ----------------------------------------
@@ -65,7 +33,7 @@ object Round8kQueries extends graft.QueryFamily {
         .rowsBetween(-19, Window.currentRow)
       dailyBars(s, dir)
         .select(col("event_type"), col("day"),
-          max("hi").over(w).as("uc"), min("lo").over(w).as("lc"))
+          max("hc").over(w).as("uc"), min("lc").over(w).as("lc"))
         .select(col("event_type"), col("day"),
           (d(col("uc")) / 100.0).as("upper"),
           (d(col("lc")) / 100.0).as("lower"),
@@ -99,9 +67,9 @@ object Round8kQueries extends graft.QueryFamily {
       val w = Window.partitionBy("event_type").orderBy("day")
       val wc = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
       dailyBars(s, dir)
-        .withColumn("pc", lag("cl", 1).over(w))
+        .withColumn("pc", lag("cc", 1).over(w))
         .withColumn("sv", when(col("pc").isNull, lit(0L))
-          .otherwise(signum(d(col("cl") - col("pc"))).cast("long")
+          .otherwise(signum(d(col("cc") - col("pc"))).cast("long")
             * col("vol")))
         .select(col("event_type"), col("day"), col("vol"),
           sum("sv").over(wc).as("obv"))
@@ -118,7 +86,7 @@ object Round8kQueries extends graft.QueryFamily {
       val w = Window.partitionBy("event_type").orderBy("day")
       val wa = w.rowsBetween(-13, Window.currentRow)
       dailyBars(s, dir)
-        .withColumn("tp3", col("hi") + col("lo") + col("cl"))
+        .withColumn("tp3", col("hc") + col("lc") + col("cc"))
         .withColumn("dtp", col("tp3") - lag("tp3", 1).over(w))
         .withColumn("mf", (col("tp3") * col("vol")).cast(DecimalType(38, 0)))
         .withColumn("pos", sum(when(col("dtp") > 0, col("mf"))
@@ -140,9 +108,9 @@ object Round8kQueries extends graft.QueryFamily {
     "win_donchian" -> s"""
       |WITH $dailyBarsSql
       |SELECT event_type, day,
-      |  CAST(max(hi) OVER w AS DOUBLE) / 100.0 AS upper,
-      |  CAST(min(lo) OVER w AS DOUBLE) / 100.0 AS lower,
-      |  CAST(max(hi) OVER w + min(lo) OVER w AS DOUBLE) / 200.0 AS mid
+      |  CAST(max(hc) OVER w AS DOUBLE) / 100.0 AS upper,
+      |  CAST(min(lc) OVER w AS DOUBLE) / 100.0 AS lower,
+      |  CAST(max(hc) OVER w + min(lc) OVER w AS DOUBLE) / 200.0 AS mid
       |FROM bars
       |WINDOW w AS (PARTITION BY event_type ORDER BY day
       |  ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
@@ -165,8 +133,8 @@ object Round8kQueries extends graft.QueryFamily {
     "win_obv" -> s"""
       |WITH $dailyBarsSql,
       |sv AS (SELECT event_type, day, vol,
-      |    CASE WHEN lag(cl, 1) OVER w IS NULL THEN 0
-      |         ELSE CAST(sign(cl - lag(cl, 1) OVER w) AS BIGINT) * vol
+      |    CASE WHEN lag(cc, 1) OVER w IS NULL THEN 0
+      |         ELSE CAST(sign(cc - lag(cc, 1) OVER w) AS BIGINT) * vol
       |    END AS sv
       |  FROM bars WINDOW w AS (PARTITION BY event_type ORDER BY day))
       |SELECT event_type, day, vol,
@@ -177,7 +145,7 @@ object Round8kQueries extends graft.QueryFamily {
 
     "win_mfi" -> s"""
       |WITH $dailyBarsSql,
-      |tp AS (SELECT event_type, day, hi + lo + cl AS tp3, vol FROM bars),
+      |tp AS (SELECT event_type, day, hc + lc + cc AS tp3, vol FROM bars),
       |df AS (SELECT event_type, day, vol, tp3,
       |    tp3 - lag(tp3, 1) OVER (PARTITION BY event_type ORDER BY day)
       |      AS dtp

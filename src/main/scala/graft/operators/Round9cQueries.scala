@@ -1,12 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import graft.QueryUtils._
-import graft.sources.Tables
 
 /** Round-9 third wave: exact-integer technical indicators over the
   * per-event-type daily OHLC bars — Chande momentum, the force index,
@@ -27,36 +25,6 @@ object Round9cQueries extends graft.QueryFamily {
   private def signedHalfUp(num: String, den: String): Column = expr(
     s"CASE WHEN $num >= 0 THEN (2 * ($num) + ($den)) div (2 * ($den)) " +
       s"ELSE -((2 * (-($num)) + ($den)) div (2 * ($den))) END")
-
-  /** Per-event-type daily bars: high/low/close centi + volume. */
-  private[operators] def dailyBars(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(s, dir)
-      .select(col("event_type"), col("event_id"), col("ts"),
-        (col("value").cast(DecimalType(18, 6)) * 100)
-          .cast(DecimalType(18, 0)).cast("long").as("xc"))
-      .withColumn("day", dayofmonth(col("ts")).cast("long"))
-    val wd = Window.partitionBy("event_type", "day")
-      .orderBy(col("ts").desc, col("event_id").desc)
-    e.withColumn("rd", row_number().over(wd))
-      .groupBy("event_type", "day")
-      .agg(max("xc").as("hc"), min("xc").as("lc"),
-        max(when(col("rd") === 1, col("xc"))).as("cc"),
-        count(lit(1)).as("vol"))
-  }
-
-  private[operators] val dailyBarsSql =
-    """bars AS (SELECT event_type, day,
-      |    max(xc) AS hc, min(xc) AS lc,
-      |    max(CASE WHEN rd = 1 THEN xc END) AS cc,
-      |    CAST(count(*) AS BIGINT) AS vol
-      |  FROM (SELECT event_type, event_id,
-      |      CAST(day(ts) AS BIGINT) AS day,
-      |      CAST(CAST(value AS DECIMAL(18,6)) * 100
-      |        AS DECIMAL(18,0))::BIGINT AS xc,
-      |      row_number() OVER (PARTITION BY event_type, day(ts)
-      |        ORDER BY ts DESC, event_id DESC) AS rd
-      |    FROM events) x
-      |  GROUP BY 1, 2)""".stripMargin
 
   private val halfUpSql = "(2 * (%s) + (%s)) // (2 * (%s))"
 

@@ -26,13 +26,13 @@ object Round9hQueries extends graft.QueryFamily {
     dailyCenti(s, dir).withColumn("rn", row_number().over(w))
   }
 
+  /** DuckDB twin of [[daily]]: the `daily` centi CTE and `dr`, the same
+    * rows with the row index. */
   private val dailySql =
-    """daily AS (SELECT event_type, day, xc,
+    s"""$dailyCentiSql,
+      |dr AS (SELECT event_type, day, xc,
       |    row_number() OVER (PARTITION BY event_type ORDER BY day) AS rn
-      |  FROM (SELECT event_type, CAST(day(ts) AS BIGINT) AS day,
-      |      CAST(CAST(sum(CAST(value AS DECIMAL(18,6))) * 100
-      |        AS DECIMAL(18,0)) AS BIGINT) AS xc
-      |    FROM events GROUP BY 1, 2) x)""".stripMargin
+      |  FROM daily)""".stripMargin
 
   val queries: Map[String, QFn] = Map(
 
@@ -105,7 +105,7 @@ object Round9hQueries extends graft.QueryFamily {
     // support/resistance ladder, exact until the /100.0 displays.
     "win_pivot_points" -> ((s, dir) => {
       val w = Window.partitionBy("event_type").orderBy("day")
-      Round9cQueries.dailyBars(s, dir)
+      dailyBars(s, dir)
         .withColumn("ph", lag("hc", 1).over(w))
         .withColumn("pl", lag("lc", 1).over(w))
         .withColumn("pc", lag("cc", 1).over(w))
@@ -130,7 +130,7 @@ object Round9hQueries extends graft.QueryFamily {
       |    (2 * 2000000 * abs(xc - f) + (xc + f)) // (2 * (xc + f)) AS t6
       |  FROM (SELECT event_type, xc,
       |      lag(xc, 1) OVER (PARTITION BY event_type ORDER BY day) AS f
-      |    FROM daily) x
+      |    FROM dr) x
       |  WHERE f IS NOT NULL),
       |g AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_days,
       |    CAST(sum(t6) AS BIGINT) AS st
@@ -144,7 +144,7 @@ object Round9hQueries extends graft.QueryFamily {
       |e AS (SELECT event_type,
       |    abs(xc - lag(xc, 1) OVER w) AS e1,
       |    abs(xc - lag(xc, 7) OVER w) AS e7
-      |  FROM daily WINDOW w AS (PARTITION BY event_type ORDER BY day)),
+      |  FROM dr WINDOW w AS (PARTITION BY event_type ORDER BY day)),
       |g AS (SELECT event_type,
       |    CAST(sum(e1) AS BIGINT) AS s1, CAST(count(e1) AS BIGINT) AS n1,
       |    CAST(sum(e7) AS BIGINT) AS s7, CAST(count(e7) AS BIGINT) AS n7
@@ -161,7 +161,7 @@ object Round9hQueries extends graft.QueryFamily {
       |    sum(xc) OVER (PARTITION BY event_type ORDER BY day
       |      ROWS BETWEEN 3 PRECEDING AND 1 PRECEDING) AS s3,
       |    lag(xc, 1) OVER (PARTITION BY event_type ORDER BY day) AS p1
-      |  FROM daily),
+      |  FROM dr),
       |e AS (SELECT event_type,
       |    CAST(3 * xc - s3 AS DECIMAL(38,0)) AS ef,
       |    CAST(3 * (xc - p1) AS DECIMAL(38,0)) AS en
@@ -174,7 +174,7 @@ object Round9hQueries extends graft.QueryFamily {
       |FROM g ORDER BY event_type""".stripMargin,
 
     "win_pivot_points" -> s"""
-      |WITH ${Round9cQueries.dailyBarsSql},
+      |WITH $dailyBarsSql,
       |l AS (SELECT event_type, day,
       |    lag(hc, 1) OVER w AS ph, lag(lc, 1) OVER w AS pl,
       |    lag(cc, 1) OVER w AS pc

@@ -75,7 +75,7 @@ object Round9jQueries extends graft.QueryFamily {
     // an 8dp decimal before the exact order-free moment sums.
     "agg_log_return_vol" -> ((s, dir) => {
       val w = Window.partitionBy("event_type").orderBy("day")
-      Round9cQueries.dailyBars(s, dir)
+      dailyBars(s, dir)
         .withColumn("pc", lag("cc", 1).over(w))
         .where(col("pc").isNotNull)
         .withColumn("lr8",
@@ -203,7 +203,7 @@ object Round9jQueries extends graft.QueryFamily {
       |FROM c""".stripMargin,
 
     "agg_log_return_vol" -> s"""
-      |WITH ${Round9cQueries.dailyBarsSql},
+      |WITH $dailyBarsSql,
       |r AS (SELECT event_type,
       |    CAST(round(ln(CAST(cc AS DOUBLE) / CAST(pc AS DOUBLE)), 8)
       |      AS DECIMAL(18,8)) AS lr8

@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DecimalType
 
 import graft.QueryUtils._
 import graft.sources.Tables
@@ -102,7 +101,7 @@ object Round9lQueries extends graft.QueryFamily {
     "win_chandelier_exit" -> ((s, dir) => {
       val w = Window.partitionBy("event_type").orderBy("day")
       val w22 = w.rowsBetween(-21, Window.currentRow)
-      Round9cQueries.dailyBars(s, dir)
+      dailyBars(s, dir)
         .withColumn("pc", lag("cc", 1).over(w))
         .withColumn("tr", greatest(col("hc") - col("lc"),
           abs(col("hc") - col("pc")), abs(col("lc") - col("pc"))))
@@ -176,7 +175,7 @@ object Round9lQueries extends graft.QueryFamily {
       |FROM l ORDER BY nation""".stripMargin,
 
     "win_chandelier_exit" -> s"""
-      |WITH ${Round9cQueries.dailyBarsSql},
+      |WITH $dailyBarsSql,
       |t AS (SELECT event_type, day, hc, lc,
       |    greatest(hc - lc, abs(hc - lag(cc, 1) OVER w),
       |      abs(lc - lag(cc, 1) OVER w)) AS tr,

@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DecimalType
 
 import graft.QueryUtils._
 import graft.sources.Tables
@@ -58,7 +58,7 @@ object Round9mQueries extends graft.QueryFamily {
       val w = Window.partitionBy("event_type").orderBy("day")
       val w9 = w.rowsBetween(-8, Window.currentRow)
       val w17 = w.rowsBetween(-16, Window.currentRow)
-      Round9cQueries.dailyBars(s, dir)
+      dailyBars(s, dir)
         .withColumn("rn", row_number().over(w))
         .withColumn("tk2", max("hc").over(w9) + min("lc").over(w9))
         .withColumn("kj2", max("hc").over(w17) + min("lc").over(w17))
@@ -132,7 +132,7 @@ object Round9mQueries extends graft.QueryFamily {
       |FROM part ORDER BY p_partkey""".stripMargin,
 
     "win_ichimoku" -> s"""
-      |WITH ${Round9cQueries.dailyBarsSql},
+      |WITH $dailyBarsSql,
       |l AS (SELECT event_type, day, cc,
       |    row_number() OVER w AS rn,
       |    (2 * (max(hc) OVER w9 + min(lc) OVER w9) + 2) // 4 AS tenkan,
@@ -154,9 +154,8 @@ object Round9mQueries extends graft.QueryFamily {
       |  CAST(chikou AS DOUBLE) / 100.0 AS chikou
       |FROM m WHERE rn >= 25 ORDER BY event_type, day""".stripMargin,
 
-    "agg_srm_check" -> """
-      |WITH b AS (SELECT ('0x' || substr(md5(CAST(doc_id AS VARCHAR)),
-      |    1, 15))::BIGINT % 100 AS bucket
+    "agg_srm_check" -> s"""
+      |WITH b AS (SELECT ${hash60Sql("doc_id")} % 100 AS bucket
       |  FROM documents),
       |g AS (SELECT CAST(count(*) AS BIGINT) AS n,
       |    CAST(count(*) FILTER (bucket < 90) AS BIGINT) AS n_train,

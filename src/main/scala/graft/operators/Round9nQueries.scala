@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DecimalType
 
 import graft.QueryUtils._
 import graft.sources.Tables
@@ -138,7 +138,7 @@ object Round9nQueries extends graft.QueryFamily {
     "win_elder_ray" -> ((s, dir) => {
       val w = Window.partitionBy("event_type").orderBy("day")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      Round9cQueries.dailyBars(s, dir)
+      dailyBars(s, dir)
         .withColumn("c6", (col("cc").cast(DecimalType(38, 0)) * 10000))
         .join(broadcast(EwmaWeights.df(s)), "day")
         .withColumn("nu", sum(col("c6") * col("w")).over(w))
@@ -222,7 +222,7 @@ object Round9nQueries extends graft.QueryFamily {
       |FROM orders ORDER BY o_orderkey""".stripMargin,
 
     "win_elder_ray" -> s"""
-      |WITH ${Round9cQueries.dailyBarsSql},
+      |WITH $dailyBarsSql,
       |wt(day, w) AS (VALUES
       |    ${EwmaWeights.valuesSql}),
       |j AS (SELECT b.event_type, b.day, b.hc, b.lc,

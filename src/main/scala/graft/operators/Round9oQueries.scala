@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DecimalType
 
 import graft.QueryUtils._
 import graft.sources.Tables
@@ -44,14 +44,14 @@ object Round9oQueries extends graft.QueryFamily {
   /** Per-type quantized daily log-return ledger. */
   private def lr8(s: SparkSession, dir: String) = {
     val w = Window.partitionBy("event_type").orderBy("day")
-    Round9cQueries.dailyBars(s, dir)
+    dailyBars(s, dir)
       .withColumn("pc", lag("cc", 1).over(w))
       .where(col("pc").isNotNull)
       .withColumn("lr8",
         round(log(d(col("cc")) / d(col("pc"))), 8).cast(DecimalType(18, 8)))
   }
 
-  private val lr8Sql = s"""${Round9cQueries.dailyBarsSql},
+  private val lr8Sql = s"""$dailyBarsSql,
     |r AS (SELECT event_type,
     |    CAST(round(ln(CAST(cc AS DOUBLE) / CAST(pc AS DOUBLE)), 8)
     |      AS DECIMAL(18,8)) AS lr8

@@ -9,7 +9,8 @@ import graft.sources.Tables
 /** Scale-path training-data-pipeline operators, beyond the reference's
   * own surface: sketch-based dedup (MinHash-LSH, SimHash), heuristic
   * language ID, quality scoring, tokenizer counting, document
-  * fingerprinting, embedding near-dup, and IVF-style partitioned ANN.
+  * fingerprinting and embedding near-dup (the IVF and LSH ANN probes
+  * live in [[AnnQueries]]).
   *
   * Every operator here is fully deterministic and cross-engine
   * oracle-checkable: hash seeds are md5-derived 60-bit integers (both
@@ -19,18 +20,11 @@ import graft.sources.Tables
   * 100 TB notes: MinHash-LSH is the linear-ish-cost near-dup path (the
   * exact prefix-filter join in LlmQueries is the verification oracle);
   * banding keys shuffle-partition naturally; SimHash is one map + two
-  * keyed aggs; IVF cells turn ANN from O(n²) into per-cell O(n·k) and
-  * map directly onto partition pruning when cells are storage keys.
+  * keyed aggs.
   */
 object ScaleQueries extends graft.QueryFamily {
 
   private val P = 2147483647L // 2^31 - 1
-
-  /** 60-bit integer hash of a string via md5 hex — identical in DuckDB
-    * as ('0x' || substr(md5(x),1,15))::BIGINT.
-    */
-  private def h60(c: String): String =
-    s"CAST(conv(substring(md5($c), 1, 15), 16, 10) AS BIGINT)"
 
   import graft.functions.TextShingles.{duckShingleCte, mkShingles, verifyJaccard06}
 
@@ -48,8 +42,9 @@ object ScaleQueries extends graft.QueryFamily {
   }
 
   /** 8-bit random-hyperplane LSH bucket of an embedding (sign pattern of
-    * the 8 deterministic hyperplane dots) — shared by `llm_ann_lsh` and
-    * `llm_ann_multiprobe`.
+    * the 8 deterministic hyperplane dots) — the `llm_ann_lsh` index of
+    * [[AnnQueries]], kept beside the hyperplanes it shares with
+    * `llm_dedup_embcos`.
     */
   val lshBucket: org.apache.spark.sql.expressions.UserDefinedFunction =
     udf { emb: Seq[Float] =>
@@ -116,7 +111,7 @@ object ScaleQueries extends graft.QueryFamily {
       .withColumn("n", size(col("sh")))
     val th = sh.select(col("doc_id"), explode_outer(col("sh")).as("s1"))
       .where(col("s1").isNotNull)
-      .withColumn("h", expr(s"${h60("s1")} % $P"))
+      .withColumn("h", hash60(col("s1")) % P)
     val minhashAggs = (0 until 16).map { i =>
       min((col("h") * lit(2L * i + 1) + lit(i * 12345L + 1)) % lit(P)).as(s"m$i")
     }
@@ -152,7 +147,7 @@ object ScaleQueries extends graft.QueryFamily {
         .select(col("doc_id"), col("text"))
         .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
         .select(col("doc_id"), explode(array_distinct(split(col("text"), " "))).as("t"))
-        .withColumn("h", expr(h60("t")))
+        .withColumn("h", hash60(col("t")))
       val bitSums = (0 until 60).map { j =>
         sum(expr(s"CASE WHEN (h div ${1L << j}L) % 2 = 1 THEN 1 ELSE -1 END")).as(s"s$j")
       }
@@ -178,7 +173,7 @@ object ScaleQueries extends graft.QueryFamily {
         .select(col("doc_id"), mkShingles(col("text")).as("sh"))
         .select(col("doc_id"), explode_outer(col("sh")).as("s1"))
         .where(col("s1").isNotNull)
-        .withColumn("h", expr(h60("s1")))
+        .withColumn("h", hash60(col("s1")))
       val bitSums = (0 until 60).map { j =>
         sum(expr(s"CASE WHEN (h div ${1L << j}L) % 2 = 1 THEN 1 ELSE -1 END")).as(s"s$j")
       }
@@ -267,7 +262,7 @@ object ScaleQueries extends graft.QueryFamily {
     "llm_fingerprint" -> ((s, dir) => {
       Tables.documents(s, dir)
         .select(col("doc_id"), posexplode(split(col("text"), " ")))
-        .withColumn("h", expr(s"${h60("col")} % $P"))
+        .withColumn("h", hash60(col("col")) % P)
         .groupBy("doc_id")
         .agg(sum((col("pos") + 1) * col("h")).as("fingerprint"),
           count(lit(1)).as("n_tokens"))
@@ -351,46 +346,6 @@ object ScaleQueries extends graft.QueryFamily {
       graft.tools.Materialize.eager("embcos.pairs", pairs).orderBy("a_id", "b_id")
     }),
 
-    // ---- IVF ANN: seeded k-means codebook (64 cells), probe 1 cell -----
-    // Round-2's 4-cell sign quantizer scanned ~25% of the corpus per
-    // probe; the AnnCodebook k-means index (md5-seeded init, 2 fixed
-    // Lloyd steps, integer centroid sums replayed exactly by the
-    // oracle) brings the mean probe to ~1/64 of the corpus. The probe
-    // itself is unchanged: broadcast the query row, equi-join on its
-    // cell, TakeOrdered top-10.
-    "llm_ann_ivf" -> ((s, dir) => {
-      val (e, _) = graft.functions.AnnCodebook.indexed(s, dir)
-      val q = e.where(col("vec_id") === 0)
-        .select(col("embedding").as("qv"), col("nrm").as("qn"),
-          col("cell").as("qcell"))
-      e.where(col("vec_id") =!= 0)
-        .join(broadcast(q), col("cell") === col("qcell"))
-        .select(col("vec_id"), col("cell"),
-          (vecDot(col("embedding"), col("qv"))
-            / (col("nrm") * col("qn"))).as("cos_sim"))
-        .orderBy(col("cos_sim").desc, col("vec_id").asc)
-        .limit(10)
-    }),
-
-    // ---- LSH-bucketed ANN: 8 random-hyperplane sign bits ---------------
-    // hyperplanes are md5-derived (identical integer arithmetic in the
-    // oracle), signature = sign pattern of the 8 dots, probe = the
-    // query's bucket only. At 100 TB the bucket id becomes a storage
-    // partition key; multi-probe = flip low-margin bits.
-    "llm_ann_lsh" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-        .select(col("vec_id"), col("embedding"), lshBucket(col("embedding")).as("bucket"))
-      val q = e.where(col("vec_id") === 0)
-        .select(col("embedding").as("qv"), col("bucket").as("qbucket"))
-      e.where(col("vec_id") =!= 0)
-        .join(broadcast(q), col("bucket") === col("qbucket"))
-        .select(col("vec_id"), col("bucket"),
-          (vecDot(col("embedding"), col("qv"))
-            / (vecNorm(col("embedding")) * vecNorm(col("qv")))).as("cos_sim"))
-        .orderBy(col("cos_sim").desc, col("vec_id").asc)
-        .limit(10)
-    }),
-
     // ---- opaque-bytes column plumbing (text → utf8 bytes) --------------
     "llm_multimodal_bytes" -> ((s, dir) => {
       Tables.documents(s, dir)
@@ -463,20 +418,6 @@ object ScaleQueries extends graft.QueryFamily {
        |FROM sc ORDER BY doc_id""".stripMargin
   }
 
-  private val annIvfOracle =
-    s"WITH ${graft.functions.AnnCodebook.oracleCtes}," +
-    """
-      |ke AS (SELECT e.vec_id, list_transform(e.embedding, x -> CAST(x AS DOUBLE)) AS ev,
-      |    kcells.cell AS cell
-      |  FROM embeddings e JOIN kcells ON e.vec_id = kcells.vec_id),
-      |q AS (SELECT ev qv, cell qcell FROM ke WHERE vec_id = 0)
-      |SELECT ke.vec_id, ke.cell,
-      |  list_aggregate(list_transform(list_zip(ke.ev, q.qv), p -> p[1] * p[2]), 'sum') /
-      |  (sqrt(list_aggregate(list_transform(ke.ev, x -> x * x), 'sum')) *
-      |   sqrt(list_aggregate(list_transform(q.qv, x -> x * x), 'sum'))) AS cos_sim
-      |FROM ke, q WHERE ke.vec_id <> 0 AND ke.cell = q.qcell
-      |ORDER BY cos_sim DESC, vec_id ASC LIMIT 10""".stripMargin
-
   private val simhashPairsOracle =
     shingleCte +
       """,
@@ -541,31 +482,6 @@ object ScaleQueries extends graft.QueryFamily {
         |WHERE list_aggregate(list_transform(list_zip(a.ev, b.ev), z -> z[1] * z[2]), 'sum')
         |    / (a.nrm * b.nrm) >= 0.4
         |ORDER BY a_id, b_id""".stripMargin,
-
-    "llm_ann_ivf" -> annIvfOracle,
-
-    "llm_ann_lsh" ->
-      """WITH hp AS (
-        |  SELECT i, list_transform(generate_series(1, 64),
-        |    j -> ((('0x' || substr(md5('hp-' || i || '-' || j), 1, 15))::BIGINT % 2001) - 1000) / 1000.0) AS v
-        |  FROM (SELECT unnest(generate_series(0, 7)) i)),
-        |e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) ev FROM embeddings),
-        |dots AS (
-        |  SELECT e.vec_id, hp.i,
-        |    list_aggregate(list_transform(list_zip(e.ev, hp.v), p -> p[1] * p[2]), 'sum') AS dot
-        |  FROM e CROSS JOIN hp),
-        |sig AS (
-        |  SELECT vec_id,
-        |    CAST(SUM(CASE WHEN dot > 0 THEN CAST(pow(2, i) AS BIGINT) ELSE 0 END) AS INT) AS bucket
-        |  FROM dots GROUP BY vec_id),
-        |q AS (SELECT ev AS qv, bucket AS qbucket FROM e JOIN sig USING (vec_id) WHERE vec_id = 0)
-        |SELECT e.vec_id, sig.bucket,
-        |  list_aggregate(list_transform(list_zip(e.ev, q.qv), p -> p[1] * p[2]), 'sum') /
-        |  (sqrt(list_aggregate(list_transform(e.ev, x -> x * x), 'sum')) *
-        |   sqrt(list_aggregate(list_transform(q.qv, x -> x * x), 'sum'))) AS cos_sim
-        |FROM e JOIN sig USING (vec_id), q
-        |WHERE e.vec_id <> 0 AND sig.bucket = q.qbucket
-        |ORDER BY cos_sim DESC, vec_id ASC LIMIT 10""".stripMargin,
 
     "llm_multimodal_bytes" ->
       """SELECT doc_id, CAST(strlen(text) AS BIGINT) AS n_bytes, md5(text) AS content_md5

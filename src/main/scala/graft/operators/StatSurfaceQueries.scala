@@ -128,8 +128,8 @@ object StatSurfaceQueries extends graft.QueryFamily {
         |    row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rk
         |  FROM g2),
         |tagged AS (SELECT lang, n_tok,
-        |    CASE WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 100 < 90 THEN 'train'
-        |         WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 100 < 95 THEN 'valid'
+        |    CASE WHEN ${hash60Sql("doc_id")} % 100 < 90 THEN 'train'
+        |         WHEN ${hash60Sql("doc_id")} % 100 < 95 THEN 'valid'
         |         ELSE 'test' END AS split
         |  FROM dedup WHERE rk = 1)
         |SELECT split, lang, CAST(count(*) AS BIGINT) AS n_docs,

@@ -1,8 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.QueryUtils.{QFn, decSum4, ts}
 import graft.sources.Tables

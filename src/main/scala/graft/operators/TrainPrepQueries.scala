@@ -1,16 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.QueryUtils.{QFn, duckToks, hash60, nTok, toks}
+import graft.QueryUtils.{QFn, duckToks, hash60, hash60Sql, nTok, toks}
 import graft.sources.Tables
 
 /** Training-run preparation operators (round 2, batch 4): sequence
-  * packing, shard assignment, train/valid/test splitting, embedding
-  * quantization, and lexical-entropy quality scoring — the last mile
-  * between a curated corpus and a training job.
+  * packing, shard assignment, train/valid/test splitting and
+  * lexical-entropy quality scoring — the last mile between a curated
+  * corpus and a training job (the batch's embedding quantization audit
+  * lives in [[AnnQueries]]).
   *
   * Scale notes (100 TB):
   *  - `llm_pack_sequences` packs per LANGUAGE, not globally — the
@@ -23,10 +23,6 @@ import graft.sources.Tables
   *    assignments followed by catalog-bounded aggregations (16 shards /
   *    3×|langs| strata) — the canonical "write N balanced outputs"
   *    planning step, embarrassingly parallel at any size.
-  *  - `llm_emb_quantize` is purely per-row array arithmetic (no shuffle
-  *    at all before the final ORDER BY); the int8 scheme is the
-  *    standard symmetric max-abs scalar quantization used to shrink
-  *    ANN indexes 4×.
   *  - `llm_doc_entropy` shuffles on (doc_id, token) like tf-idf —
   *    corpus-linear with map-side partial aggregation; per-term
   *    contributions are rounded then summed as decimals so the result
@@ -104,37 +100,6 @@ object TrainPrepQueries extends graft.QueryFamily {
         .orderBy("split", "lang")
     }),
 
-    // ---- int8 scalar quantization audit ---------------------------------
-    // Symmetric max-abs int8 quantization of each embedding
-    // (q_i = round(x_i / scale), scale = max|x| / 127) with the
-    // per-vector worst-case reconstruction error — the audit run before
-    // swapping an ANN index to int8 storage. Every step is elementwise
-    // IEEE double arithmetic ((double)float casts are exact; round is
-    // floor(x + 0.5) on both engines), and max over elements is
-    // order-free, so the unrounded values already agree bit-for-bit
-    // cross-engine; the r6 rounding is belt-and-braces.
-    "llm_emb_quantize" -> ((s, dir) => {
-      Tables.embeddings(s, dir)
-        .withColumn("maxabs",
-          aggregate(col("embedding"), lit(0.0),
-            (acc, x) => greatest(acc, abs(x.cast("double")))))
-        .where(col("maxabs") > 0)
-        // NB the raw scale column must NOT be named "scale": the output
-        // alias round(scale_raw, 6) AS scale would capture the lambda's
-        // col("scale") via lateral-column-alias resolution, silently
-        // quantizing against the ROUNDED scale (measured: max_err
-        // 0.001157 vs the oracle's 0.001149)
-        .withColumn("scale_raw", col("maxabs") / 127)
-        .select(col("vec_id"), size(col("embedding")).cast("long").as("n_dim"),
-          round(col("scale_raw"), 6).as("scale"),
-          round(aggregate(col("embedding"), lit(0.0),
-            (acc, x) => greatest(acc,
-              abs(x.cast("double") -
-                floor(x.cast("double") / col("scale_raw") + 0.5) * col("scale_raw")))), 6)
-            .as("max_err"))
-        .orderBy("vec_id")
-    }),
-
     // ---- lexical entropy / type-token ratio quality score ---------------
     // Token-unigram Shannon entropy and type-token ratio per document —
     // the cheap repetitive-junk detector (boilerplate and keyword spam
@@ -177,7 +142,7 @@ object TrainPrepQueries extends graft.QueryFamily {
 
     "llm_shard_assign" ->
       s"""WITH per_shard AS (SELECT
-        |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 16 AS shard,
+        |    ${hash60Sql("doc_id")} % 16 AS shard,
         |    CAST(count(*) AS BIGINT) AS n_docs,
         |    CAST(sum(len($duckToks)) AS BIGINT) AS n_tokens,
         |    CAST(sum(n_chars) AS BIGINT) AS n_chars
@@ -190,26 +155,13 @@ object TrainPrepQueries extends graft.QueryFamily {
     "llm_split_train" ->
       s"""WITH tagged AS (SELECT lang,
         |    CAST(len($duckToks) AS BIGINT) AS n_tok,
-        |    CASE WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 100 < 90 THEN 'train'
-        |         WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 100 < 95 THEN 'valid'
+        |    CASE WHEN ${hash60Sql("doc_id")} % 100 < 90 THEN 'train'
+        |         WHEN ${hash60Sql("doc_id")} % 100 < 95 THEN 'valid'
         |         ELSE 'test' END AS split
         |  FROM documents)
         |SELECT split, lang, CAST(count(*) AS BIGINT) AS n_docs,
         |  CAST(sum(n_tok) AS BIGINT) AS n_tokens
         |FROM tagged GROUP BY split, lang ORDER BY split, lang""".stripMargin,
-
-    "llm_emb_quantize" ->
-      """WITH m AS (SELECT vec_id, embedding,
-        |    CAST(len(embedding) AS BIGINT) AS n_dim,
-        |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS maxabs
-        |  FROM embeddings),
-        |sc AS (SELECT vec_id, embedding, n_dim, maxabs / 127 AS scale
-        |  FROM m WHERE maxabs > 0)
-        |SELECT vec_id, n_dim, round(scale, 6) AS scale,
-        |  round(list_max(list_transform(embedding,
-        |    x -> abs(CAST(x AS DOUBLE)
-        |             - floor(CAST(x AS DOUBLE) / scale + 0.5) * scale))), 6) AS max_err
-        |FROM sc ORDER BY vec_id""".stripMargin,
 
     "llm_doc_entropy" ->
       s"""WITH toks AS (SELECT doc_id,

@@ -1,20 +1,16 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.QueryUtils._
 import graft.sources.Tables
 
-/** §2.N — vector/typed-surface batch: embedding-norm audit, json_tuple
-  * multi-extract generator, pairwise correlation matrix, and map
-  * higher-order functions.
+/** §2.N — vector/typed-surface batch: json_tuple multi-extract
+  * generator, pairwise correlation matrix, and map higher-order
+  * functions (the batch's embedding-norm audit lives in
+  * [[AnnQueries]]).
   *
   * Determinism notes (§7.2 conventions):
-  *  - embedding norms are a LEFT-FOLD double accumulation
-  *    (`aggregate`, same order both engines) finished by sqrt
-  *    (correctly rounded) — deterministic unrounded; means go through
-  *    the rounded-decimal-sum idiom;
   *  - corr is inherently order-dependent → r4 (the agg_stats
   *    precedent), emitted as stacked rows so the matrix is one
   *    aggregate pass;
@@ -26,25 +22,6 @@ import graft.sources.Tables
 object VectorAuditQueries extends graft.QueryFamily {
 
   val queries: Map[String, QFn] = Map(
-
-    // ---- embedding norm audit -------------------------------------------
-    // Corpus-level health of the vector column: zero/near-zero vector
-    // counts (an ANN index poison), mean/min/max norms. One map pass +
-    // one aggregate; the norm fold is the same left-to-right double
-    // accumulation DoubleVecDot uses.
-    "llm_emb_norm_audit" -> ((s, dir) => {
-      Tables.embeddings(s, dir)
-        .select(col("vec_id"), sqrt(aggregate(col("embedding"), lit(0.0),
-          (acc, x) => acc + x.cast(DoubleType) * x.cast(DoubleType)))
-          .as("nrm"))
-        .agg(count(lit(1)).as("n_vecs"),
-          count_if(col("nrm") === 0.0).as("n_zero"),
-          count_if(col("nrm") < 0.01).as("n_near_zero"),
-          (sum(round(col("nrm"), 8).cast(DecimalType(18, 8)))
-            .cast(DoubleType) / count(lit(1))).as("mean_norm"),
-          round(min("nrm"), 6).as("min_norm"),
-          round(max("nrm"), 6).as("max_norm"))
-    }),
 
     // ---- json_tuple multi-extract generator -----------------------------
     // One-pass multi-field JSON extraction as a GENERATOR (vs
@@ -110,20 +87,6 @@ object VectorAuditQueries extends graft.QueryFamily {
   )
 
   val oracles: Map[String, String] = Map(
-
-    "llm_emb_norm_audit" ->
-      """WITH n AS (SELECT vec_id,
-        |    sqrt(list_aggregate(list_transform(embedding,
-        |      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')) AS nrm
-        |  FROM embeddings)
-        |SELECT CAST(count(*) AS BIGINT) AS n_vecs,
-        |  CAST(count(*) FILTER (nrm = 0.0) AS BIGINT) AS n_zero,
-        |  CAST(count(*) FILTER (nrm < 0.01) AS BIGINT) AS n_near_zero,
-        |  CAST(sum(CAST(round(nrm, 8) AS DECIMAL(18,8))) AS DOUBLE)
-        |    / count(*) AS mean_norm,
-        |  round(min(nrm), 6) AS min_norm,
-        |  round(max(nrm), 6) AS max_norm
-        |FROM n""".stripMargin,
 
     "gen_json_tuple" ->
       """SELECT event_id,

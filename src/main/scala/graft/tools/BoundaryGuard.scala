@@ -3,9 +3,8 @@ package graft.tools
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Expression, Literal, NamedExpression, Round, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Expression, Literal, Round, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Round-boundary hazard detection (VERDICT r8 item 2).

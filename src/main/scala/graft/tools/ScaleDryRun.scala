@@ -362,7 +362,7 @@ object ScaleDryRun {
       val e0 = Seq.range(0, k).map(i => emb
         .withColumn("vec_id", col("vec_id") * k + i))
         .reduce(_ unionAll _)
-      graft.operators.Round9eQueries.truncOverlapOf(e0).count()
+      graft.operators.AnnQueries.truncOverlapOf(e0).count()
     }
     // bipartite HITS: disjoint customer/supplier id spaces per replica
     // keep per-node degrees constant — each of the 4 half-steps is one

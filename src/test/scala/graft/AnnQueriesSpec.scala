@@ -3,11 +3,11 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-9 fifth-wave anchors: the quantized rankings are replayed in
-  * plain Scala (same left-to-right double folds as FloatVecDot) over
+/** Vector-search family anchors: the quantized rankings are replayed
+  * in plain Scala (same left-to-right double folds as FloatVecDot) over
   * the collected 500-vector corpus at sf0.001.
   */
-class Round9eSpec extends AnyFunSuite {
+class AnnQueriesSpec extends AnyFunSuite {
   import TestSpark._
 
   private lazy val vecs: Map[Long, Array[Float]] =

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 
 /** Semantic anchors for the cohort/signal batch — invariants that must
   * hold on any corpus, sf0.001.

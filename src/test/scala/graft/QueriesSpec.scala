@@ -69,20 +69,39 @@ class QueriesSpec extends AnyFunSuite {
 
   test("shared SQL idioms are spelled only in QueryUtils") {
     // a drifted copy of a twin idiom would desynchronize families while
-    // each still matches its own oracle (the hazard hash60 names)
+    // each still matches its own oracle (the hazard hash60 names); each
+    // idiom is spelled only in its home file
     import scala.jdk.CollectionConverters._
-    val idioms = Seq(QueryUtils.duckToks,
-      "daily AS (SELECT event_type, CAST(day(ts)")
+    val idioms = Seq(
+      QueryUtils.duckToks -> "QueryUtils.scala",
+      "daily AS (SELECT event_type, CAST(day(ts)" -> "QueryUtils.scala",
+      "substr(md5(CAST(" -> "QueryUtils.scala",
+      "def dailyBars" -> "QueryUtils.scala",
+      // the eval slice: its oracle sample CTE and its Spark a-side
+      "WHERE rk <= 256)" -> "AnnCodebook.scala",
+      "hashSample(e, 256)" -> "AnnCodebook.scala")
     val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
-      .iterator().asScala.filter(_.toString.endsWith(".scala"))
-      .filterNot(_.getFileName.toString == "QueryUtils.scala").toSeq
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
     assert(files.size > 100, s"source walk found only ${files.size} files")
     val hits = for {
       f <- files
       text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-      idiom <- idioms if text.contains(idiom)
+      (idiom, home) <- idioms
+      if f.getFileName.toString != home && text.contains(idiom)
     } yield s"$f: $idiom"
-    assert(hits.isEmpty, s"copies of a QueryUtils idiom: ${hits.mkString("; ")}")
+    assert(hits.isEmpty, s"copies of a shared idiom: ${hits.mkString("; ")}")
+  }
+
+  test("every vector-search query belongs to AnnQueries") {
+    val prefixes = Seq("llm_ann_", "llm_knn_", "llm_emb_", "llm_simsearch_topk")
+    def isAnn(name: String) = prefixes.exists(name.startsWith)
+    assert(graft.operators.AnnQueries.queries.keySet ==
+      SparkEntry.queries.keySet.filter(isAnn))
+    assert(graft.operators.AnnQueries.queries.size == 22)
+    val strays = SparkEntry.families
+      .filterNot(_ eq graft.operators.AnnQueries)
+      .flatMap(f => f.queries.keys.filter(isAnn).map(q => s"$q (${f.familyName})"))
+    assert(strays.isEmpty, s"vector-search queries outside AnnQueries: ${strays.mkString(", ")}")
   }
 
   test("SURVEY §2 and OPERATORS.md inventory counts match the shipped surface") {

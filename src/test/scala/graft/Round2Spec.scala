@@ -84,8 +84,8 @@ class Round2Spec extends AnyFunSuite {
   }
 
   test("llm_ann_multiprobe probes a superset of the single-probe bucket") {
-    val multi = Round2Queries.queries("llm_ann_multiprobe")(spark, sf0001)
-    val single = graft.operators.ScaleQueries.queries("llm_ann_lsh")(spark, sf0001)
+    val multi = graft.operators.AnnQueries.queries("llm_ann_multiprobe")(spark, sf0001)
+    val single = graft.operators.AnnQueries.queries("llm_ann_lsh")(spark, sf0001)
     // candidate set is a strict superset, so the top-k list is at least
     // as long and its k-th score at least as good
     assert(multi.count() >= single.count())

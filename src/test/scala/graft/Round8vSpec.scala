@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestRounding.r
 
 /** Round-8 twenty-second-wave anchors: the nested-JSON roundtrip
   * against the direct aggregate, a driver Luhn replay, contribution
